@@ -774,11 +774,10 @@ def _q_point_in_segment(spark, sf):
     # by aggregating over `final`, which re-runs the paint + stitch
     # mapInPandas kernels a second time just to read max(tcol)
     from pyshepseg_spark.operators.tiling import tile_grid
-    grids = spark.createDataFrame(pd.DataFrame([
-        {"image_id": r.image_id,
-         "ntc": tile_grid(r.w, r.h, cfg.tile_size, cfg.overlap)[1],
-         "ntr": tile_grid(r.w, r.h, cfg.tile_size, cfg.overlap)[2]}
-        for r in pdf.itertuples()]))
+    grids = spark.createDataFrame(pd.DataFrame(
+        [(r.image_id, *tile_grid(r.w, r.h, cfg.tile_size,
+                                 cfg.overlap)[1:])
+         for r in pdf.itertuples()], columns=["image_id", "ntc", "ntr"]))
     return point_in_segment(spark.createDataFrame(pts), final,
                             cfg.tile_size, cfg.overlap, grids=grids)
 

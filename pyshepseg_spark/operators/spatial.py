@@ -52,6 +52,15 @@ def tile_for_point(xcol, ycol, tile_size, overlap, ntc, ntr):
     return tc.cast("int"), tr.cast("int")
 
 
+def salt_count(npoints, npixels, cap: int):
+    """Salts for one tile: min(cap, max(1, ceil(points / pixels))).
+
+    A heuristic: a tile spreads only once it holds more probes than
+    raster pixels; below that, one task probes its single copy."""
+    return F.least(F.lit(cap), F.greatest(
+        F.lit(1), F.ceil(npoints / npixels))).cast("int")
+
+
 def point_in_segment(points, final_tiles, tile_size, overlap,
                      salt: int = 16, grids=None):
     """Join each point (image_id, x, y, ...) to the segment covering
@@ -59,22 +68,33 @@ def point_in_segment(points, final_tiles, tile_size, overlap,
     trow, salt) -> vectorized raster probe.
 
     Skew design: a per-tile group would serialize every probe that
-    lands on a hot tile into ONE task. Instead points carry a
-    content-derived salt and each tile raster is replicated across
-    the ``salt`` subkeys, so one tile's probes run in up to ``salt``
-    parallel tasks. Cogrouping (not joining) keeps the raster out of
-    the per-point rows: each task receives the tile bytes ONCE plus
-    its point batch — the shuffle is |points| + salt * |tiles|,
-    never |points| x |raster|.
+    lands on a hot tile into ONE task. Instead tile t gets
+    ``salt_count(points(t), (tile_size - overlap) ** 2, salt)`` salts
+    (the pixels of an interior tile's trimmed core), its points are
+    salted by ``pmod(xxhash64(point_id), nsalt(t))`` and its raster
+    is replicated across those subkeys, so a hot tile's probes run in
+    up to ``salt`` parallel tasks while a tile with fewer probes than
+    pixels ships its raster once. Cogrouping (not joining) keeps the
+    raster out of the per-point rows: each task receives the tile
+    bytes ONCE plus its point batch — the shuffle is |points| +
+    sum(nsalt) * |tile|, never |points| x |raster|. Tiles without
+    points are not shipped at all.
+
+    ``points`` is read more than once (per-tile counts, then the
+    salted rows), so it must be deterministic: a point salted past
+    its tile's raster copies would silently get no answer. Pass a
+    materialized frame when its plan is costly.
 
     ``grids``: optional (image_id, ntc, ntr) frame with the tile-grid
-    dimensions per image. When the caller knows them in closed form
-    (tiling.tile_grid arithmetic over each image's w/h — the same
-    recurrence that produced final_tiles), passing them avoids the
-    default derivation below, which aggregates over final_tiles and
-    therefore re-runs its full producing plan (paint + stitch-mapping
-    mapInPandas kernels — column pruning cannot reach inside a Python
-    kernel) once more per consumer."""
+    dimensions per image. It must come from the same ``tile_size``,
+    ``overlap`` and image set as ``final_tiles``. When the caller
+    knows them in closed form (tiling.tile_grid arithmetic over each
+    image's w/h — the same recurrence that produced final_tiles),
+    passing them avoids the default derivation below, which
+    aggregates over final_tiles and therefore re-runs its full
+    producing plan (paint + stitch-mapping mapInPandas kernels —
+    column pruning cannot reach inside a Python kernel) once more per
+    consumer."""
     if grids is None:
         grids = final_tiles.groupBy("image_id").agg(
             (F.max("tcol") + 1).alias("ntc"),
@@ -86,15 +106,21 @@ def point_in_segment(points, final_tiles, tile_size, overlap,
     tc, tr = tile_for_point("x", "y", tile_size, overlap,
                             F.col("ntc"), F.col("ntr"))
     p = (p.withColumn("tcol", tc).withColumn("trow", tr)
+         .select("image_id", "tcol", "trow", "point_id", "x", "y"))
+    tkey = ["image_id", "tcol", "trow"]
+    nsalt = p.groupBy(*tkey).agg(salt_count(
+        F.count("*"), F.lit((tile_size - overlap) ** 2), salt)
+        .alias("nsalt"))
+    p = (p.join(nsalt, tkey)
          .withColumn("salt", F.pmod(F.xxhash64("point_id"),
-                                    F.lit(salt)).cast("int"))
-         .select("image_id", "tcol", "trow", "salt", "point_id",
-                 "x", "y"))
-    t = (final_tiles.select("image_id", "tcol", "trow", "xout",
-                            "yout", "out_xsize", "out_ysize",
-                            "segdata")
+                                    F.col("nsalt")).cast("int"))
+         .drop("nsalt"))
+    t = (final_tiles.select(*tkey, "xout", "yout", "out_xsize",
+                            "out_ysize", "segdata")
+         .join(nsalt, tkey)
          .withColumn("salt", F.explode(F.sequence(
-             F.lit(0).cast("int"), F.lit(salt - 1).cast("int")))))
+             F.lit(0).cast("int"), F.col("nsalt") - 1)))
+         .drop("nsalt"))
 
     out_schema = ("image_id string, point_id long, x double, "
                   "y double, seg_id long")

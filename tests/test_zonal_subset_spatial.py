@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from pyshepseg_spark.operators.segment import assemble_image
 from pyshepseg_spark.operators.spatial import (knn_segments,
                                                point_in_segment,
+                                               salt_count,
                                                segment_centroids)
 from pyshepseg_spark.operators.spatialstats import (apply_segment_udf,
                                                     edge_pixels_udf,
@@ -142,11 +143,10 @@ def test_point_in_segment_grids_param(spark, images_fixture,
     pts = pd.concat([caption_points(r.image_id, r.caption, r.w, r.h)
                      for r in pdf.itertuples()], ignore_index=True)
     points = spark.createDataFrame(pts)
-    grids = spark.createDataFrame(pd.DataFrame([
-        {"image_id": r.image_id,
-         "ntc": tile_grid(r.w, r.h, cfg.tile_size, cfg.overlap)[1],
-         "ntr": tile_grid(r.w, r.h, cfg.tile_size, cfg.overlap)[2]}
-        for r in pdf.itertuples()]))
+    grids = spark.createDataFrame(pd.DataFrame(
+        [(r.image_id, *tile_grid(r.w, r.h, cfg.tile_size,
+                                 cfg.overlap)[1:])
+         for r in pdf.itertuples()], columns=["image_id", "ntc", "ntr"]))
     key = ["image_id", "point_id"]
     default = point_in_segment(points, final_tiles, cfg.tile_size,
                                cfg.overlap).toPandas() \
@@ -155,6 +155,48 @@ def test_point_in_segment_grids_param(spark, images_fixture,
                               cfg.overlap, grids=grids).toPandas() \
         .sort_values(key, ignore_index=True)
     pd.testing.assert_frame_equal(default, closed)
+
+
+def test_salt_count_rule(spark):
+    """min(cap, max(1, ceil(points / pixels))) per tile."""
+    cases = [(1, 9216), (9216, 9216), (9217, 9216), (40_000, 9216),
+             (10**6, 4096), (20, 3)]
+    df = spark.createDataFrame(cases, "npoints long, npixels long")
+    for cap, want in ((1, [1] * 6), (4, [1, 1, 2, 4, 4, 4]),
+                      (16, [1, 1, 2, 5, 16, 7])):
+        got = [r.n for r in df.select(salt_count(
+            F.col("npoints"), F.col("npixels"), cap).alias("n"))
+            .collect()]
+        assert got == want
+
+
+def test_point_in_segment_salted_equals_unsalted(spark, images_fixture,
+                                                 final_tiles, cfg):
+    """Load-based salting must not change any answer: a hot tile
+    (more points than core pixels, so it spreads over several salts)
+    plus the sparse caption points give the salt=1 answers. The
+    points frame is a plain, unmaterialized plan, which
+    point_in_segment reads more than once."""
+    pdf, _, _ = images_fixture
+    r0 = pdf.iloc[0]
+    hot = caption_points(r0.image_id, r0.caption, 60, 60,
+                         n_points=40_000)
+    hot["point_id"] += 1_000
+    pts = pd.concat([hot] + [caption_points(r.image_id, r.caption,
+                                            r.w, r.h)
+                             for r in pdf.itertuples()],
+                    ignore_index=True)
+    assert len(hot) > 2 * (cfg.tile_size - cfg.overlap) ** 2
+    points = spark.createDataFrame(pts)
+    key = ["image_id", "point_id"]
+    salted = point_in_segment(points, final_tiles, cfg.tile_size,
+                              cfg.overlap).toPandas() \
+        .sort_values(key, ignore_index=True)
+    single = point_in_segment(points, final_tiles, cfg.tile_size,
+                              cfg.overlap, salt=1).toPandas() \
+        .sort_values(key, ignore_index=True)
+    assert len(salted) == len(pts)
+    pd.testing.assert_frame_equal(salted, single)
 
 
 def test_knn_matches_brute_force(spark, images_fixture, final_tiles):
