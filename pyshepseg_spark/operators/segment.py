@@ -49,6 +49,7 @@ from ..kernels.kmeans import fit_spectral_clusters_sample
 from ..kernels.shepherd import do_shepherd_segmentation
 from .tiling import (collect_sample, decode_tile_pixels, explode_tiles,
                      stride_sample_pixels)
+from .zonal import value_histogram
 
 
 @dataclass
@@ -261,23 +262,12 @@ def _segment_tile_record(image_id, tcol, trow, ntcols, ntrows,
         rec["segtile"] = seg.astype("<u4").tobytes()
     if emit_hist:
         # trimmed-core FULL value histogram on LOCAL ids (nodata
-        # bins kept, so the A4 counter derives from the same rows);
-        # val < 2^17 for u16 imagery, same packing as zonal
-        core = seg[top:bottom, left:right].ravel().astype(np.int64)
-        m0 = core > 0
-        hist = []
-        for b in range(img.shape[0]):
-            v = img[b, top:bottom, left:right].ravel().astype(
-                np.int64)
-            if not m0.any():
-                continue
-            key = (core[m0] << np.int64(17)) | v[m0]
-            uk, cnt = np.unique(key, return_counts=True)
-            hist.extend(
-                {"local": int(k >> 17), "band": b,
-                 "val": int(k & ((1 << 17) - 1)), "cnt": int(c)}
-                for k, c in zip(uk, cnt))
-        rec["hist"] = hist
+        # bins kept, so the A4 counter derives from the same rows)
+        hist = value_histogram(seg[top:bottom, left:right],
+                               img[:, top:bottom, left:right])
+        rec["hist"] = [
+            {"local": s, "band": b, "val": v, "cnt": c}
+            for s, b, v, c in zip(*(a.tolist() for a in hist))]
     return rec
 
 
@@ -904,13 +894,7 @@ FINAL_TILE_SCHEMA_NOPIX = (
     "segdata binary, max_final long"
 )
 
-HIST_COL = (", hist array<struct<seg_id:long, band:int, val:long, "
-            "cnt:long>>")
-
-
 def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
-                      with_histogram: bool = False,
-                      img_null_val: int | None = None,
                       keep_pixels: bool = True):
     """Apply gid->final mapping to each tile and trim to its core
     (margin = overlap/2, mosaic edges untrimmed; tiling.py:959,
@@ -922,20 +906,14 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
     into the paint kernel — the shuffle is proportional to segment
     count, never pixel count.
 
-    with_histogram=True additionally attaches the tile's partial
-    (seg, band, value) histogram to each output row, so the zonal
-    stage never re-reads the fat tiles (A3 fused into the paint
-    pass).
-
     keep_pixels=False drops the pixels column from the output —
     segmentation-only consumers (the painted-mosaic sink, subset
     recodes) otherwise pay a second decode+memcpy+Arrow transfer of
     the full imagery just to discard it. The paint stage is
     memcpy-bound (PERF.md round-5 stage split), so this roughly
     halves its moved bytes AND the sink's written bytes; zonal stats
-    on RESTORED final tiles need pixels, so the default keeps them
-    (the fused with_histogram path already carries the stats
-    instead)."""
+    on RESTORED final tiles need pixels, so the default keeps
+    them."""
     margin = overlap // 2
     keys = ["image_id", "tcol", "trow"]
     # the mapping already carries its tile key (build_mapping): one
@@ -943,6 +921,9 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
     tm = (mapping.groupBy(*keys)
           .agg(F.collect_list(F.struct("gid", "final")).alias("gf")))
     joined = seg_tiles_off.join(tm, keys, "left")
+    cols = (["image_id", "tcol", "trow", "xout", "yout", "out_xsize",
+             "out_ysize", "nbands"] + (["pixels"] if keep_pixels else [])
+            + ["segdata", "max_final"])
 
     def kernel(batches):
         for pdf in batches:
@@ -964,11 +945,6 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
                     (0 if g == 0 else lut.get(int(g), 0) for g in u),
                     dtype=np.int64, count=len(u))
                 final = mapped[inv].reshape(core.shape)
-                pix_core = None
-                if keep_pixels or with_histogram:
-                    pix = decode_tile_pixels(row.pixels, row.nbands,
-                                             row.ysize, row.xsize)
-                    pix_core = pix[:, top:bottom, left:right]
                 rec = {
                     "image_id": row.image_id,
                     "tcol": row.tcol, "trow": row.trow,
@@ -980,45 +956,20 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
                     "max_final": int(final.max()) if final.size else 0,
                 }
                 if keep_pixels:
+                    pix = decode_tile_pixels(row.pixels, row.nbands,
+                                             row.ysize, row.xsize)
                     rec["pixels"] = np.ascontiguousarray(
-                        pix_core.astype("<u2")).tobytes()
-                if with_histogram:
-                    hist = []
-                    segf = final.ravel()
-                    valid = segf > 0
-                    for b in range(row.nbands):
-                        v = pix_core[b].ravel().astype(np.int64)
-                        m = valid
-                        if img_null_val is not None:
-                            m = m & (v != img_null_val)
-                        if not m.any():
-                            continue
-                        key = (segf[m] << np.int64(17)) | v[m]
-                        uk, cnt = np.unique(key, return_counts=True)
-                        hist.extend(
-                            {"seg_id": int(k >> 17), "band": b,
-                             "val": int(k & ((1 << 17) - 1)),
-                             "cnt": int(c)}
-                            for k, c in zip(uk, cnt))
-                    rec["hist"] = hist
+                        pix[:, top:bottom, left:right].astype("<u2")
+                    ).tobytes()
                 out.append(rec)
-            cols = ["image_id", "tcol", "trow", "xout", "yout",
-                    "out_xsize", "out_ysize", "nbands"]
-            if keep_pixels:
-                cols.append("pixels")
-            cols += ["segdata", "max_final"]
-            if with_histogram:
-                cols.append("hist")
             yield pd.DataFrame(out, columns=cols)
 
     schema = (FINAL_TILE_SCHEMA if keep_pixels
               else FINAL_TILE_SCHEMA_NOPIX)
-    schema += HIST_COL if with_histogram else ""
     return joined.mapInPandas(kernel, schema)
 
 
 def segment_images_tiled(images_df, cfg: SegConfig, centres=None,
-                         with_histogram: bool = False,
                          validate: bool = True,
                          mode: str = "sequential",
                          keep_pixels: bool = True):
@@ -1064,14 +1015,12 @@ def segment_images_tiled(images_df, cfg: SegConfig, centres=None,
         tiles = spread_small_scan(
             explode_tiles(images_df, cfg.tile_size, cfg.overlap))
         seg_tiles = segment_tiles(tiles, centres, cfg)
-    final = stitch(seg_tiles, cfg, with_histogram=with_histogram,
-                   mode=mode, keep_pixels=keep_pixels)
+    final = stitch(seg_tiles, cfg, mode=mode, keep_pixels=keep_pixels)
     return final, seg_tiles, centres
 
 
-def stitch(seg_tiles, cfg: SegConfig, with_histogram: bool = False,
-           simple_recode: bool = False, mode: str = "sequential",
-           keep_pixels: bool = True):
+def stitch(seg_tiles, cfg: SegConfig, simple_recode: bool = False,
+           mode: str = "sequential", keep_pixels: bool = True):
     """Stitch phase on a (possibly checkpoint-restored) seg_tiles.
 
     localCheckpoint materializes the expensive kernel output exactly
@@ -1129,8 +1078,6 @@ def stitch(seg_tiles, cfg: SegConfig, with_histogram: bool = False,
         cc = connected_components(edges)
         mapping = build_mapping(meta, cc)
     return paint_final_tiles(st, mapping, cfg.overlap,
-                             with_histogram=with_histogram,
-                             img_null_val=cfg.img_null_val,
                              keep_pixels=keep_pixels)
 
 

@@ -225,9 +225,10 @@ def edge_pixels_tiled(final_tiles, four_connected: bool = True):
             yield (pd.concat(frames, ignore_index=True)[cols]
                    if frames else pd.DataFrame(columns=cols))
 
-    # three consumers (partials / pending / ring info): persist the
-    # compact output so the tile kernel runs exactly once
-    out = j.mapInPandas(kernel, part_schema).persist()
+    # three consumers (partials / pending / ring info): checkpoint
+    # the compact output so the tile kernel runs exactly once, with
+    # nothing left cached
+    out = j.mapInPandas(kernel, part_schema).localCheckpoint()
     partial = (out.filter(F.col("kind") == "cnt")
                .select("image_id", "seg_id", "cnt"))
     pend = (out.filter(F.col("kind") == "pend")
@@ -337,7 +338,10 @@ def variogram_tiled(final_tiles, max_dist: int = 5, band: int = 0):
     src = final_tiles.select("image_id", "xout", "yout", "out_xsize",
                              "out_ysize", "nbands", "pixels",
                              "segdata")
-    out = src.mapInPandas(kernel, part_schema).persist()
+    # three consumers (partials / pending / info strips): checkpoint
+    # the compact output so the tile kernel runs exactly once, with
+    # nothing left cached
+    out = src.mapInPandas(kernel, part_schema).localCheckpoint()
     part = (out.filter(F.col("kind") == "part")
             .select("image_id", "seg_id", "lag", "s", "c"))
     pend = (out.filter(F.col("kind") == "pend")

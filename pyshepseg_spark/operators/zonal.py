@@ -7,8 +7,11 @@ reference's whole accumulate/complete/evict state machine
   1. per-tile kernels emit *partial value histograms*
      (image_id, seg_id, band, val, cnt) — the reference's
      seg -> {pixval -> count} dict (A3, tilingstats.py:466-515),
-     computed vectorized. Partial agg inside the kernel = map-side
-     combine; pixel rows are never materialized.
+     computed vectorized by the one numpy helper
+     :func:`value_histogram` (the segmentation kernel's emit_hist,
+     tile_value_histogram, seg_image_value_histogram and
+     segment_and_histogram all call it). Partial agg inside the
+     kernel = map-side combine; pixel rows are never materialized.
   2. groupBy(image_id, seg_id, band, val).sum(cnt) merges partials,
      then exact finalizers (A5, tilingstats.py:922-1008) derive
      min/max/mean/stddev/mode/median/percentile/pixcount from the
@@ -33,77 +36,51 @@ HIST_SCHEMA = ("image_id string, seg_id long, band int, val long, "
                "cnt long")
 
 
-def stats_histogram_from_stitch(seg_tiles_off, mapping, overlap: int,
-                                img_null_val: int | None = None):
-    """Paint + histogram in ONE kernel pass, emitting only the
-    partial (seg, band, value) histogram rows — the painted mosaic is
-    never materialized. This mirrors the reference's stats lifecycle
-    (calcPerSegmentStatsTiled reads rasters and writes only the RAT,
-    tilingstats.py:85-212): when the consumer wants statistics, a
-    second copy of the mosaic through Arrow is pure memory-bandwidth
-    cost and is the non-scaling fraction at high core counts. Use
-    paint_final_tiles when the raster itself is required.
+def value_histogram(seg, pix, img_null_val: int | None = None):
+    """A3 (accumulateSegDict, tilingstats.py:466-515): the one
+    per-segment value histogram every stats kernel calls. ``seg``
+    holds segment ids (any shape), ``pix`` is (nbands, *seg.shape)
+    integer imagery with values < 2^17. Returns (seg_id, band, val,
+    cnt) int64 arrays, band-major and ascending (seg_id, val) within
+    a band. Segment 0 is never counted; ``img_null_val`` pixels are
+    dropped only when it is set (None keeps nodata bins for the A4
+    counter); a band with no kept pixels emits no rows.
 
-    RESUME-path variant (input: a restored S6 checkpoint whose rows
-    carry pixel/segtile binaries but no kernel histograms). The
-    primary stats path, segment_stats_tiled, gets the histograms
-    from the segmentation kernel itself (explode_and_segment
-    emit_hist) and never re-reads binaries."""
-    from .segment import _trim_bounds
-    from .tiling import decode_tile_pixels
+    Each pixel packs to one int64 key (seg << 17) | val, so one sort
+    (np.unique) per band does the whole count."""
+    segf = seg.ravel().astype(np.int64)
+    valid = segf > 0
+    keys, bands, cnts = [], [], []
+    for b in range(pix.shape[0]):
+        v = pix[b].ravel().astype(np.int64)
+        m = valid if img_null_val is None else valid & (v != img_null_val)
+        if not m.any():
+            continue
+        uk, cnt = np.unique((segf[m] << np.int64(17)) | v[m],
+                            return_counts=True)
+        keys.append(uk)
+        bands.append(np.full(len(uk), b, dtype=np.int64))
+        cnts.append(cnt)
+    if not keys:
+        e = np.empty(0, dtype=np.int64)
+        return e, e, e, e
+    key = np.concatenate(keys)
+    return (key >> 17, np.concatenate(bands),
+            key & ((1 << 17) - 1), np.concatenate(cnts))
 
-    margin = overlap // 2
-    keys = ["image_id", "tcol", "trow"]
-    # build_mapping keeps the tile key on every mapping row: group
-    # straight by tile (no gid re-explode, no join back)
-    tm = (mapping.groupBy(*keys)
-          .agg(F.collect_list(F.struct("gid", "final")).alias("gf")))
-    joined = seg_tiles_off.join(tm, keys, "left")
 
-    def kernel(batches):
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                seg = np.frombuffer(row.segtile, dtype="<u4").reshape(
-                    row.ysize, row.xsize).astype(np.int64)
-                gid = np.where(seg > 0, seg + row.offset, 0)
-                top, bottom, left, right = _trim_bounds(
-                    row.tcol, row.trow, row.ntcols, row.ntrows,
-                    row.xsize, row.ysize, margin)
-                core = gid[top:bottom, left:right]
-                lut = {}
-                if row.gf is not None:
-                    for item in row.gf:
-                        lut[int(item["gid"])] = int(item["final"])
-                u, inv = np.unique(core, return_inverse=True)
-                mapped = np.fromiter(
-                    (0 if g == 0 else lut.get(int(g), 0) for g in u),
-                    dtype=np.int64, count=len(u))
-                final = mapped[inv].reshape(core.shape).ravel()
-                pix = decode_tile_pixels(row.pixels, row.nbands,
-                                         row.ysize, row.xsize)
-                pix_core = pix[:, top:bottom, left:right]
-                valid = final > 0
-                for b in range(row.nbands):
-                    v = pix_core[b].ravel().astype(np.int64)
-                    m = valid
-                    if img_null_val is not None:
-                        m = m & (v != img_null_val)
-                    if not m.any():
-                        continue
-                    key = (final[m] << np.int64(17)) | v[m]
-                    uk, cnt = np.unique(key, return_counts=True)
-                    frames.append(pd.DataFrame({
-                        "image_id": row.image_id,
-                        "seg_id": uk >> 17, "band": b,
-                        "val": uk & ((1 << 17) - 1), "cnt": cnt}))
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame(columns=[
-                       "image_id", "seg_id", "band", "val", "cnt"]))
+def _hist_frame(image_id, seg, pix, img_null_val):
+    """value_histogram as HIST_SCHEMA rows for one image or tile."""
+    s, b, v, c = value_histogram(seg, pix, img_null_val)
+    return pd.DataFrame({"image_id": image_id, "seg_id": s, "band": b,
+                         "val": v, "cnt": c})
 
-    part = joined.mapInPandas(kernel, HIST_SCHEMA)
-    return (part.groupBy("image_id", "seg_id", "band", "val")
-            .agg(F.sum("cnt").alias("cnt")))
+
+def _concat_hist(frames):
+    frames = [f for f in frames if len(f)]
+    return (pd.concat(frames, ignore_index=True) if frames
+            else pd.DataFrame(columns=["image_id", "seg_id", "band",
+                                       "val", "cnt"]))
 
 
 def segment_nodata_counts(hist_all, img_null_val: int):
@@ -183,56 +160,20 @@ def segment_stats_tiled(images_df, cfg, percentiles=(50,),
 def tile_value_histogram(final_tiles, img_null_val: int | None = None):
     """Stage 1: per-tile partial (seg, band, value) histograms from
     the stitched tiles (segdata int64 + trimmed pixels). mapInPandas;
-    the only shuffle is the later merge groupBy.
-
-    If the tiles already carry a fused ``hist`` column (paint ran
-    with with_histogram=True), this is a pure-SQL explode + merge —
-    the fat rows are never re-read."""
-    if "hist" in final_tiles.columns:
-        part = (final_tiles
-                .select("image_id", F.explode("hist").alias("h"))
-                .select("image_id", "h.seg_id", "h.band", "h.val",
-                        "h.cnt"))
-        if img_null_val is not None:
-            # Equivalent to the in-kernel mask: the histogram keeps
-            # full value granularity, so post-hoc filtering is exact
-            # (and idempotent if paint already filtered).
-            part = part.filter(F.col("val") != img_null_val)
-        return (part.groupBy("image_id", "seg_id", "band", "val")
-                .agg(F.sum("cnt").alias("cnt")))
+    the only shuffle is the later merge groupBy."""
 
     def kernel(batches):
         for pdf in batches:
             frames = []
             for row in pdf.itertuples(index=False):
-                seg = np.frombuffer(row.segdata, dtype="<i8").reshape(
-                    row.out_ysize, row.out_xsize)
+                seg = np.frombuffer(row.segdata, dtype="<i8")
                 pix = np.frombuffer(row.pixels, dtype="<u2").reshape(
-                    row.nbands, row.out_ysize, row.out_xsize)
-                segf = seg.ravel()
-                valid = segf > 0
-                for b in range(row.nbands):
-                    v = pix[b].ravel().astype(np.int64)
-                    m = valid
-                    if img_null_val is not None:
-                        m = m & (v != img_null_val)
-                    if not m.any():
-                        continue
-                    key = segf[m] << np.int64(17)  # 17 bits > uint16
-                    key = key | v[m]
-                    uk, cnt = np.unique(key, return_counts=True)
-                    frames.append(pd.DataFrame({
-                        "image_id": row.image_id,
-                        "seg_id": uk >> 17,
-                        "band": b,
-                        "val": uk & ((1 << 17) - 1),
-                        "cnt": cnt}))
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame(columns=[
-                       "image_id", "seg_id", "band", "val", "cnt"]))
+                    row.nbands, -1)
+                frames.append(_hist_frame(row.image_id, seg, pix,
+                                          img_null_val))
+            yield _concat_hist(frames)
 
-    cols = ["image_id", "out_xsize", "out_ysize", "nbands", "pixels",
-            "segdata"]
+    cols = ["image_id", "nbands", "pixels", "segdata"]
     part = final_tiles.select(*cols).mapInPandas(kernel, HIST_SCHEMA)
     return (part.groupBy("image_id", "seg_id", "band", "val")
             .agg(F.sum("cnt").alias("cnt")))
@@ -311,25 +252,14 @@ def seg_image_value_histogram(seg_images, images_df,
             for row in pdf.itertuples(index=False):
                 seg = np.frombuffer(row.segdata, dtype="<i8")
                 pix = decode_image(row.bytes, row.fmt, row.w, row.h)
-                valid = seg > 0
-                for b in range(row.nbands):
-                    v = pix[b].ravel().astype(np.int64)
-                    m = valid
-                    if img_null_val is not None:
-                        m = m & (v != img_null_val)
-                    if not m.any():
-                        continue
-                    key = (seg[m] << np.int64(17)) | v[m]
-                    uk, cnt = np.unique(key, return_counts=True)
-                    frames.append(pd.DataFrame({
-                        "image_id": row.image_id,
-                        "seg_id": uk >> 17,
-                        "band": b,
-                        "val": uk & ((1 << 17) - 1),
-                        "cnt": cnt}))
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame(columns=[
-                       "image_id", "seg_id", "band", "val", "cnt"]))
+                if len(pix) < row.nbands:
+                    raise ValueError(
+                        f"{row.image_id}: values image has {len(pix)} "
+                        f"bands, the segmentation row {row.nbands}")
+                frames.append(_hist_frame(row.image_id, seg,
+                                          pix[:row.nbands],
+                                          img_null_val))
+            yield _concat_hist(frames)
 
     part = j.mapInPandas(kernel, HIST_SCHEMA)
     return (part.groupBy("image_id", "seg_id", "band", "val")
@@ -341,8 +271,6 @@ def segment_and_histogram(images_df, cfg):
     histogram in ONE mapInPandas pass (no second decode, no shuffle
     join of raster binaries — at 10^12-image scale the only shuffle
     is the tiny histogram-row merge). Emits HIST_SCHEMA rows."""
-    import time as _time
-
     from ..kernels.shepherd import do_shepherd_segmentation
 
     cfg_b = cfg
@@ -356,13 +284,11 @@ def segment_and_histogram(images_df, cfg):
         for pdf in batches:
             frames = []
             for row in pdf.itertuples(index=False):
-                t0 = _time.time()
                 try:
                     img = decode_image(row.bytes, row.fmt,
                                        row.w, row.h)
                 except Exception:
-                    if getattr(cfg_b, "on_decode_error",
-                               "fail") == "skip":
+                    if cfg_b.on_decode_error == "skip":
                         continue
                     raise
                 k = int(getattr(row, "num_clusters",
@@ -380,27 +306,9 @@ def segment_and_histogram(images_df, cfg):
                     four_connected=cfg_b.four_connected,
                     spect_dist_pcntile=cfg_b.spect_dist_pcntile,
                     max_clump_size=cfg_b.max_clump_size)
-                seg = res.segimg.ravel().astype(np.int64)
-                valid = seg > 0
-                for b in range(img.shape[0]):
-                    v = img[b].ravel().astype(np.int64)
-                    m = valid
-                    if cfg_b.img_null_val is not None:
-                        m = m & (v != cfg_b.img_null_val)
-                    if not m.any():
-                        continue
-                    key = (seg[m] << np.int64(17)) | v[m]
-                    uk, cnt = np.unique(key, return_counts=True)
-                    frames.append(pd.DataFrame({
-                        "image_id": row.image_id,
-                        "seg_id": uk >> 17,
-                        "band": b,
-                        "val": uk & ((1 << 17) - 1),
-                        "cnt": cnt}))
-                _ = t0
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame(columns=[
-                       "image_id", "seg_id", "band", "val", "cnt"]))
+                frames.append(_hist_frame(row.image_id, res.segimg,
+                                          img, cfg_b.img_null_val))
+            yield _concat_hist(frames)
 
     part = images_df.select(*cols).mapInPandas(kernel, HIST_SCHEMA)
     return (part.groupBy("image_id", "seg_id", "band", "val")

@@ -65,8 +65,7 @@ for rep in range({reps} + 1):
     t["mapping"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    final = paint_final_tiles(st, mapping, cfg.overlap,
-                              img_null_val=cfg.img_null_val)
+    final = paint_final_tiles(st, mapping, cfg.overlap)
     n = final.count()
     t["paint_count"] = round(time.time() - t0, 2)
     if rep > 0:

@@ -152,3 +152,56 @@ def test_kmeanspp_n_init_inertia_class():
     # every blob centre recovered within a few noise sigmas
     for b in blobs:
         assert np.min(((pp - b) ** 2).sum(axis=1)) < (3 * 5.0) ** 2
+
+
+def _counter_histogram(seg, pix, img_null_val=None):
+    """Plain-Python A3 oracle: Counter over (seg, band, val)."""
+    from collections import Counter
+    c = Counter()
+    segf = seg.ravel().tolist()
+    for b in range(pix.shape[0]):
+        for s, v in zip(segf, pix[b].ravel().tolist()):
+            if s > 0 and (img_null_val is None or v != img_null_val):
+                c[(s, b, v)] += 1
+    return c
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+@pytest.mark.parametrize("img_null_val", [None, 7])
+def test_value_histogram_equals_counter(seed, img_null_val):
+    """The one A3 kernel equals a Counter over (seg, band, val), and
+    rows come band-major, then ascending (seg_id, val)."""
+    from pyshepseg_spark.operators.zonal import value_histogram
+    rng = np.random.default_rng(seed)
+    seg = rng.integers(0, 40, size=(23, 17))
+    pix = rng.integers(0, 12, size=(3, 23, 17)).astype(np.uint16)
+    s, b, v, c = value_histogram(seg, pix, img_null_val)
+    assert all(a.dtype == np.int64 for a in (s, b, v, c))
+    got = {(int(si), int(bi), int(vi)): int(ci)
+           for si, bi, vi, ci in zip(s, b, v, c)}
+    assert len(got) == len(s)
+    assert got == dict(_counter_histogram(seg, pix, img_null_val))
+    order = list(zip(b.tolist(), s.tolist(), v.tolist()))
+    assert order == sorted(order)
+
+
+def test_value_histogram_edge_values():
+    """val 65535 round-trips through the 17-bit packing; nodata bins
+    are kept unless img_null_val is set; seg 0 is never emitted; a
+    band whose pixels are all segment 0 or all null emits no rows."""
+    from pyshepseg_spark.operators.zonal import value_histogram
+    seg = np.array([[0, 1, 1], [2, 2, 0]], dtype=np.int64)
+    pix = np.array([[[9, 65535, 65535], [65535, 3, 9]],
+                    [[5, 65535, 65535], [65535, 65535, 5]]],
+                   dtype=np.uint16)
+    s, b, v, c = value_histogram(seg, pix)
+    assert list(zip(s.tolist(), b.tolist(), v.tolist(), c.tolist())) == [
+        (1, 0, 65535, 2), (2, 0, 3, 1), (2, 0, 65535, 1),
+        (1, 1, 65535, 2), (2, 1, 65535, 2)]
+    s, b, v, c = value_histogram(seg, pix, img_null_val=65535)
+    # band 1 has no non-null pixel in a segment: no rows for it
+    assert list(zip(s.tolist(), b.tolist(), v.tolist(), c.tolist())) == [
+        (2, 0, 3, 1)]
+    for arrs in (value_histogram(np.zeros_like(seg), pix),
+                 value_histogram(seg, np.full_like(pix, 65535), 65535)):
+        assert all(len(a) == 0 and a.dtype == np.int64 for a in arrs)

@@ -384,16 +384,15 @@ def test_streaming_stats_batch_replay_is_idempotent(spark, tmp_path):
 def test_stats_from_restored_binary_checkpoint(spark, tmp_path):
     """Resume scenario for the stats consumer: a durable S6
     checkpoint (parquet of kernel rows WITH pixel/segtile binaries,
-    written by a raster-producing run) is read back cold and fed to
-    stats_histogram_from_stitch — the histogram must equal the
+    written by a raster-producing run) is read back cold and goes
+    stitch -> tile_value_histogram -> segment_stats, the path of the
+    checkpointed runner and `cli stats` — the stats must equal the
     primary kernel-histogram path bit for bit."""
     import pandas as pd
     from pyshepseg_spark.operators.segment import (
-        SegConfig, checkpoint_with_meta, explode_and_segment,
-        sequential_stitch_mapping)
+        SegConfig, explode_and_segment, stitch)
     from pyshepseg_spark.operators.zonal import (
-        segment_stats, segment_stats_tiled,
-        stats_histogram_from_stitch)
+        segment_stats, segment_stats_tiled, tile_value_histogram)
     from pyshepseg_spark.sources.imagegen import generate_images_pdf
 
     cfg = SegConfig(img_null_val=65535, four_connected=False,
@@ -407,10 +406,8 @@ def test_stats_from_restored_binary_checkpoint(spark, tmp_path):
     explode_and_segment(images, cfg).write.parquet(ckpt)
 
     restored = spark.read.parquet(ckpt)
-    st, meta = checkpoint_with_meta(restored)
-    mapping = sequential_stitch_mapping(meta, cfg.overlap)
-    hist = stats_histogram_from_stitch(st, mapping, cfg.overlap,
-                                       img_null_val=65535)
+    hist = tile_value_histogram(stitch(restored, cfg),
+                                img_null_val=65535)
     got = segment_stats(hist, percentiles=(50,)).toPandas() \
         .sort_values(["image_id", "seg_id", "band"],
                      ignore_index=True)

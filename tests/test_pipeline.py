@@ -132,48 +132,6 @@ def test_large_multi_tile_grid(spark):
     assert (seg == ref).all()
 
 
-def test_fused_paint_histogram_equals_two_pass(spark, images_fixture,
-                                               cfg, final_tiles):
-    """paint(with_histogram=True) attaches per-tile partial
-    histograms; the exploded merge must equal the two-pass kernel
-    histogram. (Kept non-default: at small tile counts the
-    struct-array serialization costs more than the saved pass.)"""
-    from pyshepseg_spark.operators.zonal import tile_value_histogram
-    _, _, images = images_fixture
-    fused, _, _ = segment_images_tiled(images, cfg,
-                                       with_histogram=True)
-    h1 = tile_value_histogram(fused, img_null_val=65535).toPandas()
-    h2 = tile_value_histogram(final_tiles,
-                              img_null_val=65535).toPandas()
-    key = ["image_id", "seg_id", "band", "val"]
-    h1 = h1.sort_values(key).reset_index(drop=True)
-    h2 = h2.sort_values(key).reset_index(drop=True)
-    assert h1.equals(h2)
-
-
-def test_fused_histogram_honours_late_null_val(spark, images_fixture,
-                                               cfg, final_tiles):
-    """The SQL fast path must apply img_null_val even when the fused
-    hist was built without paint-time filtering (hist keeps full
-    value granularity, so post-hoc filtering is exact)."""
-    import dataclasses
-    from pyshepseg_spark.operators.segment import stitch
-    from pyshepseg_spark.operators.zonal import tile_value_histogram
-    _, _, images = images_fixture
-    # same segmentation as the fixture (deterministic), but paint the
-    # fused histogram with null kept, so the SQL path must filter it
-    _, seg_tiles, _ = segment_images_tiled(images, cfg)
-    cfg_keep = dataclasses.replace(cfg, img_null_val=None)
-    fused = stitch(seg_tiles, cfg_keep, with_histogram=True)
-    h_fused = tile_value_histogram(fused, img_null_val=65535).toPandas()
-    h_ref = tile_value_histogram(final_tiles,
-                                 img_null_val=65535).toPandas()
-    assert not (h_fused["val"] == 65535).any()
-    key = ["image_id", "seg_id", "band", "val"]
-    assert h_fused.sort_values(key).reset_index(drop=True).equals(
-        h_ref.sort_values(key).reset_index(drop=True))
-
-
 def test_stats_from_stitch_equals_paint_then_histogram(
         spark, images_fixture, cfg, final_tiles):
     """The one-pass stats path (histogram emitted directly from the
@@ -574,32 +532,3 @@ def test_keep_pixels_false_drops_column_keeps_segdata(
             .toPandas().sort_values(keys, ignore_index=True))
     import pandas as pd
     pd.testing.assert_frame_equal(got, want)
-
-
-def test_keep_pixels_false_with_histogram(spark, images_fixture, cfg):
-    """with_histogram=True needs the imagery INSIDE the paint kernel
-    but must still honour keep_pixels=False on the output: hist
-    attached, pixels column absent, hist identical to the default
-    path."""
-    _, _, images = images_fixture
-    from pyshepseg_spark.operators.segment import segment_images_tiled
-    nopix, _, _ = segment_images_tiled(
-        images, cfg, with_histogram=True, keep_pixels=False)
-    withpix, _, _ = segment_images_tiled(
-        images, cfg, with_histogram=True, keep_pixels=True)
-    assert "pixels" not in nopix.columns
-    assert "hist" in nopix.columns
-    from pyspark.sql import functions as F
-
-    def hist_rows(df):
-        return (df.select("image_id",
-                          F.explode("hist").alias("h"))
-                .select("image_id", "h.seg_id", "h.band", "h.val",
-                        "h.cnt")
-                .toPandas()
-                .sort_values(["image_id", "seg_id", "band", "val"],
-                             ignore_index=True))
-
-    import pandas as pd
-    pd.testing.assert_frame_equal(hist_rows(nopix),
-                                  hist_rows(withpix))

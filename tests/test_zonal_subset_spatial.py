@@ -410,6 +410,25 @@ def test_variogram_tiled_equals_udf(spark, final_tiles):
         assert (both_nan | (a == b)).all(), c
 
 
+def test_tiled_spatial_stats_leave_nothing_cached(spark, final_tiles):
+    """edge_pixels_tiled and variogram_tiled read their kernel output
+    three times; once the result is collected, none of it may stay in
+    Spark's cache."""
+    from pyshepseg_spark.operators.spatialstats import (
+        edge_pixels_tiled, variogram_tiled)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    try:
+        assert cache.isEmpty()
+        edge_pixels_tiled(final_tiles).collect()
+        assert cache.isEmpty(), "edge_pixels_tiled left data cached"
+        variogram_tiled(final_tiles, max_dist=2).collect()
+        assert cache.isEmpty(), "variogram_tiled left data cached"
+    finally:
+        # other tests share the session fixture: cache it again
+        final_tiles.cache().count()
+
+
 def test_stats_selection_rejects_param_on_non_percentile(spark):
     from pyshepseg_spark.operators.zonal import segment_stats_selected
     hist = spark.createDataFrame(
@@ -472,6 +491,24 @@ def test_seg_image_value_histogram_matches_fused(spark,
     h1 = h1.sort_values(key, ignore_index=True)
     h2 = h2.sort_values(key, ignore_index=True)
     assert h1.equals(h2)
+
+
+def test_seg_image_value_histogram_rejects_fewer_value_bands(spark):
+    """A values image with fewer bands than the segmentation row
+    fails with an error naming the image, not a silent partial
+    histogram."""
+    from pyspark.errors import PythonException
+    from pyshepseg_spark.operators.zonal import seg_image_value_histogram
+    from pyshepseg_spark.sources.codec import encode_raw_u16
+    seg = spark.createDataFrame(
+        [("a", 4, 4, 3, np.ones(16, dtype="<i8").tobytes())],
+        "image_id string, w int, h int, nbands int, segdata binary")
+    img = np.arange(16, dtype=np.uint16).reshape(1, 4, 4)
+    vals = spark.createDataFrame(
+        [("a", 4, 4, encode_raw_u16(img), "raw_u16")],
+        "image_id string, w int, h int, bytes binary, fmt string")
+    with pytest.raises(PythonException, match="a: values image has 1"):
+        seg_image_value_histogram(seg, vals).collect()
 
 
 def test_fill_missing_stats_reports_missing_value(spark):
