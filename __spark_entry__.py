@@ -249,12 +249,10 @@ def _q_o3_min_by_nearest(spark, sf):
 
 def _q_f2_affine(spark, sf):
     # F2: 6-term affine geotransform as column arithmetic
+    from pyshepseg_spark.operators.spatialstats import affine_geo
     li = _t(spark, sf, "lineitem")
-    gt = (1000.0, 0.5, 0.0, 2000.0, 0.0, -0.5)
-    geox = F.lit(gt[0]) + F.col("l_linenumber") * F.lit(gt[1]) \
-        + F.col("l_suppkey") * F.lit(gt[2])
-    geoy = F.lit(gt[3]) + F.col("l_linenumber") * F.lit(gt[4]) \
-        + F.col("l_suppkey") * F.lit(gt[5])
+    geox, geoy = affine_geo("l_linenumber", "l_suppkey",
+                            (1000.0, 0.5, 0.0, 2000.0, 0.0, -0.5))
     return li.select("l_orderkey", "l_linenumber",
                      F.round(geox, 4).alias("geo_x"),
                      F.round(geoy, 4).alias("geo_y"))
@@ -1810,7 +1808,7 @@ def oracle_sql() -> dict[str, str]:
 
 def _shingle_cte(k: int) -> str:
     """Shared CTE: word k-shingle 28-bit md5 hashes, replaying
-    dedup.shingles_md5 exactly (same normalization, same slice
+    dedup._py_norm_grams_md5 exactly (same normalization, same slice
     clamping, same hex-prefix hash)."""
     return f"""
         norm AS (

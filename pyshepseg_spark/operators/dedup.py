@@ -4,9 +4,12 @@ First-class engine components (driver brief): exact hash dedup,
 MinHash+LSH, SimHash, n-gram Jaccard verification, and
 embedding-cosine near-dup — all expressed Spark-first:
 
-- hashing/shingling runs JVM-side where Spark has the primitive
-  (xxhash64, F.transform), Arrow pandas UDFs otherwise — never
-  per-row Python.
+- shingle hashing is md5-28bit (:func:`_py_norm_grams_md5`), so the
+  DuckDB oracles replay every signature bit-for-bit; gram hashing,
+  signature minima, SimHash bit sums and gram sets run as vectorized
+  Arrow pandas UDFs (Catalyst higher-order functions run interpreted),
+  never per-row Python UDFs. Content and LSH band keys are xxhash64,
+  JVM-side.
 - LSH banding turns the quadratic all-pairs problem into an
   equi-join on (band, bucket-hash): the shuffle is proportional to
   candidate-pair count, and AQE skew-join splits hot buckets.
@@ -19,34 +22,31 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
-# Mersenne prime for universal hashing
-_MERSENNE = (1 << 61) - 1
-
 # 31-bit Mersenne prime for the oracle-able (cross-engine) hash path:
 # 28-bit md5 shingle hashes x 31-bit coefficients stay < 2^59, so
 # (a*h + b) % P31 is exact in int64 on every engine — no wraparound.
 P31 = (1 << 31) - 1
 
 
-def md5_hash28(col):
-    """28-bit hash from the first 7 hex chars of md5 — computable
-    identically in Spark (conv/substring/md5) and ANSI SQL
-    (CAST('0x'||substr(md5(x),1,7) AS BIGINT)), so DuckDB oracles can
-    replay the whole minhash/simhash pipeline bit-for-bit."""
-    return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long")
-
-
 def _py_norm_grams_md5(norm: str, k: int) -> list[int]:
-    """md5-28bit hashes of word k-grams of an ALREADY-NORMALIZED
-    string — the exact Python twin of shingles_md5's JVM expression
-    (r06: the JVM form is an interpreted HOF — slice + concat_ws +
-    md5 + conv per gram, measured 2.5 s alone at sf1.0 — while MD5
-    is MD5 everywhere). Token split matches F.split(norm, " ") on
-    normalized_text output (single spaces, trimmed; '' splits to
-    ['']); gram construction matches slice's truncation and the
-    short-doc whole-text gram; int(hexdigest()[:7], 16) ==
-    conv(substring(md5(g), 1, 7), 16, 10). Verified bit-identical
-    through the oracle replays and output A/B at sf0.001..1.0."""
+    """md5-28bit hashes of the word k-grams of an ALREADY-NORMALIZED
+    string (:func:`normalized_text` output: lowered, single spaces,
+    trimmed) — the engine's one shingle hash:
+
+    - tokens are ``norm.split(" ")`` ('' splits to ['']);
+    - gram i, for 0 <= i <= max(ntok - k, 0), is tokens i..i+k-1
+      joined by single spaces, truncated at the end, so a doc with
+      fewer than k tokens yields one whole-text gram;
+    - each gram hashes to the first 7 hex digits of its utf-8 md5
+      as an integer, < 2^28.
+
+    ANSI SQL computes the same hash as
+    ``CAST('0x' || substr(md5(g), 1, 7) AS BIGINT)``, so the DuckDB
+    oracles (``__spark_entry__._shingle_cte``) replay every gram
+    bit-for-bit. Python rather than a JVM transform/slice/md5 chain:
+    Catalyst runs higher-order functions interpreted (r06 measured
+    2.5 s for that chain alone at sf1.0), while MD5 is MD5
+    everywhere."""
     import hashlib
     words = norm.split(" ")
     upper = max(len(words) - k, 0)
@@ -55,17 +55,6 @@ def _py_norm_grams_md5(norm: str, k: int) -> list[int]:
             " ".join(words[i:i + k]).encode("utf-8"))
             .hexdigest()[:7], 16)
         for i in range(upper + 1)]
-
-
-def shingles_md5(text_col, k=5):
-    """Word k-shingle 28-bit hashes as array<long> (JVM-side only:
-    split + transform + md5). Cross-engine twin of _shingles."""
-    words = F.split(normalized_text(F.col(text_col)), " ")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.transform(
-        idx, lambda i: md5_hash28(
-            F.concat_ws(" ", F.slice(words, i + 1, k))))
 
 
 def minhash_coeffs(num_hashes=32, seed=42):
@@ -79,9 +68,9 @@ def minhash_coeffs(num_hashes=32, seed=42):
 
 def minhash_signatures_md5(docs, text_col="text", id_col="doc_id",
                            num_hashes=32, k=5, seed=42):
-    """Oracle-able MinHash signatures: md5-28bit shingles (JVM-side
-    — split/slice/md5 stay whole-stage expressions), exact
-    (a*h+b) % P31 minima. r06: the minima move from an interpreted
+    """Oracle-able MinHash signatures: md5-28bit shingles
+    (:func:`_py_norm_grams_md5`), exact (a*h+b) % P31 minima, both
+    in one vectorized Arrow pass. r06: the minima move from an interpreted
     HOF aggregate (array accumulator rebuilt via zip_with per
     shingle — Catalyst HOFs get no codegen) to one vectorized Arrow
     pass: (a*h+b) % P31 is exact in uint64 (h < 2^28, a < 2^31 →
@@ -102,8 +91,7 @@ def minhash_signatures_md5(docs, text_col="text", id_col="doc_id",
         out = []
         for nt in norm:
             if nt is None:
-                # shingles_md5(NULL text) was NULL, and the JVM
-                # aggregate over a NULL array is NULL
+                # NULL text has no shingle array, so no signature
                 out.append(None)
                 continue
             x = np.asarray(_py_norm_grams_md5(nt, k),
@@ -121,8 +109,9 @@ def minhash_signatures_md5(docs, text_col="text", id_col="doc_id",
 def simhash_md5(docs, text_col="text", id_col="doc_id", k=3,
                 hash_bits=28):
     """Oracle-able 28-bit SimHash: per bit position, the sign of
-    sum(+-1) over shingle-hash bits. The md5 shingling stays a JVM
-    expression; the per-bit sign sums are one vectorized Arrow pass
+    sum(+-1) over shingle-hash bits. The md5 shingling
+    (:func:`_py_norm_grams_md5`) and the per-bit sign sums are one
+    vectorized Arrow pass
     (r06 — previously 28 scalar HOF folds over the shingle array,
     each interpreted per element: the round-3 A/B showed HOF array
     accumulators are 6.6x WORSE than scalar folds, and this round's
@@ -170,45 +159,6 @@ def exact_duplicates(docs, text_col="text", id_col="doc_id"):
             .filter(F.col("n_docs") > 1))
 
 
-def _shingles(text_col, k=5):
-    """Word k-shingle hashes as array<long>, computed with JVM
-    builtins (split + transform + xxhash64 via concat)."""
-    words = F.split(normalized_text(F.col(text_col)), " ")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.transform(
-        idx, lambda i: F.xxhash64(
-            F.concat_ws(" ", F.slice(words, i + 1, k))))
-
-
-def minhash_signatures(docs, text_col="text", id_col="doc_id",
-                       num_hashes=64, k=5, seed=42):
-    """MinHash signature per doc: shingle hashes (JVM) -> per-doc min
-    over ``num_hashes`` universal hash functions (vectorized pandas
-    UDF over the shingle array — one Arrow batch per partition)."""
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64)
-    b = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64)
-
-    @pandas_udf("array<long>")
-    def sig(sh: pd.Series) -> pd.Series:
-        out = []
-        for arr in sh:
-            if arr is None or len(arr) == 0:
-                out.append([0] * num_hashes)
-                continue
-            x = np.asarray(arr, dtype=np.uint64)
-            # (a*x + b) mod p, min over shingles, per hash function
-            vals = (x[None, :] * a.astype(np.uint64)[:, None]
-                    + b.astype(np.uint64)[:, None]) % np.uint64(_MERSENNE)
-            out.append(vals.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(out)
-
-    return docs.select(
-        id_col, F.col(text_col),
-        sig(_shingles(text_col, k)).alias("minhash"))
-
-
 def minhash_band_keys(signatures, id_col="doc_id", num_hashes=64,
                       bands=16):
     """Explode a signature frame into one row per (band, bucket) key:
@@ -238,9 +188,9 @@ def minhash_lsh_pairs(signatures, id_col="doc_id", num_hashes=64,
     re-inlines the signature expression into the band posexplode and
     BOTH self-join sides (~3-4 evaluations per doc; interpreted HOFs
     get no codegen CSE — PERF.md round-4/5 A/B), a measured ~35%
-    tax on the full minhash_near_dups shape at sf0.1
-    (scripts/microbench_minhash.py: 1.24 s -> 0.81 s median, and
-    every signature rewrite ties within noise once barriered). At
+    tax on the full minhash_near_dups shape at sf0.1 (PERF.md
+    round 5: 1.24 s -> 0.81 s median, and every signature rewrite
+    ties within noise once barriered). At
     real scale a signature table is materialized anyway (compute
     once, probe many); pass False to keep lineage (e.g. ahead of a
     user-managed persist or table write)."""
@@ -280,7 +230,10 @@ def minhash_lsh_pairs(signatures, id_col="doc_id", num_hashes=64,
 def ngram_jaccard_pairs(docs, cand_pairs, text_col="text",
                         id_col="doc_id", k=5, threshold=0.7):
     """Exact n-gram Jaccard verification of candidate pairs: join the
-    shingle sets back on both sides, intersect/union JVM-side.
+    word k-gram sets (:func:`word_gram_sets` over
+    :func:`normalized_text`) back on both sides, intersect/union
+    JVM-side. The sets hold the gram strings themselves, so the
+    Jaccard is exact (no hash collisions).
 
     r06: shingle sets are built only for docs that appear in a
     candidate pair (semi-join prefilter) — the verify cost scales
@@ -289,14 +242,20 @@ def ngram_jaccard_pairs(docs, cand_pairs, text_col="text",
     candidate pair can never survive the inner joins on a/b.
     cand_pairs is barriered first because it now feeds three
     consumers (the id prefilter and both verify joins) and an
-    unbarriered LSH candidate join would re-run per consumer."""
+    unbarriered LSH candidate join would re-run per consumer. The
+    gram-set frame is barriered too: it feeds both verify joins, and
+    an unbarriered UDF projection is re-inlined per consumer."""
     cand_pairs = cand_pairs.localCheckpoint(eager=False)
     ids = (cand_pairs.select(F.col("a").alias(id_col))
            .union(cand_pairs.select(F.col("b").alias(id_col)))
            .distinct())
-    sh = docs.join(ids, id_col, "left_semi").select(
+    norm = docs.join(ids, id_col, "left_semi").select(
         F.col(id_col),
-        F.array_distinct(_shingles(text_col, k)).alias("sh"))
+        normalized_text(F.col(text_col)).alias("norm_text"))
+    sh = (word_gram_sets(norm, text_col="norm_text", id_col=id_col,
+                         k=k)
+          .withColumnRenamed("grams", "sh")
+          .localCheckpoint(eager=False))
     a = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
     j = (cand_pairs.join(a, "a").join(b, "b")
@@ -308,32 +267,6 @@ def ngram_jaccard_pairs(docs, cand_pairs, text_col="text",
                      .otherwise(F.lit(0.0))))
     return (j.filter(F.col("jaccard") >= threshold)
             .select("a", "b", "jaccard"))
-
-
-def simhash(docs, text_col="text", id_col="doc_id", k=3):
-    """64-bit SimHash per doc from word k-shingles: sum of +-1 per
-    bit weighted by shingle occurrence, sign -> bit. Vectorized
-    pandas UDF over the shingle array."""
-
-    @pandas_udf("long")
-    def sh64(sh: pd.Series) -> pd.Series:
-        out = np.zeros(len(sh), dtype=np.int64)
-        for i, arr in enumerate(sh):
-            if arr is None or len(arr) == 0:
-                continue
-            x = np.asarray(arr, dtype=np.uint64)
-            bits = ((x[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
-                    & np.uint64(1)).astype(np.int64)
-            v = (2 * bits - 1).sum(axis=0)
-            word = np.uint64(0)
-            for bpos in range(64):
-                if v[bpos] > 0:
-                    word |= np.uint64(1) << np.uint64(bpos)
-            out[i] = word.astype(np.int64)
-        return pd.Series(out)
-
-    return docs.select(id_col, sh64(_shingles(text_col, k))
-                       .alias("simhash"))
 
 
 def simhash_block_keys(sim, id_col="doc_id", blocks=4,
@@ -475,9 +408,9 @@ def word_gram_sets(docs, text_col="text", id_col="doc_id", k=3):
 def gram_positions_md5(docs, text_col="text", id_col="doc_id", k=20):
     """(id, ntok, pos, gh) rows: one per token position, where gh is
     the md5-28bit hash of the k-token gram starting at pos (0-based,
-    over the whitespace-normalized token stream). The positional twin
-    of shingles_md5 (same normalization, same short-doc behaviour:
-    a doc shorter than k tokens emits one gram of the whole text) —
+    over the whitespace-normalized token stream): the
+    :func:`_py_norm_grams_md5` grams with their positions (a doc
+    shorter than k tokens emits one gram of the whole text) —
     md5-28bit so a DuckDB oracle replays the stream bit-for-bit.
 
     Scale shape: the output is one row per token — the linear,
@@ -804,8 +737,8 @@ def embedding_near_dups(emb, id_col="vec_id", vec_col="embedding",
 
 def shingles_md5_full(text_col, k=13):
     """Word k-shingle FULL md5 hex strings as array<string>. Same
-    normalization and slice clamping as :func:`shingles_md5` (a doc
-    shorter than ``k`` words yields one whole-text shingle), but the
+    grams as :func:`_py_norm_grams_md5` (a doc shorter than ``k``
+    words yields one whole-text shingle), but the
     untruncated 128-bit digest: at decontamination scale a benchmark
     gram must never collide with an unrelated corpus gram, and the
     32-char hex is still far cheaper to exchange than a 13-word

@@ -1,12 +1,9 @@
 """Multimodal binary-column operators.
 
-Images/audio/video are opaque ``binary`` columns with typed metadata;
-all processing is mapInPandas over Arrow batches (schema, batch shape
-and partitioning are real and tested). Image decode/resize/feature
-extraction is fully functional via the engine's own codec; audio and
-video decoding have no codec libraries in this container, so those
-kernels are STUBS — deterministic fakes clearly marked, keeping the
-Spark-side plumbing real.
+Images are opaque ``binary`` columns with typed metadata; all
+processing is mapInPandas over Arrow batches, decoding through the
+engine's own codec: per-band image features, perceptual-hash image
+near-dups and image+caption near-dups.
 """
 
 from __future__ import annotations
@@ -14,7 +11,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..sources.codec import decode_image, encode_image
+from ..sources.codec import decode_image
 
 IMAGE_FEATURES_SCHEMA = (
     "image_id string, band int, w int, h int, nbands int, "
@@ -57,39 +54,6 @@ def image_features(images_df, img_null_val: int | None = None):
 
     return images_df.select("image_id", "bytes", "w", "h", "fmt") \
         .mapInPandas(kernel, IMAGE_FEATURES_SCHEMA)
-
-
-def resize_images(images_df, factor: int = 2):
-    """Block-mean downsample by an integer factor (real), re-encoded
-    with the original fmt. The reference's overview-pyramid analogue
-    (S8, tiling.py:1360-1404) expressed as a derived table."""
-
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt, row.w, row.h)
-                nb, h, w = img.shape
-                hh, ww = (h // factor) * factor, (w // factor) * factor
-                small = img[:, :hh, :ww].reshape(
-                    nb, hh // factor, factor, ww // factor, factor
-                ).mean(axis=(2, 4)).astype(np.uint16)
-                out.append({
-                    "image_id": row.image_id,
-                    "w": small.shape[2], "h": small.shape[1],
-                    "fmt": row.fmt,
-                    "bytes": encode_image(small, row.fmt)})
-            yield pd.DataFrame(out, columns=["image_id", "w", "h",
-                                             "fmt", "bytes"])
-
-    return images_df.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(kernel,
-                     "image_id string, w int, h int, fmt string, "
-                     "bytes binary")
-
-
-AUDIO_FEATURES_SCHEMA = ("media_id string, n_samples long, "
-                         "sample_rate int, rms double")
 
 
 def image_near_dups(images_df, max_hamming: int = 6,
@@ -183,62 +147,3 @@ def multimodal_near_dups(images_df, max_phash_hamming: int = 6,
                                   hash_bits=28) \
         .withColumnRenamed("hamming", "caption_hamming")
     return img_pairs.join(cap_pairs, ["a", "b"])
-
-
-def audio_features(audio_df, fake: bool = True):
-    """STUB: audio decode. No audio codec library exists in this
-    container; with fake=True a deterministic fake derives features
-    from the byte stream (so the Spark plumbing — schema, batch
-    shape, partitioning — is exercised); with fake=False it raises
-    NotImplementedError where a real decoder would plug in."""
-
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                if not fake:
-                    raise NotImplementedError(
-                        "audio decode requires a codec library")
-                b = np.frombuffer(row.bytes, dtype=np.uint8)
-                out.append({"media_id": row.media_id,
-                            "n_samples": int(len(b) // 2),
-                            "sample_rate": 16000,
-                            "rms": float(np.sqrt(
-                                (b.astype(np.float64) ** 2).mean()))
-                            if len(b) else 0.0})
-            yield pd.DataFrame(out, columns=["media_id", "n_samples",
-                                             "sample_rate", "rms"])
-
-    return audio_df.select("media_id", "bytes").mapInPandas(
-        kernel, AUDIO_FEATURES_SCHEMA)
-
-
-FRAME_SAMPLE_SCHEMA = ("media_id string, frame_idx int, frame binary")
-
-
-def video_frame_sample(video_df, every_n: int = 10,
-                       frame_bytes: int = 256, fake: bool = True):
-    """STUB: video frame sampling. Deterministic fake slices the byte
-    stream into fixed-size pseudo-frames and keeps every n-th; a real
-    decoder would replace the slicing only — the mapInPandas shape,
-    schema and fan-out are what the engine owns."""
-
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                if not fake:
-                    raise NotImplementedError(
-                        "video decode requires a codec library")
-                b = row.bytes or b""
-                nframes = max(0, len(b) // frame_bytes)
-                for i in range(0, nframes, every_n):
-                    out.append({"media_id": row.media_id,
-                                "frame_idx": i,
-                                "frame": b[i * frame_bytes:
-                                           (i + 1) * frame_bytes]})
-            yield pd.DataFrame(out, columns=["media_id", "frame_idx",
-                                             "frame"])
-
-    return video_df.select("media_id", "bytes").mapInPandas(
-        kernel, FRAME_SAMPLE_SCHEMA)

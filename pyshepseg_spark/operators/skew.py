@@ -1,54 +1,14 @@
-"""Explicit skew handling (north rule: "partitioning / shuffle /
-skew handled explicitly").
+"""Explicit partitioning for small inputs (north rule:
+"partitioning / shuffle / skew handled explicitly").
 
-Two layers:
- 1. AQE skew-join splitting is always on (session.py) — handles
-    runtime-detected skew in sort-merge joins.
- 2. For aggregations and joins whose hot keys are known *a priori*
-    (a giant image's tiles, a hot LSH bucket, a dominant segment),
-    salting spreads one key over S subkeys: partial aggregate per
-    salt, then final merge — the classic two-phase rewrite.
+Skew itself is handled where it arises: AQE skew-join splitting is
+always on (session.py) for runtime-detected skew in sort-merge
+joins, and point_in_segment salts hot tiles by their point load
+(spatial.salt_count). This module keeps :func:`spread_small_scan`,
+which restores parallelism when a tiny scan feeds CPU-heavy work.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-
-def with_salt(df, num_salts: int, cols=("image_id",)):
-    """Add a deterministic salt column derived from row content (so
-    re-runs are stable): salt = xxhash64(exactly ``cols``) % S."""
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"with_salt: columns not in frame: {missing}")
-    h = F.xxhash64(*[F.col(c) for c in cols])
-    return df.withColumn("salt",
-                         F.pmod(h, F.lit(num_salts)).cast("int"))
-
-
-def salted_count(df, keys, num_salts: int = 8):
-    """Skew-safe groupBy(...).count(): partial count per (key, salt)
-    then merge. Equivalent result, bounded partition sizes."""
-    salted = df.withColumn(
-        "salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()),
-                       F.lit(num_salts)).cast("int"))
-    part = salted.groupBy(*keys, "salt").agg(
-        F.count("*").alias("pcnt"))
-    return part.groupBy(*keys).agg(F.sum("pcnt").alias("cnt"))
-
-
-def salted_broadcast_join(big, small, key: str, num_salts: int = 8):
-    """Join a skewed big side to a small dim by replicating the small
-    side across salts (broadcast both the dim and the salt space):
-    big rows scatter uniformly, no single reducer owns a hot key."""
-    bs = big.withColumn(
-        "salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()),
-                       F.lit(num_salts)).cast("int"))
-    ss = small.crossJoin(
-        F.broadcast(
-            small.sparkSession.range(num_salts)
-            .select(F.col("id").cast("int").alias("salt"))))
-    return bs.join(F.broadcast(ss), [key, "salt"]).drop("salt")
 
 
 def spread_small_scan(df, target: int | None = None):

@@ -9,10 +9,12 @@ answers
     equi-join of each point to the unique trimmed tile containing it
     (computed by grid arithmetic — no range join, no skew) followed
     by a vectorized raster-probe kernel.
-  - kNN segment lookups: points join segment centroids through a
-    Morton cell grid with ring expansion, then a row_number window
-    keeps the k nearest. Salting/AQE note: candidate lists are
-    bounded by cell occupancy; hot cells split by AQE skew join.
+  - exact kNN lookups (knn_points_exact, knn_segments_exact):
+    points join sites through a square cell grid with ring
+    expansion, a row_number window keeps the k nearest, and points
+    whose k-th candidate is not provably nearest fall back to a
+    broadcast join. Salting/AQE note: candidate lists are bounded by
+    cell occupancy; hot cells split by AQE skew join.
 
 Cells are Z-order (Morton) keys — the engine's H3/S2 analogue for
 per-image pixel space (public bit-interleaving technique).
@@ -166,45 +168,6 @@ def segment_centroids(pixels):
                  F.count("*").alias("npix")))
 
 
-def _neighbour_cells(cell_col, ring: int, shift: int, bits: int):
-    """Explode a centroid row into its (2*ring+1)^2 neighbourhood of
-    cells (cell-ring expansion for the kNN candidate join)."""
-    # decode x/y from morton then re-encode neighbours; done as a
-    # pandas UDF once per centroid row (tiny table), keeping the big
-    # point side pure-SQL.
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def nbrs(c: pd.Series) -> pd.Series:
-        def decode(v):
-            x = y = 0
-            for i in range(bits):
-                x |= ((v >> (2 * i)) & 1) << i
-                y |= ((v >> (2 * i + 1)) & 1) << i
-            return x, y
-
-        def encode(x, y):
-            v = 0
-            for i in range(bits):
-                v |= ((x >> i) & 1) << (2 * i)
-                v |= ((y >> i) & 1) << (2 * i + 1)
-            return v
-
-        out = []
-        for v in c:
-            x, y = decode(int(v))
-            cells = []
-            for dx in range(-ring, ring + 1):
-                for dy in range(-ring, ring + 1):
-                    nx, ny = x + dx, y + dy
-                    if nx >= 0 and ny >= 0:
-                        cells.append(encode(nx, ny))
-            out.append(cells)
-        return pd.Series(out)
-
-    return nbrs(cell_col)
-
-
 def range_join(points, intervals, point_id="point_id", v="v",
                interval_id="interval_id", lo="lo", hi="hi",
                bucket: int = 64):
@@ -326,34 +289,9 @@ def knn_points_exact(points, sites, k: int = 3, cell_size: int = 64,
 def knn_segments_exact(points, centroids, k: int = 3,
                        cell_size: int = 64, ring: int = 1):
     """Exact k nearest segment centroids per point (J5), grouped per
-    image — the provably-exact upgrade of knn_segments (same
-    candidate strategy, plus the bound check + fallback)."""
+    image (:func:`knn_points_exact` with image_id as the group)."""
     out = knn_points_exact(
         points, centroids, k=k, cell_size=cell_size, ring=ring,
         p_id="point_id", s_id="seg_id", px="x", py="y",
         sx="cx", sy="cy", group_cols=("image_id",))
     return out.withColumnRenamed("site_id", "seg_id")
-
-
-def knn_segments(points, centroids, k: int = 3, ring: int = 2,
-                 shift: int = 6, bits: int = 12):
-    """k nearest segment centroids per point: cell-ring candidate
-    equi-join + row_number window (SURVEY.md J5). Points whose ring
-    holds fewer than k centroids get fewer rows (callers widen the
-    ring if exactness at the tail matters)."""
-    c = centroids.withColumn("cell", cell_expr("cx", "cy", shift, bits))
-    c = c.withColumn("cells", _neighbour_cells(
-        F.col("cell"), ring, shift, bits))
-    c = c.select("image_id", "seg_id", "cx", "cy",
-                 F.explode("cells").alias("cell"))
-    p = points.withColumn("cell", cell_expr("x", "y", shift, bits))
-    cand = p.join(c, ["image_id", "cell"])
-    d2 = (F.pow(F.col("x") - F.col("cx"), 2)
-          + F.pow(F.col("y") - F.col("cy"), 2))
-    cand = cand.withColumn("dist", F.sqrt(d2))
-    w = Window.partitionBy("image_id", "point_id") \
-        .orderBy(F.col("dist").asc(), F.col("seg_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("image_id", "point_id", "x", "y", "seg_id",
-                    "dist", "rank"))

@@ -56,14 +56,21 @@ def pixels_long(final_tiles, band: int = 0):
     return final_tiles.select(*cols).mapInPandas(kernel, PIXELS_SCHEMA)
 
 
+def affine_geo(xcol, ycol, gt):
+    """F2: 6-term affine geotransform (tilingstats.py:1134-1135).
+    Returns the (easting, northing) column pair for pixel columns
+    ``xcol``, ``ycol``."""
+    ex = F.lit(gt[0]) + F.col(xcol) * F.lit(gt[1]) \
+        + F.col(ycol) * F.lit(gt[2])
+    ny = F.lit(gt[3]) + F.col(xcol) * F.lit(gt[4]) \
+        + F.col(ycol) * F.lit(gt[5])
+    return ex, ny
+
+
 def mean_coords(pixels, geotransform=(0.0, 1.0, 0.0, 0.0, 0.0, 1.0)):
     """U2 as pure SQL: per-segment mean easting/northing through the
-    6-term affine (tilingstats.py:1134-1135) — no UDF needed."""
-    gt = geotransform
-    ex = F.lit(gt[0]) + F.col("x") * F.lit(gt[1]) \
-        + F.col("y") * F.lit(gt[2])
-    ny = F.lit(gt[3]) + F.col("x") * F.lit(gt[4]) \
-        + F.col("y") * F.lit(gt[5])
+    6-term affine (:func:`affine_geo`) — no UDF needed."""
+    ex, ny = affine_geo("x", "y", geotransform)
     return (pixels.withColumn("easting", ex).withColumn("northing", ny)
             .groupBy("image_id", "seg_id")
             .agg(F.avg("easting").alias("mean_easting"),

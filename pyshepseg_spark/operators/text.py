@@ -2,8 +2,8 @@
 
 Language ID (n-gram heuristic), quality scoring, token counting, and
 document fingerprinting — all pure column expressions (JVM-side,
-whole-stage codegen) except the rolling-hash fingerprint, which is a
-vectorized pandas UDF.
+whole-stage codegen) except the md5 winnowing fingerprint
+(:func:`fingerprint_md5`), which is one vectorized Arrow pass.
 """
 
 from __future__ import annotations
@@ -422,38 +422,6 @@ def _gram_at(words, n):
     def f(i):
         return F.concat_ws(" ", F.slice(words, i + 1, n))
     return f
-
-
-def fingerprint(docs, text_col="text", window: int = 8):
-    """Winnowing-style document fingerprint: rolling polynomial hash
-    over the normalized text, minimum hash per sliding window,
-    distinct mins xor-folded to one int64. Vectorized pandas UDF."""
-
-    @pandas_udf("long")
-    def fp(texts: pd.Series) -> pd.Series:
-        out = np.zeros(len(texts), dtype=np.int64)
-        base = np.uint64(1099511628211)
-        for i, t in enumerate(texts):
-            if not t:
-                continue
-            b = np.frombuffer(" ".join(t.lower().split())
-                              .encode("utf-8"), dtype=np.uint8)
-            if len(b) < window:
-                out[i] = np.int64(b.astype(np.uint64).sum())
-                continue
-            # strided window hash (fnv-ish polynomial per window)
-            mat = np.lib.stride_tricks.sliding_window_view(b, window)
-            weights = base ** np.arange(window, dtype=np.uint64)
-            h = (mat.astype(np.uint64) * weights[None, :]).sum(axis=1)
-            mins = np.minimum.reduceat(
-                h, np.arange(0, len(h), window))
-            v = np.uint64(0)
-            for m in np.unique(mins):
-                v ^= m
-            out[i] = v.astype(np.int64)
-        return pd.Series(out)
-
-    return docs.withColumn("fingerprint", fp(F.col(text_col)))
 
 
 def select_token_budget(docs, budget, quality_col="quality",

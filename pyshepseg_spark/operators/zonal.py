@@ -316,59 +316,32 @@ def segment_and_histogram(images_df, cfg):
 
 
 def segment_stats(hist, percentiles=(50,)):
-    """Stage 2: exact stat finalizers over the value histogram.
+    """Stage 2: the fixed stats table over the value histogram —
+    :func:`segment_stats_selected` with the selection
 
-    Matches SegmentStats (tilingstats.py:922-1008):
-      min/max       — extreme values present
-      mean          — sum(v*c)/n
-      stddev        — population: sqrt(sum(c*(v-mean)^2)/n)
-      mode          — value with max count, ties -> smallest value
-                      (argmax over value-sorted arrays)
-      percentile p  — first value (ascending) whose cumulative count
-                      >= n*p/100 (exact; the reference's
-                      cumulative-count walk, tilingstats.py:969-986)
-      pixcount      — n
-    All derived with built-in JVM aggregations (max_by, windows) —
-    no UDFs in this stage.
-    """
-    g = ["image_id", "seg_id", "band"]
-    # ONE window pass (cumulative + total counts share the sort) and
-    # ONE aggregation: the histogram — and therefore everything
-    # upstream of it — is scanned exactly once. Percentiles are
-    # conditional mins over the cumulative counts; mode is
-    # max_by(val, (cnt, -val)); variance is single-pass in doubles
-    # (values <= 2^17 keep E[x^2]-E[x]^2 well above the double noise
-    # floor).
-    w_cum = (Window.partitionBy(*g).orderBy("val")
-             .rowsBetween(Window.unboundedPreceding, 0))
-    w_all = (Window.partitionBy(*g)
-             .rowsBetween(Window.unboundedPreceding,
-                          Window.unboundedFollowing))
-    h = (hist.withColumn("cum", F.sum("cnt").over(w_cum))
-         .withColumn("n", F.sum("cnt").over(w_all)))
-    vc = F.col("val").cast("double") * F.col("cnt")
-    v2c = (F.col("val").cast("double") * F.col("val").cast("double")
-           * F.col("cnt"))
-    mean = F.sum(vc) / F.sum("cnt")
-    aggs = [
-        F.min("val").alias("min_val"),
-        F.max("val").alias("max_val"),
-        F.sum("cnt").alias("pix_count"),
-        mean.alias("mean_val"),
-        F.sqrt(F.greatest(F.sum(v2c) / F.sum("cnt") - mean * mean,
-                          F.lit(0.0))).alias("stddev_val"),
-        F.max_by("val", F.struct(F.col("cnt"),
-                                 (-F.col("val")).alias("nv")))
-        .alias("mode_val"),
-    ]
-    for p in percentiles:
-        aggs.append(F.min(F.when(
-            F.col("cum") >= F.col("n") * F.lit(p) / F.lit(100),
-            F.col("val"))).alias(f"p{p:02d}_val"))
-    out = h.groupBy(*g).agg(*aggs)
+      min_val, max_val, pix_count, mean_val, stddev_val, mode_val,
+      then p{p:02d}_val per entry of ``percentiles``,
+
+    plus ``median_val`` (= p50_val) when 50 is selected. Matches
+    SegmentStats (tilingstats.py:922-1008); the finalizer semantics
+    are documented on :func:`segment_stats_selected`."""
+    sel = [("min_val", "min"), ("max_val", "max"),
+           ("pix_count", "pixcount"), ("mean_val", "mean"),
+           ("stddev_val", "stddev"), ("mode_val", "mode")]
+    sel += [(f"p{p:02d}_val", "percentile", p) for p in percentiles]
+    out = segment_stats_selected(hist, sel)
     if 50 in percentiles:
         out = out.withColumn("median_val", F.col("p50_val"))
     return out
+
+
+def _mode_smallest(value_col: str, count_col: str):
+    """O4: mode as max_by(value, (count, -value)) — ties resolve to
+    the smallest value, matching the reference's first-argmax over
+    value-sorted arrays (tilingstats.py:964)."""
+    return F.max_by(value_col,
+                    F.struct(F.col(count_col),
+                             (-F.col(value_col)).alias("nv")))
 
 
 _SELECTABLE_STATS = ("min", "max", "mean", "stddev", "median",
@@ -383,9 +356,25 @@ def segment_stats_selected(hist, selection):
     statName one of min/max/mean/stddev/median/mode/percentile/
     pixcount. Output columns take the caller's names and the
     reference's dtypes (mean/stddev float columns -> double,
-    everything else int -> long). Same one-window + one-aggregation
-    plan as segment_stats; the cumulative window is only added when
-    the selection needs an order statistic."""
+    everything else int -> long).
+
+    Exact finalizers (SegmentStats, tilingstats.py:922-1008):
+      min/max       — extreme values present
+      mean          — sum(v*c)/n
+      stddev        — population: sqrt(sum(c*(v-mean)^2)/n)
+      mode          — value with max count, ties -> smallest value
+                      (argmax over value-sorted arrays)
+      percentile p  — first value (ascending) whose cumulative count
+                      >= n*p/100 (exact; the reference's
+                      cumulative-count walk, tilingstats.py:969-986)
+      pixcount      — n
+    All derived with built-in JVM aggregations (max_by, windows) —
+    no UDFs in this stage. ONE window pass (cumulative + total counts
+    share the sort), added only when the selection needs an order
+    statistic, and ONE aggregation: the histogram — and therefore
+    everything upstream of it — is scanned exactly once. Variance is
+    single-pass in doubles (values <= 2^17 keep E[x^2]-E[x]^2 well
+    above the double noise floor)."""
     g = ["image_id", "seg_id", "band"]
     for sel in selection:
         if len(sel) not in (2, 3) or sel[1] not in _SELECTABLE_STATS:
@@ -431,9 +420,7 @@ def segment_stats_selected(hist, selection):
         "stddev": lambda: F.sqrt(F.greatest(
             F.sum(v2c) / F.sum("cnt") - mean * mean, F.lit(0.0))),
         "median": lambda: pctl(50).cast("long"),
-        "mode": lambda: F.max_by(
-            "val", F.struct(F.col("cnt"),
-                            (-F.col("val")).alias("nv"))).cast("long"),
+        "mode": lambda: _mode_smallest("val", "cnt").cast("long"),
         "pixcount": lambda: F.sum("cnt").cast("long"),
     }
     aggs = []
@@ -452,7 +439,6 @@ def global_stats_from_histogram(seg_sizes):
     cumulative window for the reference's histogram median (first
     bin whose cumulative count reaches half the pixels,
     utils.py:68-71)."""
-    from pyspark.sql import Window
     wcum = (Window.partitionBy("image_id").orderBy("seg_id")
             .rowsBetween(Window.unboundedPreceding, 0))
     wtot = Window.partitionBy("image_id")
@@ -467,9 +453,7 @@ def global_stats_from_histogram(seg_sizes):
         F.max("seg_id").alias("max_seg"),
         (F.sum(F.col("seg_id") * F.col("cnt"))
          / F.sum("cnt")).alias("mean_seg"),
-        F.max_by("seg_id", F.struct(F.col("cnt"),
-                                    (-F.col("seg_id")).alias("nv")))
-        .alias("mode_seg"),
+        _mode_smallest("seg_id", "cnt").alias("mode_seg"),
         F.sum("cnt").alias("pix_count")))
     return agg.join(med, "image_id")
 

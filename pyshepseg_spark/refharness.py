@@ -42,9 +42,9 @@ def install_reference_stubs():
     /root/reference/pyshepseg imports and runs as plain Python (the
     container has none of those libraries; the reference's jitted
     functions execute unjitted — semantically identical, just
-    slow)."""
-    if "numba" in sys.modules:
-        return
+    slow). Only modules absent from ``sys.modules`` are installed;
+    returns the names installed."""
+    stubs = {}
 
     numba = _mk_module("numba")
 
@@ -99,7 +99,7 @@ def install_reference_stubs():
     numba.core = core
     numba.typed = typed
     numba.experimental = exp
-    sys.modules.update({
+    stubs.update({
         "numba": numba, "numba.core": core,
         "numba.core.types": tmod, "numba.typed": typed,
         "numba.experimental": exp})
@@ -113,7 +113,7 @@ def install_reference_stubs():
 
     skc.KMeans = KMeans
     sk.cluster = skc
-    sys.modules.update({"sklearn": sk, "sklearn.cluster": skc})
+    stubs.update({"sklearn": sk, "sklearn.cluster": skc})
 
     # osgeo / scipy stand-ins (import-time only; nothing here touches
     # GDAL rasters)
@@ -133,8 +133,8 @@ def install_reference_stubs():
     for sub in ["gdal", "osr", "gdal_array"]:
         sm = _anymod(f"osgeo.{sub}")
         setattr(osgeo, sub, sm)
-        sys.modules[f"osgeo.{sub}"] = sm
-    sys.modules["osgeo"] = osgeo
+        stubs[f"osgeo.{sub}"] = sm
+    stubs["osgeo"] = osgeo
     scipy = _anymod("scipy")
     scipy.stats = _anymod("scipy.stats")
 
@@ -147,18 +147,32 @@ def install_reference_stubs():
                                count=int(c.max()))
 
     scipy.stats.mode = _mode
-    sys.modules["scipy"] = scipy
-    sys.modules["scipy.stats"] = scipy.stats
+    stubs["scipy"] = scipy
+    stubs["scipy.stats"] = scipy.stats
+
+    installed = [n for n in stubs if n not in sys.modules]
+    for n in installed:
+        sys.modules[n] = stubs[n]
+    return installed
 
 
 def import_reference():
     """Install the stubs and return (pyshepseg.shepseg,
-    pyshepseg.tiling) from /root/reference."""
-    install_reference_stubs()
+    pyshepseg.tiling) from ``REFERENCE_PATH``. If the import raises
+    (no checkout), the stubs this call installed are removed again, so
+    they cannot leak into unrelated code (``inspect`` trips over the
+    fake ``osgeo``/``scipy`` modules); after a successful import they
+    stay, because the reference looks them up at call time."""
+    installed = install_reference_stubs()
     if REFERENCE_PATH not in sys.path:
         sys.path.insert(0, REFERENCE_PATH)
-    import pyshepseg.shepseg as refshepseg
-    import pyshepseg.tiling as reftiling
+    try:
+        import pyshepseg.shepseg as refshepseg
+        import pyshepseg.tiling as reftiling
+    except BaseException:
+        for n in installed:
+            sys.modules.pop(n, None)
+        raise
     return refshepseg, reftiling
 
 

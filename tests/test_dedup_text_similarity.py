@@ -10,15 +10,15 @@ from pyspark.sql import functions as F
 from pyshepseg_spark.operators.dedup import (embedding_near_dups,
                                              exact_duplicates,
                                              minhash_lsh_pairs,
-                                             minhash_signatures,
+                                             minhash_signatures_md5,
                                              ngram_jaccard_pairs,
-                                             simhash,
+                                             simhash_md5,
                                              simhash_near_dups)
 from pyshepseg_spark.operators.similarity import (brute_force_topk,
                                                   ivf_topk,
                                                   train_ivf_centroids)
-from pyshepseg_spark.operators.text import (fingerprint, language_id,
-                                            quality_score,
+from pyshepseg_spark.operators.text import (fingerprint_md5,
+                                            language_id, quality_score,
                                             token_counts)
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -54,7 +54,7 @@ def test_minhash_estimates_jaccard(spark):
     pdf = pd.DataFrame({"doc_id": [1, 2, 3],
                         "text": [base, near, far]})
     df = spark.createDataFrame(pdf)
-    sigs = minhash_signatures(df, num_hashes=64, k=3)
+    sigs = minhash_signatures_md5(df, num_hashes=64, k=3)
     pairs = minhash_lsh_pairs(sigs, num_hashes=64, bands=16).toPandas()
     d = {(r.a, r.b): r.est_jaccard for r in pairs.itertuples()}
     assert d.get((1, 2), 0) > 0.5       # near-dups bucket together
@@ -72,9 +72,10 @@ def test_simhash_near_dups(spark):
     far = " ".join(f"other{i}" for i in range(200))
     df = spark.createDataFrame(pd.DataFrame(
         {"doc_id": [1, 2, 3], "text": [base, near, far]}))
-    s = simhash(df, k=3)
-    # blocks >= max_hamming + 1 (and 64 % 16 == 0): guaranteed recall
-    pairs = simhash_near_dups(s, max_hamming=8, blocks=16).toPandas()
+    s = simhash_md5(df, k=3)
+    # blocks >= max_hamming + 1 (and 28 % 14 == 0): guaranteed recall
+    pairs = simhash_near_dups(s, max_hamming=8, blocks=14,
+                              hash_bits=28).toPandas()
     keys = {(r.a, r.b) for r in pairs.itertuples()}
     assert (1, 2) in keys
     assert (1, 3) not in keys
@@ -138,10 +139,12 @@ def test_token_counts_and_fingerprint(spark, docs):
     out = token_counts(docs.limit(20)).toPandas()
     assert (out.n_ws_tokens > 0).all()
     assert (out.n_bpe_tokens >= out.n_ws_tokens).all()
-    fp = fingerprint(docs.limit(20)).toPandas()
+    sample = docs.limit(20).localCheckpoint()
+    fp = fingerprint_md5(sample).toPandas().sort_values("doc_id")
+    assert len(fp) == 20
     assert fp.fingerprint.nunique() > 15  # near-unique fingerprints
     # determinism
-    fp2 = fingerprint(docs.limit(20)).toPandas()
+    fp2 = fingerprint_md5(sample).toPandas().sort_values("doc_id")
     assert (fp.fingerprint.to_numpy()
             == fp2.fingerprint.to_numpy()).all()
 
@@ -1336,7 +1339,10 @@ def test_word_gram_sets_matches_jvm_hof(spark):
     # i -> concat_ws(' ', slice(w, i+1, k)))) over
     # w = split(lower(text), '\s+') EXACTLY (values AND first-
     # occurrence order) on every whitespace/case/short-doc edge.
-    from pyshepseg_spark.operators.dedup import word_gram_sets
+    # normalized_text output is the gram source of
+    # ngram_jaccard_pairs, so it is pinned as a second input.
+    from pyshepseg_spark.operators.dedup import (normalized_text,
+                                                 word_gram_sets)
     rows = [
         (0, None),
         (1, ""),
@@ -1355,15 +1361,19 @@ def test_word_gram_sets_matches_jvm_hof(spark):
         (14, " \t\n "),
         (15, "one two three four five six seven eight nine ten"),
     ]
-    d = spark.createDataFrame(rows, ["doc_id", "text"])
-    for k in (2, 3, 5):
-        words = F.split(F.lower(F.col("text")), r"\s+")
-        idx = F.sequence(F.lit(0),
-                         F.greatest(F.size(words) - k, F.lit(0)))
-        jvm = F.array_distinct(F.transform(
-            idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, k))))
-        want = {r["doc_id"]: r["g"]
-                for r in d.select("doc_id", jvm.alias("g")).collect()}
-        got = {r["doc_id"]: r["grams"]
-               for r in word_gram_sets(d, k=k).collect()}
-        assert got == want
+    raw = spark.createDataFrame(rows, ["doc_id", "text"])
+    norm = raw.select("doc_id",
+                      normalized_text(F.col("text")).alias("text"))
+    for d in (raw, norm):
+        for k in (2, 3, 5):
+            words = F.split(F.lower(F.col("text")), r"\s+")
+            idx = F.sequence(F.lit(0),
+                             F.greatest(F.size(words) - k, F.lit(0)))
+            jvm = F.array_distinct(F.transform(
+                idx,
+                lambda i: F.concat_ws(" ", F.slice(words, i + 1, k))))
+            want = {r["doc_id"]: r["g"] for r in
+                    d.select("doc_id", jvm.alias("g")).collect()}
+            got = {r["doc_id"]: r["grams"]
+                   for r in word_gram_sets(d, k=k).collect()}
+            assert got == want

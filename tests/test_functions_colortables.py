@@ -1,39 +1,7 @@
-import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
-from pyshepseg_spark.functions.expressions import (affine_geo,
-                                                   mode_tiebreak_smallest,
-                                                   recode_with_offset,
-                                                   spectral_dist_sqr)
 from pyshepseg_spark.operators.colortables import (colour_ramp_from_stat,
                                                    random_colour_table)
-
-
-def test_spectral_dist_and_affine(spark):
-    df = spark.createDataFrame(pd.DataFrame({
-        "a": [[1.0, 2.0, 3.0]], "b": [[4.0, 6.0, 3.0]],
-        "x": [10], "y": [20]}))
-    out = df.select(
-        spectral_dist_sqr(F.col("a"), F.col("b")).alias("d"),
-        *[c.alias(n) for c, n in
-          zip(affine_geo("x", "y", (100.0, 2.0, 0.0, 50.0, 0.0,
-                                    -1.0)), ["ex", "ny"])]).first()
-    assert out["d"] == 9 + 16
-    assert out["ex"] == 120.0 and out["ny"] == 30.0
-
-
-def test_recode_and_mode(spark):
-    df = spark.createDataFrame(pd.DataFrame({
-        "seg": [0, 1, 5], "off": [10, 10, 10]}))
-    got = df.select(recode_with_offset(
-        F.col("seg"), F.col("off")).alias("r")).toPandas()
-    assert got.r.tolist() == [0, 11, 15]
-    h = spark.createDataFrame(pd.DataFrame({
-        "g": [1, 1, 1], "val": [7, 3, 9], "cnt": [2, 2, 1]}))
-    m = h.groupBy("g").agg(
-        mode_tiebreak_smallest("val", "cnt").alias("mode")).first()
-    assert m["mode"] == 3  # tie between 7 and 3 -> smallest value
 
 
 def test_colour_tables(spark):

@@ -7,10 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from pyshepseg_spark.operators.multimodal import (audio_features,
-                                                  image_features,
-                                                  resize_images,
-                                                  video_frame_sample)
+from pyshepseg_spark.operators.multimodal import image_features
 from pyshepseg_spark.sources.codec import decode_image
 
 
@@ -25,33 +22,6 @@ def test_image_features(spark, images_fixture):
     got = out[out.image_id == row["image_id"]].sort_values("band")
     assert np.allclose(got.band_mean.to_numpy(), expect)
     assert ((got.nonnull_frac > 0.9) & (got.nonnull_frac < 1.0)).all()
-
-
-def test_resize_images(spark, images_fixture):
-    pdf, _, images = images_fixture
-    out = resize_images(images, factor=2).toPandas()
-    row = out[out.image_id == pdf.iloc[0]["image_id"]].iloc[0]
-    assert row.w == pdf.iloc[0]["w"] // 2
-    small = decode_image(row["bytes"], row["fmt"], row.w, row.h)
-    big = decode_image(pdf.iloc[0]["bytes"], pdf.iloc[0]["fmt"],
-                       pdf.iloc[0]["w"], pdf.iloc[0]["h"])
-    expect = big[:, :row.h * 2, :row.w * 2].reshape(
-        3, row.h, 2, row.w, 2).mean(axis=(2, 4)).astype(np.uint16)
-    assert np.array_equal(small, expect)
-
-
-def test_audio_video_stub_plumbing(spark):
-    media = spark.createDataFrame(pd.DataFrame({
-        "media_id": ["m1", "m2"],
-        "bytes": [b"\x01\x02" * 2000, b"\x03\x04" * 3000]}))
-    af = audio_features(media, fake=True).toPandas()
-    assert list(af.columns) == ["media_id", "n_samples",
-                                "sample_rate", "rms"]
-    assert (af.n_samples > 0).all()
-    vf = video_frame_sample(media, every_n=2, frame_bytes=256,
-                            fake=True).toPandas()
-    assert (vf.frame_idx % 2 == 0).all()
-    assert all(len(b) == 256 for b in vf.frame)
 
 
 def test_streaming_segment_completion(spark, tmp_path):

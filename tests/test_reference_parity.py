@@ -9,20 +9,15 @@ functions execute as plain Python — semantically identical, just
 slow — which is why the images here are small.
 """
 
-import sys
-
 import numpy as np
 import pytest
 
-from pyshepseg_spark.refharness import install_reference_stubs
+from pyshepseg_spark.refharness import import_reference
 
 
 @pytest.fixture(scope="module")
 def refseg():
-    install_reference_stubs()
-    sys.path.insert(0, "/root/reference")
-    import pyshepseg.shepseg as refmod
-    return refmod
+    return import_reference()[0]
 
 
 @pytest.mark.parametrize("seed,four", [(0, False), (1, True)])

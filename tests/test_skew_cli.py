@@ -1,46 +1,4 @@
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-
-from pyshepseg_spark.operators.skew import (salted_broadcast_join,
-                                            salted_count, with_salt)
-
-
-def test_with_salt_hashes_requested_cols(spark):
-    df = spark.createDataFrame(pd.DataFrame(
-        {"a": [1, 2, 3, 4], "b": [9, 9, 9, 9], "c": list("wxyz")}))
-    sa = with_salt(df, 1000, cols=("a",)).toPandas()["salt"]
-    sb = with_salt(df, 1000, cols=("b",)).toPandas()["salt"]
-    sc = with_salt(df, 1000, cols=("a", "c")).toPandas()["salt"]
-    assert sb.nunique() == 1          # constant col -> constant salt
-    assert sa.nunique() > 1           # varying col -> varying salt
-    assert list(sa) != list(sc)       # col-set changes the salt
-    assert ((sa >= 0) & (sa < 1000)).all()
-    with pytest.raises(ValueError, match="not in frame"):
-        with_salt(df, 8, cols=("nope",))
-
-
-def test_salted_count_equals_plain(spark):
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 7).alias("k"))
-    plain = {r["k"]: r["cnt"] for r in
-             df.groupBy("k").agg(F.count("*").alias("cnt"))
-             .collect()}
-    salted = {r["k"]: r["cnt"] for r in
-              salted_count(df, ["k"], num_salts=8).collect()}
-    assert plain == salted
-
-
-def test_salted_broadcast_join_equals_plain(spark):
-    big = spark.range(0, 3000).select(
-        (F.col("id") % 3).alias("k"), F.col("id").alias("v"))
-    small = spark.createDataFrame(pd.DataFrame(
-        {"k": [0, 1, 2], "name": ["a", "b", "c"]}))
-    plain = big.join(small, "k").groupBy("name").count().collect()
-    salted = salted_broadcast_join(big, small, "k").groupBy(
-        "name").count().collect()
-    assert sorted((r["name"], r["count"]) for r in plain) == \
-        sorted((r["name"], r["count"]) for r in salted)
 
 
 def test_cli_stats_with_nodata_requires_null_val(tmp_path):

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyshepseg_spark.operators.segment import assemble_image
-from pyshepseg_spark.operators.spatial import (knn_segments,
+from pyshepseg_spark.operators.spatial import (knn_segments_exact,
                                                point_in_segment,
                                                salt_count,
                                                segment_centroids)
@@ -74,11 +74,17 @@ def test_mean_coords_match(spark, images_fixture, final_tiles):
     iid = "img_000001"
     _, seg = _image_and_seg(images_fixture, final_tiles, iid)
     pix = pixels_long(final_tiles)
-    mc = mean_coords(pix).filter(F.col("image_id") == iid).toPandas()
-    for r in mc.itertuples(index=False):
-        yy, xx = np.nonzero(seg == r.seg_id)
-        assert np.isclose(r.mean_easting, xx.mean(), atol=3e-4)
-        assert np.isclose(r.mean_northing, yy.mean(), atol=3e-4)
+    for gt in [(0.0, 1.0, 0.0, 0.0, 0.0, 1.0),
+               (100.0, 2.0, 0.5, 50.0, 0.25, -1.0)]:  # rotated
+        mc = mean_coords(pix, gt).filter(F.col("image_id") == iid) \
+            .toPandas()
+        assert len(mc) == seg.max()
+        for r in mc.itertuples(index=False):
+            yy, xx = np.nonzero(seg == r.seg_id)
+            ex = gt[0] + xx * gt[1] + yy * gt[2]
+            ny = gt[3] + xx * gt[4] + yy * gt[5]
+            assert np.isclose(r.mean_easting, ex.mean(), atol=3e-4)
+            assert np.isclose(r.mean_northing, ny.mean(), atol=3e-4)
 
 
 def test_edge_pixels_udf(spark, final_tiles):
@@ -207,8 +213,10 @@ def test_knn_matches_brute_force(spark, images_fixture, final_tiles):
     points = spark.createDataFrame(pts)
     pix = pixels_long(final_tiles)
     cent = segment_centroids(pix)
-    got = knn_segments(points, cent, k=1, ring=3, shift=5).toPandas()
-    cents = cent.toPandas()
+    got = knn_segments_exact(points, cent, k=1, cell_size=32,
+                             ring=1).toPandas()
+    # ties break to the smallest seg_id, as argmin over sorted ids
+    cents = cent.toPandas().sort_values("seg_id")
     for iid in pdf.image_id[:1]:
         cc = cents[cents.image_id == iid]
         for r in pts[pts.image_id == iid].itertuples(index=False):
@@ -216,8 +224,7 @@ def test_knn_matches_brute_force(spark, images_fixture, final_tiles):
             best = cc.seg_id.to_numpy()[np.argmin(d.to_numpy())]
             g = got[(got.image_id == iid)
                     & (got.point_id == r.point_id)]
-            if len(g):  # ring may miss only when no centroid nearby
-                assert g.iloc[0].seg_id == best
+            assert len(g) == 1 and g.iloc[0].seg_id == best
 
 
 def test_subset_with_mask(spark, images_fixture, final_tiles):
@@ -517,15 +524,20 @@ def test_fill_missing_stats_reports_missing_value(spark):
     from pyshepseg_spark.constants import MISSING_STATS_VALUE
     from pyshepseg_spark.operators.zonal import (fill_missing_stats,
                                                  segment_stats)
+    # segment 3 ties on count (7 and 3 both twice): the mode is the
+    # smaller value (tilingstats.py:964)
     hist = spark.createDataFrame(
-        [("i", 1, 0, 5, 3), ("i", 1, 0, 7, 1)],
+        [("i", 1, 0, 5, 3), ("i", 1, 0, 7, 1),
+         ("i", 3, 0, 7, 2), ("i", 3, 0, 3, 2), ("i", 3, 0, 9, 1)],
         "image_id string, seg_id long, band int, val long, cnt long")
     stats = segment_stats(hist, percentiles=(50,))
     all_segs = spark.createDataFrame(
-        [("i", 1), ("i", 2)], "image_id string, seg_id long")
+        [("i", 1), ("i", 2), ("i", 3)], "image_id string, seg_id long")
     out = {r["seg_id"]: r for r in
            fill_missing_stats(stats, all_segs).collect()}
     assert out[1]["pix_count"] == 4
+    assert out[1]["mode_val"] == 5
+    assert out[3]["mode_val"] == 3
     assert out[2]["pix_count"] == 0
     assert out[2]["mean_val"] == MISSING_STATS_VALUE
     assert out[2]["median_val"] == MISSING_STATS_VALUE
