@@ -545,13 +545,87 @@ def remove_duplicated_spans(docs, text_col="text", id_col="doc_id",
             .fillna({"clean_text": ""}))
 
 
+# Pair lists up to this many edges run connected components as one
+# driver collect + union-find; longer ones take the distributed
+# label propagation.
+_CC_DRIVER_EDGES = 2_000_000
+
+
+def connected_components(edges):
+    """Connected components of an (a long, b long) edge list. Returns
+    (v, root) with root = min vertex id of v's component.
+
+    Hybrid strategy: the near-dup pair list scales with duplicates,
+    not corpus size, so up to ``_CC_DRIVER_EDGES`` edges a driver-side
+    union-find (one collect, zero shuffle rounds) is both faster and
+    simpler; beyond that the distributed label propagation of
+    :func:`_cc_distributed` takes over."""
+    # single probe job: collect up to threshold+1 rows and decide —
+    # if the list fits, those rows ARE the union-find input (no
+    # second collect/count job)
+    rows = edges.limit(_CC_DRIVER_EDGES + 1).collect()
+    if len(rows) <= _CC_DRIVER_EDGES:
+        # driver-sized by construction: hint downstream joins to
+        # broadcast the label table
+        return F.broadcast(_cc_driver(edges.sparkSession, rows))
+    return _cc_distributed(edges)
+
+
+def _cc_driver(spark, rows):
+    parent = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for r in rows:
+        ra, rb = find(r["a"]), find(r["b"])
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    verts = {r["a"] for r in rows} | {r["b"] for r in rows}
+    return spark.createDataFrame([(v, find(v)) for v in verts],
+                                 "v long, root long")
+
+
+def _cc_distributed(edges):
+    """Distributed min-label propagation. A label moves one hop per
+    round, so the loop runs until no root changes: any fixed round
+    cap would split every component whose diameter exceeds it. It
+    terminates because every change strictly lowers a root.
+    localCheckpoint between rounds cuts lineage (SURVEY.md §7 hard
+    part 5)."""
+    sym = (edges.select(F.col("a").alias("v"), F.col("b").alias("n"))
+           .union(edges.select(F.col("b").alias("v"),
+                               F.col("a").alias("n")))
+           .distinct().localCheckpoint())
+    labels = (sym.select("v").distinct()
+              .withColumn("root", F.col("v")).localCheckpoint())
+    while True:
+        # sym is symmetric, so every v has a candidate
+        cand = (sym.join(labels.select(F.col("v").alias("n"),
+                                       F.col("root").alias("nroot")),
+                         "n")
+                .groupBy("v").agg(F.min("nroot").alias("cand")))
+        new = (labels.join(cand, "v")
+               .select("v", F.least("root", "cand").alias("root"),
+                       (F.col("cand") < F.col("root")).alias("moved"))
+               .localCheckpoint())
+        labels = new.select("v", "root")
+        if new.filter("moved").count() == 0:
+            return labels
+
+
 def duplicate_groups(pairs, a_col="a", b_col="b"):
-    """Transitive dedup clusters: connected components over the
-    near-dup pair list (union-find on the driver for pair lists that
-    fit — they scale with duplicates, not corpus; reuse the
-    distributed CC in operators.segment for larger lists). Returns
-    (doc_id, group_rep) with group_rep = min doc id of the cluster —
-    the canonical representative to keep.
+    """Transitive dedup clusters: :func:`connected_components` over
+    the near-dup pair list. Returns (doc_id, group_rep) with
+    group_rep = min doc id of the cluster — the canonical
+    representative to keep.
 
     Integer ids run through CC directly. Non-integer ids (URLs,
     UUIDs, content hashes — the common real-corpus case) are
@@ -559,14 +633,9 @@ def duplicate_groups(pairs, a_col="a", b_col="b"):
     an explicit collision check over the pair-list id universe (it
     scales with duplicates, not corpus size) — a silent cast of a
     string id would null-collapse every document into one group."""
-    from pyspark.sql import functions as F
-
-    from .segment import connected_components
-
     dt = dict(pairs.dtypes)[a_col]
     if dt in ("tinyint", "smallint", "int", "bigint"):
-        edges = pairs.select(F.lit("_").alias("image_id"),
-                             F.col(a_col).cast("long").alias("a"),
+        edges = pairs.select(F.col(a_col).cast("long").alias("a"),
                              F.col(b_col).cast("long").alias("b"))
         cc = connected_components(edges)
         return cc.select(F.col("v").alias("doc_id"),
@@ -582,8 +651,7 @@ def duplicate_groups(pairs, a_col="a", b_col="b"):
         raise ValueError(
             f"xxhash64 collision among {chk['n']} duplicate-pair "
             f"ids; rerun with pre-assigned integer ids")
-    edges = pairs.select(F.lit("_").alias("image_id"),
-                         F.xxhash64(a_col).alias("a"),
+    edges = pairs.select(F.xxhash64(a_col).alias("a"),
                          F.xxhash64(b_col).alias("b"))
     cc = connected_components(edges)
     lab = ids.join(cc, ids.hid == cc.v).select("doc_id", "root")

@@ -9,29 +9,16 @@ Spark-first re-expression of the reference's tiled pipeline
             into the tile kernel by default
   doOne     per-tile segmentation, mapInPandas — one row per tile, no
             shuffle, embarrassingly parallel (tiling.py worker loop)
-  stitch    DEFAULT mode="sequential": EXACT replay of the
-            reference's order-dependent recode recurrence
-            (stitchTiles/recodeTile/relabelSegments,
+  stitch    EXACT replay of the reference's order-dependent recode
+            recurrence (stitchTiles/recodeTile/relabelSegments,
             tiling.py:950-1306) over boundary strips only —
             sequential_stitch_mapping streams each image's tiles
             row-major with a one-tile-row rolling cache, parallel
             across images, bitwise-equal mosaics on every input.
-            mode="cc": the order-independent alternative (strip
-            equi-join -> mode edges -> connected-components ->
-            dense relabel) for intra-image parallelism on single
-            giant mosaics.
 
 Segment IDs: per-image int64 ("gid" = per-tile prefix-sum offset +
 local id). uint32 would overflow at 10^12-image scale (SURVEY.md §7
 hard part 4); global uniqueness is the composite (image_id, seg_id).
-
-Documented deviation in mode="cc" ONLY: the reference recodes a
-crossing segment to the mode of the neighbour's *already recoded*
-strip, lets left-overlap recodes overwrite top-overlap ones, and can
-recode a segment to null — order-dependent effects the transitive
-closure over raw-label modes resolves differently on chained
-boundary segments (observed on the flagship fixture; the sequential
-default reproduces them all exactly).
 """
 
 from __future__ import annotations
@@ -41,7 +28,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..constants import MAX_CLUMP_SIZE
@@ -463,191 +450,6 @@ def checkpoint_with_meta(seg_tiles):
     return st, meta
 
 
-def extract_strips(seg_tiles_off, overlap: int):
-    """Boundary strips keyed by the consumer tile, as a PURE SQL
-    explode over the strip columns the segment kernel already emitted
-    (local uint32 ids + the tile's gid offset). Producer strips are
-    the bottom/right overlap bands (tiling.py:1037-1040); consumer
-    strips the top/left overlaps (tiling.py:1101-1102). No kernel —
-    the fat tile rows are never re-read."""
-    s = F.struct
-    specs = F.array(
-        s(F.lit("H").alias("axis"), F.col("tcol").alias("ktc"),
-          F.col("trow").alias("ktr"), F.lit("A").alias("role"),
-          F.lit(overlap).alias("srows"), F.col("xsize").alias("scols"),
-          F.col("strip_top").alias("strip")),
-        s(F.lit("V").alias("axis"), F.col("tcol").alias("ktc"),
-          F.col("trow").alias("ktr"), F.lit("A").alias("role"),
-          F.col("ysize").alias("srows"), F.lit(overlap).alias("scols"),
-          F.col("strip_left").alias("strip")),
-        s(F.lit("H").alias("axis"), F.col("tcol").alias("ktc"),
-          (F.col("trow") + 1).alias("ktr"), F.lit("B").alias("role"),
-          F.lit(overlap).alias("srows"), F.col("xsize").alias("scols"),
-          F.col("strip_bottom").alias("strip")),
-        s(F.lit("V").alias("axis"), (F.col("tcol") + 1).alias("ktc"),
-          F.col("trow").alias("ktr"), F.lit("B").alias("role"),
-          F.col("ysize").alias("srows"), F.lit(overlap).alias("scols"),
-          F.col("strip_right").alias("strip")))
-    return (seg_tiles_off
-            .select("image_id", "offset",
-                    F.explode(F.filter(
-                        specs, lambda e: e["strip"].isNotNull()))
-                    .alias("e"))
-            .select("image_id", "offset", "e.axis", "e.ktc", "e.ktr",
-                    "e.role", "e.srows", "e.scols", "e.strip"))
-
-
-def correspondence_edges(strips):
-    """J1: bounded-neighbour equi-join of consumer (A) and producer
-    (B) strips on (image_id, axis, tile key), then a per-pair kernel
-    emitting (gid_a -> mode of B under footprint) for every A-segment
-    crossing the overlap midline (tiling.py:1128-1306). Strips carry
-    local ids; the pair kernel applies each side's gid offset."""
-    a = strips.filter(F.col("role") == "A").select(
-        "image_id", "axis", "ktc", "ktr", "srows", "scols",
-        F.col("strip").alias("strip_a"),
-        F.col("offset").alias("off_a"))
-    b = strips.filter(F.col("role") == "B").select(
-        "image_id", "axis", "ktc", "ktr",
-        F.col("strip").alias("strip_b"),
-        F.col("offset").alias("off_b"))
-    pairs = a.join(b, ["image_id", "axis", "ktc", "ktr"])
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                sa = np.frombuffer(row.strip_a, dtype="<u4").reshape(
-                    row.srows, row.scols).astype(np.int64)
-                sb = np.frombuffer(row.strip_b, dtype="<u4").reshape(
-                    row.srows, row.scols).astype(np.int64)
-                sa = np.where(sa > 0, sa + row.off_a, 0)
-                sb = np.where(sb > 0, sb + row.off_b, 0)
-                n = 0 if row.axis == "H" else 1
-                mid = sa.shape[n] // 2
-                flat = sa.ravel()
-                order = np.argsort(flat, kind="stable")
-                svals = flat[order]
-                bounds = np.flatnonzero(np.diff(svals)) + 1
-                starts = np.concatenate([[0], bounds])
-                ends = np.concatenate([bounds, [len(svals)]])
-                coords = (order // sa.shape[1] if n == 0
-                          else order % sa.shape[1])
-                fb = sb.ravel()
-                for s, e in zip(starts, ends):
-                    gid = int(svals[s])
-                    if gid == 0:
-                        continue
-                    cs = coords[s:e]
-                    if not (cs.min() < mid <= cs.max()):
-                        continue
-                    vals, cnts = np.unique(fb[order[s:e]],
-                                           return_counts=True)
-                    mode = int(vals[np.argmax(cnts)])
-                    if mode != 0:
-                        rows.append({"image_id": row.image_id,
-                                     "a": gid, "b": mode})
-            yield pd.DataFrame(rows, columns=["image_id", "a", "b"])
-
-    return pairs.mapInPandas(kernel, "image_id string, a long, b long")
-
-
-def connected_components(edges, max_rounds=64,
-                         driver_threshold=2_000_000):
-    """J2: connected components over the correspondence edge list,
-    replacing the reference's order-dependent sequential recode chain
-    with an order-independent closure. Returns (image_id, v, root)
-    with root = min gid of the component.
-
-    Hybrid strategy: the edge list scales with *boundary-crossing
-    segments* (thousands per billion pixels), not pixels, so up to
-    ``driver_threshold`` edges a driver-side union-find (one collect,
-    zero shuffle rounds) is both faster and simpler; beyond that the
-    distributed label-propagation fixpoint below takes over.
-    localCheckpoint between rounds cuts lineage (SURVEY.md §7 hard
-    part 5)."""
-    # single probe job: collect up to threshold+1 rows and decide —
-    # if the list fits, those rows ARE the union-find input (no
-    # second collect/count job)
-    rows = edges.limit(driver_threshold + 1).collect()
-    if len(rows) <= driver_threshold:
-        # driver-sized by construction: hint downstream joins to
-        # broadcast the label table instead of sort-merge shuffling
-        # the (much larger) exploded gid frames against it
-        return F.broadcast(_cc_driver(edges, rows))
-    return _cc_distributed(edges, max_rounds)
-
-
-def _cc_driver(edges, rows=None):
-    if rows is None:
-        rows = edges.collect()
-    parent = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for r in rows:
-        ka = (r["image_id"], r["a"])
-        kb = (r["image_id"], r["b"])
-        ra, rb = find(ka), find(kb)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    out = [(k[0], k[1], find(k)[1])
-           for k in set(parent) | {(r["image_id"], r["a"])
-                                   for r in rows}
-           | {(r["image_id"], r["b"]) for r in rows}]
-    spark = edges.sparkSession
-    return spark.createDataFrame(out, "image_id string, v long, "
-                                      "root long")
-
-
-def _cc_distributed(edges, max_rounds=64):
-    """Distributed min-label propagation (for mosaics whose edge list
-    exceeds driver memory)."""
-    sym = (edges.select("image_id", F.col("a").alias("v"),
-                        F.col("b").alias("n"))
-           .union(edges.select("image_id", F.col("b").alias("v"),
-                               F.col("a").alias("n"))))
-    sym = sym.distinct().localCheckpoint()
-    labels = (sym.select(F.col("image_id").alias("l_img"),
-                         F.col("v").alias("l_v"))
-              .distinct()
-              .withColumn("root", F.col("l_v"))
-              .localCheckpoint())
-    for _ in range(max_rounds):
-        nbr = labels.select(F.col("l_img").alias("n_img"),
-                            F.col("l_v").alias("n_v"),
-                            F.col("root").alias("n_root"))
-        cand = (sym.join(nbr, (sym.image_id == nbr.n_img)
-                         & (sym.n == nbr.n_v))
-                .groupBy(sym.image_id, sym.v)
-                .agg(F.min("n_root").alias("cand"))
-                .select(F.col("image_id").alias("c_img"),
-                        F.col("v").alias("c_v"), "cand"))
-        new = labels.join(cand, (labels.l_img == cand.c_img)
-                          & (labels.l_v == cand.c_v), "left")
-        changed = new.filter(
-            F.coalesce(F.col("cand"), F.col("root"))
-            < F.col("root")).count()
-        labels = (new.select(
-            "l_img", "l_v",
-            F.least(F.col("root"),
-                    F.coalesce(F.col("cand"),
-                               F.col("root"))).alias("root"))
-            .localCheckpoint())
-        if changed == 0:
-            break
-    return labels.select(F.col("l_img").alias("image_id"),
-                         F.col("l_v").alias("v"), "root")
-
-
 MAPPING_SCHEMA = ("image_id string, tcol int, trow int, gid long, "
                   "final long")
 
@@ -827,61 +629,6 @@ def sequential_stitch_mapping(meta, overlap: int,
     return df.mapInPandas(kernel, schema)
 
 
-def build_mapping(seg_tiles_off, cc_labels):
-    """gid -> final dense per-image segment id.
-
-    Final IDs are 1..N per image, dense-ranked over the CC roots of
-    *anchored* segments (the reference's fresh-ID rule means exactly
-    the anchored segments receive identity; W1/W2 dense relabel).
-    """
-    anchored = seg_tiles_off.select(
-        "image_id", "offset",
-        F.explode("anchored").alias("local"))
-    anchored = anchored.select(
-        "image_id", (F.col("local") + F.col("offset")).alias("gid"))
-    roots = (anchored.join(cc_labels,
-                           (anchored.image_id == cc_labels.image_id)
-                           & (anchored.gid == cc_labels.v), "left")
-             .select(anchored.image_id.alias("image_id"), "gid",
-                     F.coalesce(F.col("root"),
-                                F.col("gid")).alias("root")))
-    # per-image dense rank WITHOUT a per-image window (a single
-    # giant mosaic would put all its roots — O(segments) — into one
-    # window task): global two-phase row_number keyed by
-    # (image_id, root), then subtract each image's first global rank
-    from .scalewin import ordered_row_number
-    rn = ordered_row_number(
-        roots.select("image_id", "root").distinct(),
-        ["image_id", "root"], "_grn")
-    base = rn.groupBy("image_id").agg(F.min("_grn").alias("_base"))
-    dense = (rn.join(base, "image_id")
-             .withColumn("final",
-                         (F.col("_grn") - F.col("_base") + 1)
-                         .cast("int"))
-             .drop("_grn", "_base"))
-
-    # the mapping keeps its tile key: consumers (paint / fused
-    # histogram) group straight by tile instead of re-exploding the
-    # gid ranges and joining back — two exchanges fewer per consumer
-    allg = seg_tiles_off.select(
-        "image_id", "tcol", "trow", "offset", "nseg") \
-        .filter(F.col("nseg") > 0).select(
-        "image_id", "tcol", "trow",
-        F.explode(F.sequence(F.col("offset") + 1,
-                             F.col("offset") + F.col("nseg"))).alias("gid"))
-    gl = (allg.join(cc_labels,
-                    (allg.image_id == cc_labels.image_id)
-                    & (allg.gid == cc_labels.v), "left")
-          .select(allg.image_id.alias("image_id"), "tcol", "trow",
-                  "gid",
-                  F.coalesce(F.col("root"), F.col("gid")).alias("root")))
-    mapping = (gl.join(dense, ["image_id", "root"], "left")
-               .select("image_id", "tcol", "trow", "gid",
-                       F.coalesce(F.col("final"),
-                                  F.lit(0)).alias("final")))
-    return mapping
-
-
 FINAL_TILE_SCHEMA = (
     "image_id string, tcol int, trow int, xout int, yout int, "
     "out_xsize int, out_ysize int, nbands int, pixels binary, "
@@ -916,8 +663,8 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
     them."""
     margin = overlap // 2
     keys = ["image_id", "tcol", "trow"]
-    # the mapping already carries its tile key (build_mapping): one
-    # groupBy, no gid re-explode, no join back
+    # the mapping already carries its tile key: one groupBy, no gid
+    # re-explode, no join back
     tm = (mapping.groupBy(*keys)
           .agg(F.collect_list(F.struct("gid", "final")).alias("gf")))
     joined = seg_tiles_off.join(tm, keys, "left")
@@ -971,7 +718,6 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
 
 def segment_images_tiled(images_df, cfg: SegConfig, centres=None,
                          validate: bool = True,
-                         mode: str = "sequential",
                          keep_pixels: bool = True):
     """Full pipeline: images -> final stitched seg tiles.
 
@@ -1015,12 +761,12 @@ def segment_images_tiled(images_df, cfg: SegConfig, centres=None,
         tiles = spread_small_scan(
             explode_tiles(images_df, cfg.tile_size, cfg.overlap))
         seg_tiles = segment_tiles(tiles, centres, cfg)
-    final = stitch(seg_tiles, cfg, mode=mode, keep_pixels=keep_pixels)
+    final = stitch(seg_tiles, cfg, keep_pixels=keep_pixels)
     return final, seg_tiles, centres
 
 
 def stitch(seg_tiles, cfg: SegConfig, simple_recode: bool = False,
-           mode: str = "sequential", keep_pixels: bool = True):
+           keep_pixels: bool = True):
     """Stitch phase on a (possibly checkpoint-restored) seg_tiles.
 
     localCheckpoint materializes the expensive kernel output exactly
@@ -1028,39 +774,18 @@ def stitch(seg_tiles, cfg: SegConfig, simple_recode: bool = False,
     cluster this is the durable S6 checkpoint instead —
     plans/checkpoint.py).
 
-    mode="sequential" (default): exact replay of the reference's
-    order-dependent recode recurrence over boundary strips
+    The mapping is the exact replay of the reference's order-dependent
+    recode recurrence over boundary strips
     (:func:`sequential_stitch_mapping`) — bitwise-equal mosaics to
     the reference on EVERY input, parallel across images, streaming
     within an image.
-
-    mode="cc": the order-independent strip-join + mode-edge +
-    connected-components closure (J1/J2). Fully parallel WITHIN one
-    image, but a documented deviation from the reference: modes are
-    taken over raw (not already-recoded) neighbour labels and
-    top/left recode targets are transitively merged rather than
-    overwritten, so chained boundary segments can resolve
-    differently. Use for single giant mosaics where one sequential
-    chain per image is unacceptable and reference-exactness is not
-    required.
-
-    MEASURED decision rule (r06, 14592^2 = 5776 tiles, stage
-    decomposition in PERF.md): the sequential replay costs ~1.8-2.0
-    ms/tile of SERIAL mapping time (flat in cores — the Amdahl
-    term; 10-11.5 s at 5776 tiles whether 8 or 32 cores), while the
-    cc mapping is a distributed stage of ~7-15 s that scales with
-    cores (6.6-7.1 s at 32). Prefer mode="cc" when
-    tiles x ~1.9 ms exceeds the cc mapping stage time at your
-    parallelism — ~5k tiles/mosaic at 32 cores, earlier on larger
-    clusters; below that the kernel+paint phases dominate both
-    modes and the bitwise-exact sequential default is free.
 
     simple_recode=True is the reference's simpleTileRecode mode
     (tiling.py:1024-1030): every tile's local IDs are just offset to
     be globally unique; boundary segments are NOT merged across
     tiles (faster, used when cross-tile consistency is not needed).
-    Expressed here as an identity gid mapping — no strip join, no
-    CC, no shuffle beyond the offset window."""
+    Expressed here as an identity gid mapping — no strip replay, no
+    shuffle beyond the offset window."""
     st, meta = checkpoint_with_meta(seg_tiles)
     if simple_recode:
         mapping = (meta.filter(F.col("nseg") > 0)
@@ -1070,13 +795,8 @@ def stitch(seg_tiles, cfg: SegConfig, simple_recode: bool = False,
                                F.col("offset") + F.col("nseg")))
                            .alias("gid"))
                    .withColumn("final", F.col("gid")))
-    elif mode == "sequential":
-        mapping = sequential_stitch_mapping(meta, cfg.overlap)
     else:
-        strips = extract_strips(meta, cfg.overlap)
-        edges = correspondence_edges(strips)
-        cc = connected_components(edges)
-        mapping = build_mapping(meta, cc)
+        mapping = sequential_stitch_mapping(meta, cfg.overlap)
     return paint_final_tiles(st, mapping, cfg.overlap,
                              keep_pixels=keep_pixels)
 
@@ -1178,8 +898,6 @@ def assemble_image(final_tiles_pdf: pd.DataFrame, w: int, h: int):
 
 
 __all__ = ["SegConfig", "fit_global_centres", "segment_tiles",
-           "with_offsets", "tile_offsets", "extract_strips", "correspondence_edges",
-           "connected_components", "build_mapping",
-           "sequential_stitch_mapping",
+           "with_offsets", "tile_offsets", "sequential_stitch_mapping",
            "paint_final_tiles", "segment_images_tiled", "stitch",
-           "segment_images", "assemble_image", "DataFrame"]
+           "segment_images", "assemble_image"]

@@ -2,17 +2,14 @@
 
 The many-small-images flagship parallelizes across images; the other
 scale regime is ONE raster too big for a worker (the reference's own
-tiled use case). There the kernel phase parallelizes across tiles,
-and the stitch choice matters:
-
-  mode="sequential" (default) — reference-exact replay; the per-image
-      recode chain is one O(strips) task (pixel work stays parallel).
-  mode="cc"         — order-independent strip-join + CC closure;
-      the mapping itself is also distributed (documented deviation).
+tiled use case). There the kernel and paint phases parallelize
+across tiles, while the reference-exact stitch replays the per-image
+recode chain in one O(strips) task.
 
 This bench times the full pipeline (kernel + stitch + paint) for one
-2048x2048x3 raster (100 tiles at 256/64) at two parallelism levels,
-per mode — the numbers PERF.md cites for the giant-mosaic story.
+2048x2048x3 raster (100 tiles at 256/64) at two parallelism levels —
+the numbers PERF.md cites for the giant-mosaic story. Result keys
+keep the ``sequential`` prefix so they compare with earlier rounds.
 
 Usage: python scripts/giant_mosaic_bench.py [size] [rounds]
 Configs are interleaved within rounds (see main) so shared-host
@@ -49,12 +46,11 @@ fit_sec = round(time.time() - t0, 2)
 # warmup (JVM + python workers), then timed reps
 for rep in range({reps} + {warmups}):
     t0 = time.time()
-    final, _, _ = segment_images_tiled(images, cfg, centres=centres,
-                                       mode={mode!r})
+    final, _, _ = segment_images_tiled(images, cfg, centres=centres)
     n = final.count()
     dt = time.time() - t0
     if rep >= {warmups}:
-        print(json.dumps({{"mode": {mode!r}, "cores": {cores},
+        print(json.dumps({{"cores": {cores},
                            "rep": rep, "sec": round(dt, 2),
                            "fit_sec": fit_sec,
                            "rows": n}}), flush=True)
@@ -97,12 +93,11 @@ cfg = SegConfig(img_null_val=65535, four_connected=False,
                 min_segment_size=50, tile_size=256, overlap=64)
 for rep in range({reps} + {warmups}):
     t0 = time.time()
-    final = stitch(segment_tiles(tiles, None, cfg), cfg,
-                   mode={mode!r})
+    final = stitch(segment_tiles(tiles, None, cfg), cfg)
     n = final.count()
     dt = time.time() - t0
     if rep >= {warmups}:
-        print(json.dumps({{"mode": {mode!r}, "cores": {cores},
+        print(json.dumps({{"cores": {cores},
                            "rep": rep, "sec": round(dt, 2),
                            "rows": n}}), flush=True)
 spark.stop()
@@ -167,7 +162,7 @@ def main():
     """Interleaved-round structure (the scaling_bench discipline):
     shared-host capacity drifts on ~10-min scales, so timing each
     config's reps back-to-back confounds config with window. Instead
-    each ROUND runs every (mode, cores) config once, adjacent in
+    each ROUND runs every cores config once, adjacent in
     time (fresh JVM each, GIANT_WARMUPS in-JVM warmup reps + one
     timed rep);
     efficiencies are computed WITHIN each round and the median
@@ -206,39 +201,33 @@ def main():
                                  path=tiles_path))
         cores_list = [int(c) for c in os.environ.get(
             "GIANT_CORES", "8,32").split(",")]
-        modes = os.environ.get("GIANT_MODES",
-                               "sequential,cc").split(",")
         pretiled = direct or bool(os.environ.get("GIANT_PRETILED"))
-        times = {}     # (mode, cores) -> [sec per round]
+        times = {}     # cores -> [sec per round]
         burns = []
         for rnd in range(rounds):
             burns.append(control_burn())
-            for mode in modes:
-                for cores in cores_list:
-                    tmpl = TILES_RUNNER if pretiled else RUNNER
-                    rows = run(tmpl.format(
-                        repo=REPO,
-                        path=tiles_path if pretiled else path,
-                        cores=cores, mode=mode, reps=1,
-                        warmups=warmups))
-                    sec = rows[-1]["sec"]
-                    times.setdefault((mode, cores), []).append(sec)
-                    print(f"round {rnd} {mode}@{cores}: {sec}s "
-                          f"(burn {burns[-1]})", flush=True)
+            for cores in cores_list:
+                tmpl = TILES_RUNNER if pretiled else RUNNER
+                rows = run(tmpl.format(
+                    repo=REPO,
+                    path=tiles_path if pretiled else path,
+                    cores=cores, reps=1, warmups=warmups))
+                sec = rows[-1]["sec"]
+                times.setdefault(cores, []).append(sec)
+                print(f"round {rnd} sequential@{cores}: {sec}s "
+                      f"(burn {burns[-1]})", flush=True)
         out = {}
-        for (mode, cores), ts in times.items():
+        for cores, ts in times.items():
             srt = sorted(ts)
-            out[f"{mode}@{cores}"] = srt[len(srt) // 2]
-            out[f"{mode}@{cores}_rounds"] = ts
-        for mode in modes:
-            for lo, hi in zip(cores_list, cores_list[1:]):
-                effs = sorted(
-                    times[(mode, lo)][r] / times[(mode, hi)][r]
-                    / (hi / lo) for r in range(rounds))
-                out[f"{mode}_{lo}to{hi}_eff"] = round(
-                    effs[len(effs) // 2], 3)
-                out[f"{mode}_{lo}to{hi}_eff_rounds"] = [
-                    round(e, 3) for e in effs]
+            out[f"sequential@{cores}"] = srt[len(srt) // 2]
+            out[f"sequential@{cores}_rounds"] = ts
+        for lo, hi in zip(cores_list, cores_list[1:]):
+            effs = sorted(times[lo][r] / times[hi][r] / (hi / lo)
+                          for r in range(rounds))
+            out[f"sequential_{lo}to{hi}_eff"] = round(
+                effs[len(effs) // 2], 3)
+            out[f"sequential_{lo}to{hi}_eff_rounds"] = [
+                round(e, 3) for e in effs]
         print(json.dumps({"size": size, "tile": 256, "overlap": 64,
                           "rounds": rounds,
                           "control_burns": burns, **out}))

@@ -8,16 +8,16 @@ own job at a given parallelism level:
   kernel+ckpt  — segment_tiles over the tiles scan, materialized by
                  the stitch's own localCheckpoint (fat rows: pixels,
                  segtile, strips)
-  mapping      — sequential_stitch_mapping (or the CC chain) from
-                 the checkpointed meta; the per-image sequential
-                 replay is the Amdahl term
+  mapping      — sequential_stitch_mapping from the checkpointed
+                 meta; the per-image sequential replay is the
+                 Amdahl term
   paint+count  — paint_final_tiles + count on the checkpointed rows
 
 The phase boundaries add one extra materialization vs the fused
 end-to-end run, so the SUM here can exceed the end-to-end time; the
 value is the per-stage ratio at each core count, not the total.
 
-Usage: python scripts/giant_stage_breakdown.py [size] [cores] [mode]
+Usage: python scripts/giant_stage_breakdown.py [size] [cores]
 Never run concurrently with other Spark work.
 """
 
@@ -32,12 +32,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUNNER = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
 from pyshepseg_spark.session import get_spark
 from pyshepseg_spark.operators.segment import (SegConfig,
-    build_mapping, checkpoint_with_meta, connected_components,
-    correspondence_edges, extract_strips, paint_final_tiles,
-    segment_tiles, sequential_stitch_mapping)
+    checkpoint_with_meta, paint_final_tiles, segment_tiles,
+    sequential_stitch_mapping)
 from pyshepseg_spark.operators.skew import spread_small_scan
 
 spark = get_spark(app_name="giantstages", master="local[{cores}]",
@@ -53,14 +51,8 @@ for rep in range({reps} + 1):
     t["kernel_ckpt"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    if {mode!r} == "sequential":
-        mapping = sequential_stitch_mapping(meta, cfg.overlap)
-    else:
-        mapping = build_mapping(
-            meta, connected_components(
-                correspondence_edges(extract_strips(meta,
-                                                    cfg.overlap))))
-    mapping = mapping.localCheckpoint()
+    mapping = sequential_stitch_mapping(meta, cfg.overlap) \
+        .localCheckpoint()
     n_map = mapping.count()
     t["mapping"] = round(time.time() - t0, 2)
 
@@ -69,7 +61,7 @@ for rep in range({reps} + 1):
     n = final.count()
     t["paint_count"] = round(time.time() - t0, 2)
     if rep > 0:
-        print(json.dumps({{"mode": {mode!r}, "cores": {cores},
+        print(json.dumps({{"cores": {cores},
                            "rep": rep, "rows": n,
                            "map_rows": n_map, **t}}), flush=True)
 spark.stop()
@@ -110,7 +102,6 @@ def main():
     size = int(sys.argv[1]) if len(sys.argv) > 1 else 8192
     cores_list = [int(c) for c in (
         sys.argv[2] if len(sys.argv) > 2 else "2,8,32").split(",")]
-    mode = sys.argv[3] if len(sys.argv) > 3 else "sequential"
     reps = int(os.environ.get("GIANT_STAGE_REPS", "2"))
     # r06: reuse a giant_mosaic_bench direct-tile fixture
     # (GIANT_DATA_DIR/tiles_<size>.parquet) when present — the
@@ -129,8 +120,7 @@ def main():
                            path=path))
         for cores in cores_list:
             rows = run(RUNNER.format(repo=REPO, path=path,
-                                     cores=cores, mode=mode,
-                                     reps=reps))
+                                     cores=cores, reps=reps))
             for r in rows:
                 print(json.dumps(r), flush=True)
 

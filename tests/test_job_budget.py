@@ -8,8 +8,10 @@ extra barrier or an unplanned broadcast shows up here as a count, not
 as a timing that noise can hide.
 
 The budgets are the counts measured on this fixture (tests/conftest.py:
-3 images of 256^2, tile 128, overlap 32, ``local[8]``). They may only
-go down: lower a budget when a change removes jobs.
+3 images of 256^2, tile 128, overlap 32, ``local[8]``; for
+``duplicate_groups`` a three-pair integer frame with one chain and one
+lone pair). They may only go down: lower a budget when a change
+removes jobs.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from pyshepseg_spark.operators.dedup import duplicate_groups
 from pyshepseg_spark.operators.segment import (fit_global_centres,
                                                segment_images_tiled)
 from pyshepseg_spark.operators.spatial import point_in_segment
@@ -30,6 +33,7 @@ BUDGETS = {
     "point_in_segment": 10,
     "segment_sizes": 2,
     "segment_stats_tiled": 4,
+    "duplicate_groups": 1,
 }
 
 
@@ -46,6 +50,10 @@ def _calls(images_fixture, cfg, final_tiles):
                          for r in pdf.itertuples()], ignore_index=True)
         return spark.createDataFrame(pts)
 
+    def pairs():
+        return spark.createDataFrame(pd.DataFrame(
+            {"a": [1, 2, 10], "b": [2, 3, 11]}))
+
     return {
         "fit_global_centres": lambda: fit_global_centres(images, cfg),
         "segment_images_tiled":
@@ -55,6 +63,7 @@ def _calls(images_fixture, cfg, final_tiles):
         "segment_sizes": lambda: _run(segment_sizes(final_tiles)),
         "segment_stats_tiled":
             lambda: _run(segment_stats_tiled(images, cfg)),
+        "duplicate_groups": lambda: _run(duplicate_groups(pairs())),
     }
 
 

@@ -3,7 +3,6 @@ streaming image ingest."""
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from pyshepseg_spark.operators.dedup import duplicate_groups
 from pyshepseg_spark.operators.segment import SegConfig, segment_images
