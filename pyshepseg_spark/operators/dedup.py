@@ -17,6 +17,8 @@ embedding-cosine near-dup — all expressed Spark-first:
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -147,16 +149,84 @@ def normalized_text(col):
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
+def with_content_hash(docs, text_col="text"):
+    """``docs`` + content_hash = xxhash64 of the normalized text: the
+    one exact-duplicate key, shared by :func:`exact_duplicates` and
+    the streaming exact dedup, so batch and streaming agree
+    bit-for-bit on what counts as a duplicate."""
+    return docs.withColumn(
+        "content_hash", F.xxhash64(normalized_text(F.col(text_col))))
+
+
 def exact_duplicates(docs, text_col="text", id_col="doc_id"):
     """Exact dedup by content hash (hash-groupBy): returns groups
     with >1 docs. xxhash64 is JVM-side; the only shuffle is the
     groupBy on the 64-bit key."""
-    h = F.xxhash64(normalized_text(F.col(text_col)))
-    return (docs.withColumn("content_hash", h)
+    return (with_content_hash(docs, text_col)
             .groupBy("content_hash")
             .agg(F.count("*").alias("n_docs"),
                  F.sort_array(F.collect_list(id_col)).alias("doc_ids"))
             .filter(F.col("n_docs") > 1))
+
+
+# --- the LSH candidate join and the per-family verifies -----------
+#
+# Every near-dup family below (MinHash, SimHash, hyperplane
+# embedding) has ONE candidate join and ONE verify, each taking a
+# left and a right keyed frame (id, key columns[, value]). The batch
+# operators pass the same frame on both sides (a self-join, which
+# keeps l < r only); the streaming probers (streaming/dedup.py) pass
+# (this micro-batch, the store of earlier batches). Either way a pair
+# comes out once, oriented a = least(l, r), b = greatest(l, r).
+
+def _key_join(left, right, id_col, keys, carry=None):
+    """(l, r[, <carry>_l, <carry>_r]) for every pair of ids of
+    ``left`` and ``right`` that share a ``keys`` value — the LSH
+    candidate join. Only (id, keys, carry) enter the join exchange:
+    decide with small rows."""
+    def side(df, s):
+        extra = [F.col(carry).alias(f"{carry}_{s}")] if carry else []
+        return df.select(F.col(id_col).alias(s), *keys, *extra)
+    j = side(left, "l").join(side(right, "r"), keys)
+    if left is right:
+        j = j.filter(F.col("l") < F.col("r"))
+    return j
+
+
+def _attach(cand, left, right, id_col, col):
+    """Attach each candidate pair's two values: ``left``'s ``col`` on
+    l (as v_l) and ``right``'s on r (as v_r). Run it on DISTINCT
+    pairs, so each pair fetches its two values exactly once."""
+    return (cand
+            .join(left.select(F.col(id_col).alias("l"),
+                              F.col(col).alias("v_l")), "l")
+            .join(right.select(F.col(id_col).alias("r"),
+                               F.col(col).alias("v_r")), "r"))
+
+
+def _oriented(df, *cols):
+    return df.select(F.least("l", "r").alias("a"),
+                     F.greatest("l", "r").alias("b"), *cols)
+
+
+def _minhash_pairs(left, right, left_sigs, right_sigs, id_col):
+    """The one MinHash candidate join + verify: (a, b, est_jaccard)
+    for the distinct id pairs sharing a (band, bucket) of the keyed
+    frames ``left``/``right`` (:func:`minhash_band_keys` rows), with
+    est_jaccard the signature position-match fraction. The
+    signatures are attached per distinct pair from
+    ``left_sigs``/``right_sigs`` (one (id, minhash) row per id), so
+    they never ride through the band join's exchanges (r06: ~2x120
+    MB at sf1.0 for 18k real candidates)."""
+    cand = (_key_join(left, right, id_col, ["band", "bucket"])
+            .select("l", "r").distinct())
+    match = F.aggregate(
+        F.zip_with("v_l", "v_r",
+                   lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0), lambda acc, v: acc + v)
+    return _oriented(_attach(cand, left_sigs, right_sigs, id_col,
+                             "minhash"),
+                     (match / F.size("v_l")).alias("est_jaccard"))
 
 
 def minhash_band_keys(signatures, id_col="doc_id", num_hashes=64,
@@ -179,52 +249,23 @@ def minhash_band_keys(signatures, id_col="doc_id", num_hashes=64,
 
 
 def minhash_lsh_pairs(signatures, id_col="doc_id", num_hashes=64,
-                      bands=16, materialize=True):
+                      bands=16):
     """LSH banding: hash each band of the signature, equi-join docs
-    sharing a (band, bucket); candidate pairs deduped by (a < b).
+    sharing a (band, bucket); candidate pairs deduped by (a < b) and
+    scored by :func:`_minhash_pairs`.
 
-    materialize=True (default) puts a localCheckpoint barrier on the
-    signature frame before the fan-out. Without it CollapseProject
-    re-inlines the signature expression into the band posexplode and
-    BOTH self-join sides (~3-4 evaluations per doc; interpreted HOFs
-    get no codegen CSE — PERF.md round-4/5 A/B), a measured ~35%
-    tax on the full minhash_near_dups shape at sf0.1 (PERF.md
-    round 5: 1.24 s -> 0.81 s median, and every signature rewrite
-    ties within noise once barriered). At
-    real scale a signature table is materialized anyway (compute
-    once, probe many); pass False to keep lineage (e.g. ahead of a
-    user-managed persist or table write)."""
-    if materialize:
-        signatures = signatures.localCheckpoint(eager=False)
+    The signature frame is barriered (localCheckpoint) before the
+    fan-out. Without it CollapseProject re-inlines the signature
+    expression into the band posexplode and BOTH self-join sides
+    (~3-4 evaluations per doc; interpreted HOFs get no codegen CSE —
+    PERF.md round-4/5 A/B), a measured ~35% tax on the full
+    minhash_near_dups shape at sf0.1 (PERF.md round 5: 1.24 s ->
+    0.81 s median)."""
+    signatures = signatures.localCheckpoint(eager=False)
     banded = minhash_band_keys(signatures, id_col=id_col,
                                num_hashes=num_hashes, bands=bands)
-    # r06: the band self-join carries (id, band, bucket) ONLY — the
-    # num_hashes-long signatures previously rode through BOTH join
-    # exchanges (~2x120 MB at sf1.0 for 18k real candidates; guide
-    # §2.3: decide with small rows). Candidate pairs are deduped
-    # FIRST (distinct over ~16 B rows), then the two signatures are
-    # attached per unique pair from the barriered signature frame
-    # (AQE broadcasts the candidate list; the signature table is
-    # read map-side, never shuffled). est_jaccard is integer
-    # position-match arithmetic — identical values, and dedup-then-
-    # score emits exactly the set score-then-dedup did.
-    left = banded.select(F.col(id_col).alias("a"), "band", "bucket")
-    right = banded.select(F.col(id_col).alias("b"), "band", "bucket")
-    cand = (left.join(right, ["band", "bucket"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct())
-    sa = signatures.select(F.col(id_col).alias("a"),
-                           F.col("minhash").alias("sig_a"))
-    sb = signatures.select(F.col(id_col).alias("b"),
-                           F.col("minhash").alias("sig_b"))
-    match = F.aggregate(
-        F.zip_with("sig_a", "sig_b",
-                   lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0), lambda acc, v: acc + v)
-    return (cand.join(sa, "a").join(sb, "b")
-            .select("a", "b",
-                    (match / F.size("sig_a")).alias("est_jaccard")))
+    return _minhash_pairs(banded, banded, signatures, signatures,
+                          id_col)
 
 
 def ngram_jaccard_pairs(docs, cand_pairs, text_col="text",
@@ -286,22 +327,10 @@ def simhash_block_keys(sim, id_col="doc_id", blocks=4,
         ])).alias("block", "key"))
 
 
-def simhash_near_dups(sim, id_col="doc_id", max_hamming=3,
-                      blocks=4, hash_bits=64,
-                      allow_recall_loss=False, materialize=True):
-    """Near-dup pairs by SimHash: block the hash_bits-wide hash into
-    ``blocks`` segments, equi-join per block, verify Hamming distance
-    with bit_count (JVM-side). Pass hash_bits=28 for the md5/oracle
-    hash so block keys cover the varying bits (blocks of zeros would
-    degenerate to an all-pairs join).
-
-    Recall guarantee (pigeonhole): a pair within ``max_hamming``
-    differs in at most ``max_hamming`` blocks, so it is found iff
-    ``blocks >= max_hamming + 1`` AND every bit is covered
-    (``hash_bits`` divisible by ``blocks``). Both are enforced;
-    ``allow_recall_loss=True`` opts into cheaper best-effort blocking
-    (wider keys, fewer candidates, recall < 1 for pairs whose
-    differing bits spread across every block)."""
+def _check_simhash_blocking(max_hamming, blocks, hash_bits,
+                            allow_recall_loss=False):
+    """The pigeonhole recall contract of SimHash blocking (see
+    :func:`simhash_near_dups`)."""
     if hash_bits % blocks != 0:
         raise ValueError(
             f"hash_bits={hash_bits} not divisible by blocks={blocks}:"
@@ -311,32 +340,55 @@ def simhash_near_dups(sim, id_col="doc_id", max_hamming=3,
             f"recall guarantee needs blocks >= max_hamming + 1 "
             f"(got blocks={blocks}, max_hamming={max_hamming}); pass "
             "allow_recall_loss=True for best-effort blocking")
-    if materialize:
-        # r06: barrier the signature frame before the fan-out (the
-        # minhash_lsh_pairs lesson). Without it, BOTH self-join
-        # sides re-derive the full signature chain, AND the
-        # isnotnull filter Catalyst infers from the join keys
-        # duplicates the signature evaluation per side and pushes
-        # one copy BELOW the spread_small_scan exchange — a serial
-        # single-split pass (measured: 5.7 s -> 39 s when the
-        # signatures became a Python UDF; barriered: one signature
-        # pass total). At scale a signature table is materialized
-        # anyway; pass False to keep lineage.
-        sim = sim.localCheckpoint(eager=False)
-    exploded = simhash_block_keys(sim, id_col=id_col, blocks=blocks,
-                                  hash_bits=hash_bits)
-    a = exploded.select(F.col(id_col).alias("a"), "block", "key",
-                        F.col("simhash").alias("h_a"))
-    b = exploded.select(F.col(id_col).alias("b"), "block", "key",
-                        F.col("simhash").alias("h_b"))
-    # verify + threshold BEFORE the dedup: the distinct shuffles
-    # only surviving (a, b, hamming) rows, not raw candidates
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (a.join(b, ["block", "key"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b", ham.alias("hamming"))
+
+
+def _simhash_pairs(left, right, id_col, max_hamming):
+    """The one SimHash candidate join + verify: (a, b, hamming) for
+    the id pairs sharing a (block, key) of the keyed frames
+    ``left``/``right`` (:func:`simhash_block_keys` rows) within
+    ``max_hamming`` bits. The 8-byte hash rides through the join, and
+    the verify + threshold run BEFORE the dedup, so the distinct
+    shuffles only surviving rows, not raw candidates."""
+    ham = F.bit_count(F.col("simhash_l").bitwiseXOR(F.col("simhash_r")))
+    return (_oriented(_key_join(left, right, id_col, ["block", "key"],
+                                carry="simhash"),
+                      ham.alias("hamming"))
             .filter(F.col("hamming") <= max_hamming)
             .distinct())
+
+
+def simhash_near_dups(sim, id_col="doc_id", max_hamming=3,
+                      blocks=4, hash_bits=64,
+                      allow_recall_loss=False):
+    """Near-dup pairs by SimHash: block the hash_bits-wide hash into
+    ``blocks`` segments, equi-join per block, verify Hamming distance
+    with bit_count (JVM-side; :func:`_simhash_pairs`). Pass
+    hash_bits=28 for the md5/oracle hash so block keys cover the
+    varying bits (blocks of zeros would degenerate to an all-pairs
+    join).
+
+    Recall guarantee (pigeonhole): a pair within ``max_hamming``
+    differs in at most ``max_hamming`` blocks, so it is found iff
+    ``blocks >= max_hamming + 1`` AND every bit is covered
+    (``hash_bits`` divisible by ``blocks``). Both are enforced;
+    ``allow_recall_loss=True`` opts into cheaper best-effort blocking
+    (wider keys, fewer candidates, recall < 1 for pairs whose
+    differing bits spread across every block).
+
+    The signature frame is barriered before the fan-out (the
+    minhash_lsh_pairs lesson). Without it, BOTH self-join sides
+    re-derive the full signature chain, AND the isnotnull filter
+    Catalyst infers from the join keys duplicates the signature
+    evaluation per side and pushes one copy BELOW the
+    spread_small_scan exchange — a serial single-split pass
+    (measured: 5.7 s -> 39 s when the signatures became a Python
+    UDF; barriered: one signature pass total)."""
+    _check_simhash_blocking(max_hamming, blocks, hash_bits,
+                            allow_recall_loss)
+    exploded = simhash_block_keys(sim.localCheckpoint(eager=False),
+                                  id_col=id_col, blocks=blocks,
+                                  hash_bits=hash_bits)
+    return _simhash_pairs(exploded, exploded, id_col, max_hamming)
 
 
 # Java regex \s (no UNICODE_CHARACTER_CLASS) = [ \t\n\x0B\f\r] — the
@@ -439,7 +491,7 @@ def gram_positions_md5(docs, text_col="text", id_col="doc_id", k=20):
 
 
 def duplicated_spans(docs, text_col="text", id_col="doc_id", k=20,
-                     scope="cross_doc", materialize=True):
+                     scope="cross_doc"):
     """Exact substring dedup (the missing member of the dedup family
     next to doc-level exact/MinHash/SimHash): maximal token spans
     whose every k-gram occurs elsewhere in the corpus — the
@@ -465,7 +517,7 @@ def duplicated_spans(docs, text_col="text", id_col="doc_id", k=20,
     (short-doc grams cover the whole doc, not k tokens).
 
     Scale shape: one linear gram pass (gram_positions_md5, barriered
-    by default — the frame feeds both the dup-hash agg and the
+    — the frame feeds both the dup-hash agg and the
     join-back, the minhash_lsh_pairs fan-out lesson); the dup-hash
     groupBy partial-aggregates map-side and its output scales with
     DISTINCT grams; the join-back is an equi-join on gh (AQE splits
@@ -475,10 +527,9 @@ def duplicated_spans(docs, text_col="text", id_col="doc_id", k=20,
     from pyspark.sql import Window
 
     from .skew import spread_small_scan
-    grams = gram_positions_md5(spread_small_scan(docs),
-                               text_col=text_col, id_col=id_col, k=k)
-    if materialize:
-        grams = grams.localCheckpoint(eager=False)
+    grams = (gram_positions_md5(spread_small_scan(docs),
+                                text_col=text_col, id_col=id_col, k=k)
+             .localCheckpoint(eager=False))
     if scope == "cross_doc":
         dup = (grams.groupBy("gh")
                .agg(F.countDistinct(id_col).alias("nd"))
@@ -565,9 +616,9 @@ def connected_components(edges):
     # second collect/count job)
     rows = edges.limit(_CC_DRIVER_EDGES + 1).collect()
     if len(rows) <= _CC_DRIVER_EDGES:
-        # driver-sized by construction: hint downstream joins to
-        # broadcast the label table
-        return F.broadcast(_cc_driver(edges.sparkSession, rows))
+        # a local relation: the planner sizes it exactly, so a
+        # downstream join broadcasts it without a hint
+        return _cc_driver(edges.sparkSession, rows)
     return _cc_distributed(edges)
 
 
@@ -660,6 +711,13 @@ def duplicate_groups(pairs, a_col="a", b_col="b"):
     return lab.join(rep, "root").select("doc_id", "group_rep")
 
 
+@functools.lru_cache(maxsize=8)
+def _hyperplanes(seed, bits, dim):
+    """The (bits, dim) float32 random hyperplanes of ``seed``."""
+    rng = np.random.default_rng(seed)
+    return rng.standard_normal((bits, dim)).astype(np.float32)
+
+
 def hyperplane_band_keys(emb, id_col="vec_id", vec_col="embedding",
                          bits=16, bands=4, seed=42):
     """One row per (vector, band) with key = that band's slice of the
@@ -668,19 +726,17 @@ def hyperplane_band_keys(emb, id_col="vec_id", vec_col="embedding",
     (streaming/dedup.py): the planes are a deterministic function of
     (seed, dim), so equal inputs derive IDENTICAL keys across
     batches. The sketch is a vectorized pandas UDF (one matmul per
-    Arrow batch); the band split is JVM bit arithmetic."""
+    Arrow batch) that derives the planes from the batch's own
+    dimension, so no probe job reads the dimension first; the band
+    split is JVM bit arithmetic."""
     if bits % bands != 0:
         raise ValueError(f"bits={bits} not divisible by bands={bands}")
     width = bits // bands
-    first = emb.select(F.size(vec_col).alias("d")).first()
-    dim = first["d"]
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((bits, dim)).astype(np.float32)
 
     @pandas_udf("long")
     def sketch(vs: pd.Series) -> pd.Series:
         m = np.stack([np.asarray(v, dtype=np.float32) for v in vs])
-        s = (m @ planes.T) > 0
+        s = (m @ _hyperplanes(seed, bits, m.shape[1]).T) > 0
         out = np.zeros(len(vs), dtype=np.int64)
         for i in range(bits):
             out |= s[:, i].astype(np.int64) << i
@@ -697,6 +753,87 @@ def hyperplane_band_keys(emb, id_col="vec_id", vec_col="embedding",
                                                          "key"))
 
 
+def _embedding_keys(emb, id_col, vec_col, bits, bands, seed):
+    """(id, band, key) rows of :func:`hyperplane_band_keys`,
+    repartitioned by the join key and barriered: one sketch-UDF pass,
+    and no vectors in the checkpoint (~12 bytes/row). The band-join
+    inputs are tiny (~3 MB at sf1.0) while its OUTPUT is the
+    candidate explosion (2.9M pairs at sf1.0), which AQE's
+    input-sized planning cannot see: a planner-inserted shuffle here
+    would be coalesced to ONE partition and the join run in one
+    task. A user-specified partition count is never coalesced, and a
+    self-join reuses the checkpointed partitioning."""
+    npart = emb.sparkSession.sparkContext.defaultParallelism
+    return (hyperplane_band_keys(emb, id_col=id_col, vec_col=vec_col,
+                                 bits=bits, bands=bands, seed=seed)
+            .select(id_col, "band", "key")
+            .repartition(npart, "band", "key")
+            .localCheckpoint(eager=False))
+
+
+def _embedding_pairs(left, right, left_vecs, right_vecs, id_col,
+                     vec_col, threshold):
+    """The one embedding candidate join + verify: (a, b, cosine) for
+    the distinct id pairs sharing a (band, key) of the keyed frames
+    ``left``/``right`` (:func:`_embedding_keys` rows) whose cosine is
+    >= ``threshold``. The verify is an attach join: each distinct
+    pair fetches its two vectors (``left_vecs`` on l, ``right_vecs``
+    on r; one (id, vector) row per id), then one mapInArrow pass
+    scores them with the JVM-fold cosine twin
+    (similarity.fold_dots/fold_norms — the doubles of
+    ``cosine_expr``, bit for bit). The pairs get an explicit
+    partition count for the same reason as the keys: their shuffle
+    is small (16 B/pair), and a coalesced one would run the whole
+    verify in one task (measured: 7 s single-task fold at sf1.0 vs
+    sub-second parallel)."""
+    from .similarity import (_arrow_matrix, _concat_batches,
+                             _np_elem_dtype, fold_dots, fold_norms)
+    ldt = _np_elem_dtype(left_vecs, vec_col)
+    rdt = _np_elem_dtype(right_vecs, vec_col)
+    thr = float(threshold)
+    npart = left.sparkSession.sparkContext.defaultParallelism
+    cand = (_key_join(left, right, id_col, ["band", "key"])
+            .select("l", "r")
+            .repartition(npart, "l", "r")
+            .distinct())
+    rows = _attach(cand, left_vecs, right_vecs, id_col, vec_col)
+
+    def verify(it):
+        import pyarrow as pa
+        for tbl in _concat_batches(it):
+            # norms in each side's element type; dots promote a
+            # float side to double, as Spark's multiply does
+            ml = _arrow_matrix(tbl.column("v_l"), ldt)
+            mr = _arrow_matrix(tbl.column("v_r"), rdt)
+            nl, nr = fold_norms(ml), fold_norms(mr)
+            # fast float64 row-dot for the DECISION, then fold-exact
+            # replay of (a) every pair within 1e-4 of the threshold
+            # (the f32-product/sum-order error is <= ~2.4e-7, so only
+            # replayed pairs can change decision) and (b) every
+            # SURVIVOR (its cosine double is emitted downstream and
+            # must be the bit-exact fold value)
+            cos = np.einsum("ij,ij->i", ml.astype(np.float64),
+                            mr.astype(np.float64)) / (nl * nr)
+            keep = cos >= thr
+            redo = np.nonzero(keep | (np.abs(cos - thr) <= 1e-4))[0]
+            if len(redo):
+                cos[redo] = fold_dots(ml[redo], mr[redo]) \
+                    / (nl[redo] * nr[redo])
+                keep = cos >= thr
+            if not keep.any():
+                continue
+            mask = pa.array(keep)
+            yield pa.record_batch(
+                [tbl.column("l").combine_chunks().filter(mask),
+                 tbl.column("r").combine_chunks().filter(mask),
+                 pa.array(cos[keep], pa.float64())],
+                names=["l", "r", "cosine"])
+
+    t = dict(rows.dtypes)
+    return _oriented(rows.mapInArrow(
+        verify, f"l {t['l']}, r {t['r']}, cosine double"), "cosine")
+
+
 def embedding_near_dups(emb, id_col="vec_id", vec_col="embedding",
                         threshold=0.95, bits=16, bands=4, seed=42):
     """Embedding-cosine near-dup via BANDED random-hyperplane LSH:
@@ -711,96 +848,16 @@ def embedding_near_dups(emb, id_col="vec_id", vec_col="embedding",
     shuffle stays proportional to candidate count, never all-pairs.
     bits must divide evenly by bands.
 
-    r06 execution: the band self-join carries (id, band, key) ONLY —
-    vectors never enter the candidate shuffle (guide §2.3: decide
-    with small rows). Candidate pairs are verified by the
-    bit-identical JVM-fold cosine twin (similarity.fold_dots/
-    fold_norms) against a broadcast (id -> vector) matrix, so every
-    >=-threshold decision and the emitted ``cosine`` doubles equal
-    the previous cosine_expr verify exactly (verified at
-    sf0.001..1.0). The corpus matrix broadcast is bounded by the
-    embedding table's vector payload — the same bytes the old plan
-    shipped per-candidate through the join, now shipped once per
-    executor."""
-    from .similarity import (_as_matrix, _concat_batches,
-                             _np_elem_dtype, fold_dots_t, fold_norms)
-    vdt = _np_elem_dtype(emb, vec_col)
-    pdf = emb.select(id_col, vec_col).toPandas()
-    vecs = _as_matrix(pdf[vec_col], vdt)
-    ids_index = pd.Index(pdf[id_col])
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((ids_index, vecs))
-    thr = float(threshold)
-
-    # barrier the (id, band, key) frame before the self-join fan-out
-    # (the minhash/simhash lesson): one sketch-UDF pass total, and
-    # no join-key filter duplication below the exchange. Vectors are
-    # projected OUT before the checkpoint so it materializes ~12
-    # bytes/row, not bands x vector payload. The explicit
-    # repartition BY THE JOIN KEY before the barrier is what keeps
-    # the verify parallel: the band-join inputs are tiny (~3 MB at
-    # sf1.0), so a planner-inserted shuffle would be AQE-coalesced
-    # to ONE partition — and since the join OUTPUT is the candidate
-    # explosion (2.9M pairs at sf1.0, invisible to AQE's
-    # input-sized stage planning), the whole verify would run in
-    # one task (measured: 7 s single-task fold vs sub-second
-    # parallel). A user-specified partition count is never
-    # coalesced, and the checkpointed (band, key) partitioning is
-    # reusable by the join on either strategy (BHJ probes it
-    # in-place; SMJ at larger scale needs no exchange).
-    npart = emb.sparkSession.sparkContext.defaultParallelism
-    keys = hyperplane_band_keys(
-        emb, id_col=id_col, vec_col=vec_col, bits=bits, bands=bands,
-        seed=seed).select(id_col, "band", "key") \
-        .repartition(npart, "band", "key") \
-        .localCheckpoint(eager=False)
-    a = keys.select(F.col(id_col).alias("a"), "band", "key")
-    b = keys.select(F.col(id_col).alias("b"), "band", "key")
-    cand = (a.join(b, ["band", "key"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b"))
-
-    def verify(it):
-        import pyarrow as pa
-        idx_, vecs_ = bc.value
-        nf = fold_norms(vecs_)
-        v64 = vecs_.astype(np.float64, copy=False)
-        vt = np.ascontiguousarray(vecs_.T)   # fold-replay source
-        for tbl in _concat_batches(it):
-            aa = tbl.column(0).combine_chunks()
-            bb = tbl.column(1).combine_chunks()
-            ia = idx_.get_indexer(
-                aa.to_numpy(zero_copy_only=False))
-            ib = idx_.get_indexer(
-                bb.to_numpy(zero_copy_only=False))
-            # fast float64 row-dot for the DECISION, then fold-exact
-            # replay of (a) every pair within 1e-4 of the threshold
-            # (the f32-product/sum-order error is <= ~2.4e-7, so only
-            # replayed pairs can change decision) and (b) every
-            # SURVIVOR (its cosine double is emitted downstream and
-            # must be the bit-exact fold value)
-            d = np.einsum("ij,ij->i", v64[ia], v64[ib])
-            cos = d / (nf[ia] * nf[ib])
-            keep = cos >= thr
-            redo = np.nonzero(keep
-                              | (np.abs(cos - thr) <= 1e-4))[0]
-            if len(redo):
-                ra, rb = ia[redo], ib[redo]
-                cos[redo] = fold_dots_t(vt[:, ra], vt[:, rb]) \
-                    / (nf[ra] * nf[rb])
-                keep = cos >= thr
-            if not keep.any():
-                continue
-            mask = pa.array(keep)
-            yield pa.record_batch(
-                [aa.filter(mask), bb.filter(mask),
-                 pa.array(cos[keep], pa.float64())],
-                names=["a", "b", "cosine"])
-
-    idt = dict(emb.select(F.col(id_col).alias("i")).dtypes)["i"]
-    return (cand.mapInArrow(verify,
-                            f"a {idt}, b {idt}, cosine double")
-            .distinct())
+    Execution (:func:`_embedding_pairs`): the band self-join carries
+    (id, band, key) only; the distinct candidate pairs then attach
+    their two vectors by join and one mapInArrow pass runs the
+    fold-twin cosine (a float64 decision, then a bit-exact fold
+    replay of near-threshold pairs and of survivors). Nothing is
+    collected to the driver: the verify scales with candidates, not
+    with the corpus."""
+    keys = _embedding_keys(emb, id_col, vec_col, bits, bands, seed)
+    return _embedding_pairs(keys, keys, emb, emb, id_col, vec_col,
+                            threshold)
 
 
 def shingles_md5_full(text_col, k=13):

@@ -30,11 +30,11 @@ def _norm(a):
 
 def cosine_expr(a, b):
     """Cosine similarity Column between two array<float/double>
-    columns — JVM-side HOF fold. Retained as the reference
-    formulation (and for callers on array<double> columns); the hot
-    paths now score candidates through the bit-identical numpy fold
-    twins below (fold_dots/fold_norms), which replicate this
-    expression's IEEE semantics exactly."""
+    columns — JVM-side HOF fold, and the reference formulation of
+    the numpy fold twins below (fold_dots/fold_norms), which
+    replicate its IEEE semantics exactly. Its only caller is
+    ivf_pq_topk's exact refine of the short PQ candidate list; every
+    other cosine path scores through the twins."""
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
@@ -507,8 +507,7 @@ def ivf_pq_topk(queries, corpus, centroids, codebooks, k=5,
     # the big vector table so the re-rank never shuffles the corpus
     rej = (vecs.join(F.broadcast(cand), "c_id")
            .join(F.broadcast(qv), "q_id")
-           .withColumn("cosine", _dot("qv", "cv")
-                       / (_norm("qv") * _norm("cv"))))
+           .withColumn("cosine", cosine_expr("qv", "cv")))
     w2 = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
                                             F.col("c_id").asc())
     return (rej.withColumn("rank", F.row_number().over(w2))

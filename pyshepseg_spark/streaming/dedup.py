@@ -1,15 +1,14 @@
-"""Streaming deduplication over an append-only documents table.
+"""Streaming deduplication over append-only tables.
 
 The batch dedup operators (operators/dedup.py) answer "which rows of
 this corpus are duplicates"; an INGEST pipeline needs the streaming
 form — "is this arriving row a duplicate of anything seen so far" —
 so that 10^12 rows are deduped incrementally instead of re-scanning
-the corpus per delivery. Both forms below are pure Structured
-Streaming (stateful dropDuplicates), no foreachBatch bookkeeping:
-Spark's state store holds the seen-hash set, checkpointed and
-restored across restarts.
+the corpus per delivery.
 
-Two state-lifecycle contracts:
+Exact dedup is pure Structured Streaming (stateful dropDuplicates):
+Spark's state store holds the seen-hash set, checkpointed and
+restored across restarts. Two state-lifecycle contracts:
 
 - :func:`streaming_exact_dedup` — global dedup, state holds every
   content hash ever seen (8-byte keys; ~10^9 hashes/8 GB per
@@ -22,24 +21,31 @@ Two state-lifecycle contracts:
   state is unacceptable and late re-crawls may legitimately re-admit
   a document.
 
+Near-dup dedup (MinHash, SimHash, hyperplane-LSH embeddings) runs as
+foreachBatch probers over a persistent, batch_id-partitioned store of
+earlier batches' LSH keys. Each family has ONE candidate join and ONE
+verify, in operators/dedup.py: the batch operator runs it as a
+self-join of the corpus, and a prober runs it twice per micro-batch —
+(batch, batch) for intra-batch pairs and (batch, store) for pairs
+with earlier batches. An unordered pair is emitted exactly once, in
+the micro-batch where its LATER row arrives, so the union over
+batches equals the batch operator on the unioned table (tested). The
+sinks and the store read are the shared idempotent plumbing of
+``streaming/__init__.py``.
+
 Reference analogue: none (the reference is batch-only); this is the
 §2.8 streaming state machine pattern applied to the LLM-data dedup
-brief, sharing normalized_text/xxhash64 with the batch path so batch
-and streaming agree bit-for-bit on what counts as a duplicate.
+brief, sharing the content hash and the LSH keys with the batch path
+so batch and streaming agree bit-for-bit on what counts as a
+duplicate.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators.dedup import normalized_text
-
-
-def with_content_hash(docs, text_col="text"):
-    """content_hash = xxhash64 of the normalized text — the same key
-    the batch exact_duplicates groupBy uses."""
-    return docs.withColumn(
-        "content_hash", F.xxhash64(normalized_text(F.col(text_col))))
+from ..operators.dedup import with_content_hash
+from . import DOCUMENTS_SCHEMA, batch_sink, file_stream, read_store
 
 
 def streaming_exact_dedup(stream_df, text_col="text"):
@@ -68,82 +74,43 @@ def streaming_exact_dedup_watermarked(stream_df, ts_col="ts",
 def minhash_probe_writer(store_path, pairs_path, text_col="text",
                          id_col="doc_id", num_hashes=32, bands=8,
                          k=3, threshold=0.5):
-    """foreachBatch prober for streaming NEAR-dup dedup (VERDICT r4
-    #4): each micro-batch is MinHash-signed, probed against the
-    persistent (band, bucket) signature store of every EARLIER batch,
-    AND self-joined for intra-batch pairs; surviving pairs
-    (est_jaccard >= threshold) land in ``pairs_path`` and the batch's
-    banded signatures are appended to the store. An unordered
-    near-dup pair is emitted exactly once — in the micro-batch where
-    its LATER doc arrives — so the union over batches equals the
-    batch operator (minhash_lsh_pairs + threshold) on the unioned
-    corpus (tested).
+    """foreachBatch prober for streaming MinHash near-dup dedup: each
+    micro-batch is MinHash-signed and banded, and the batch
+    operator's candidate join + verify (dedup._minhash_pairs) runs
+    on (batch, batch) and on (batch, store of every EARLIER batch).
+    Pairs with est_jaccard >= threshold land in ``pairs_path``; the
+    batch's banded signatures (id, minhash, band, bucket) are
+    appended to the store, whose band-0 rows give each stored doc's
+    signature once for the verify.
 
-    Idempotence: foreachBatch is at-least-once, so BOTH sinks are
-    partitioned by batch_id and written with dynamic-partition
-    overwrite (the stats_batch_writer pattern) — a replayed batch
-    replaces its own partitions, and its store probe filters to
-    batch_id < current so the replay sees exactly the pre-crash
-    store. Exact-Jaccard verification on the emitted candidates
-    composes downstream (dedup.ngram_jaccard_pairs over the corpus
-    table) — the store deliberately holds signatures only, never
-    text, so its footprint is ~300 B/doc at any corpus scale."""
-    from ..operators.dedup import (minhash_band_keys,
-                                   minhash_lsh_pairs,
+    Both sinks are idempotent under an at-least-once replay
+    (batch_sink, read_store). Exact-Jaccard verification on the
+    emitted candidates composes downstream (dedup.ngram_jaccard_pairs
+    over the corpus table) — the store deliberately holds signatures
+    only, never text, so its footprint is ~300 B/doc at any corpus
+    scale."""
+    from ..operators.dedup import (_minhash_pairs, minhash_band_keys,
                                    minhash_signatures_md5)
 
-    def process(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def outputs(batch_df, batch_id):
         sigs = minhash_signatures_md5(
             batch_df, text_col=text_col, id_col=id_col,
             num_hashes=num_hashes, k=k).localCheckpoint()
         banded = minhash_band_keys(sigs, id_col=id_col,
                                    num_hashes=num_hashes,
                                    bands=bands)
-        pairs = (minhash_lsh_pairs(sigs, id_col=id_col,
-                                   num_hashes=num_hashes,
-                                   bands=bands, materialize=False)
-                 .filter(F.col("est_jaccard") >= threshold))
-        from pyspark.errors import AnalysisException
-        try:
-            # raises eagerly (schema inference) when the store does
-            # not exist yet; the probe plan below is lazy and its
-            # errors propagate normally
-            store = (spark.read.parquet(store_path)
-                     .where(F.col("batch_id") < int(batch_id)))
-            new = banded.select(F.col(id_col).alias("n_id"), "band",
-                                "bucket",
-                                F.col("minhash").alias("sig_n"))
-            old = store.select(F.col(id_col).alias("o_id"), "band",
-                               "bucket",
-                               F.col("minhash").alias("sig_o"))
-            match = F.aggregate(
-                F.zip_with("sig_n", "sig_o",
-                           lambda x, y: F.when(x == y, 1)
-                           .otherwise(0)),
-                F.lit(0), lambda acc, v: acc + v)
-            cross = (new.join(old, ["band", "bucket"])
-                     .select(F.least("n_id", "o_id").alias("a"),
-                             F.greatest("n_id", "o_id").alias("b"),
-                             (match / F.size("sig_n"))
-                             .alias("est_jaccard"))
-                     .filter(F.col("est_jaccard") >= threshold)
-                     .distinct())
-            pairs = pairs.union(cross)
-        except AnalysisException:
-            pass    # first batch: no store written yet
-        (pairs.withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(pairs_path))
-        (banded.withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(store_path))
+        pairs = _minhash_pairs(banded, banded, sigs, sigs, id_col)
+        store = read_store(batch_df.sparkSession, store_path,
+                           batch_id)
+        if store is not None:
+            pairs = pairs.union(_minhash_pairs(
+                banded, store, sigs, store.where(F.col("band") == 0),
+                id_col))
+        return [(pairs.filter(F.col("est_jaccard") >= threshold),
+                 pairs_path),
+                (banded, store_path)]
 
-    return process
+    return batch_sink(outputs)
 
 
 def streaming_minhash_dedup(spark, docs_path, store_path, pairs_path,
@@ -160,22 +127,13 @@ def streaming_minhash_dedup(spark, docs_path, store_path, pairs_path,
     minhash_near_dups operator. A fresh checkpoint_path restarts
     batch numbering from 0 and must be paired with fresh
     store/pairs paths."""
-    if schema is None:
-        # the testdata documents-table shape
-        schema = ("doc_id long, text string, lang string, "
-                  "source string, n_chars long")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(docs_path))
-    writer = (stream.writeStream
-              .foreachBatch(minhash_probe_writer(
-                  store_path, pairs_path, text_col=text_col,
-                  id_col=id_col, num_hashes=num_hashes, bands=bands,
-                  k=k, threshold=threshold))
-              .option("checkpointLocation", checkpoint_path))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return file_stream(
+        spark, schema or DOCUMENTS_SCHEMA, docs_path,
+        minhash_probe_writer(store_path, pairs_path,
+                             text_col=text_col, id_col=id_col,
+                             num_hashes=num_hashes, bands=bands, k=k,
+                             threshold=threshold),
+        checkpoint_path, max_files_per_trigger, trigger_once)
 
 
 def simhash_probe_writer(store_path, pairs_path, text_col="text",
@@ -184,66 +142,33 @@ def simhash_probe_writer(store_path, pairs_path, text_col="text",
     """foreachBatch prober for streaming SimHash near-dup dedup — the
     pigeonhole-blocked Hamming twin of :func:`minhash_probe_writer`.
     Each micro-batch is simhashed (the oracle-able md5-28bit form by
-    default), intra-batch pairs come from the batch operator
-    (simhash_near_dups — which also enforces the
-    blocks >= max_hamming + 1 recall guarantee), cross-batch pairs
-    from probing the persistent (block, key) store of every EARLIER
-    batch with the same bit_count(xor) Hamming verify. The store
-    holds (id, simhash, block, key) only — ~40 B/doc, never text.
+    default) and blocked, and the batch operator's candidate join +
+    Hamming verify (dedup._simhash_pairs) runs on (batch, batch) and
+    on (batch, store of every EARLIER batch). The blocking must keep
+    simhash_near_dups' recall guarantee (blocks >= max_hamming + 1),
+    checked here once. The store holds (id, simhash, block, key)
+    only — ~40 B/doc, never text; both sinks are idempotent under an
+    at-least-once replay (batch_sink, read_store)."""
+    from ..operators.dedup import (_check_simhash_blocking,
+                                   _simhash_pairs, simhash_block_keys,
+                                   simhash_md5)
+    _check_simhash_blocking(max_hamming, blocks, hash_bits)
 
-    Idempotence contract identical to the MinHash prober: both sinks
-    batch_id-partitioned + dynamic-partition overwrite, probe
-    filtered to batch_id < current, so an at-least-once replay is a
-    byte-identical rewrite. The union over batches equals
-    simhash_near_dups on the unioned corpus (tested): an unordered
-    pair is emitted exactly once, in its LATER doc's micro-batch."""
-    from ..operators.dedup import (simhash_block_keys, simhash_md5,
-                                   simhash_near_dups)
-
-    def process(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def outputs(batch_df, batch_id):
         sim = simhash_md5(batch_df, text_col=text_col, id_col=id_col,
                           k=k, hash_bits=hash_bits).localCheckpoint()
         blocked = simhash_block_keys(sim, id_col=id_col,
                                      blocks=blocks,
                                      hash_bits=hash_bits)
-        pairs = simhash_near_dups(sim, id_col=id_col,
-                                  max_hamming=max_hamming,
-                                  blocks=blocks, hash_bits=hash_bits)
-        from pyspark.errors import AnalysisException
-        try:
-            # raises eagerly (schema inference) when the store does
-            # not exist yet; the probe plan below is lazy
-            store = (spark.read.parquet(store_path)
-                     .where(F.col("batch_id") < int(batch_id)))
-            new = blocked.select(F.col(id_col).alias("n_id"),
-                                 "block", "key",
-                                 F.col("simhash").alias("h_n"))
-            old = store.select(F.col(id_col).alias("o_id"),
-                               "block", "key",
-                               F.col("simhash").alias("h_o"))
-            ham = F.bit_count(F.col("h_n").bitwiseXOR(F.col("h_o")))
-            cross = (new.join(old, ["block", "key"])
-                     .select(F.least("n_id", "o_id").alias("a"),
-                             F.greatest("n_id", "o_id").alias("b"),
-                             ham.alias("hamming"))
-                     .filter(F.col("hamming") <= max_hamming)
-                     .distinct())
-            pairs = pairs.union(cross)
-        except AnalysisException:
-            pass    # first batch: no store written yet
-        (pairs.withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(pairs_path))
-        (blocked.withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(store_path))
+        pairs = _simhash_pairs(blocked, blocked, id_col, max_hamming)
+        store = read_store(batch_df.sparkSession, store_path,
+                           batch_id)
+        if store is not None:
+            pairs = pairs.union(_simhash_pairs(blocked, store, id_col,
+                                               max_hamming))
+        return [(pairs, pairs_path), (blocked, store_path)]
 
-    return process
+    return batch_sink(outputs)
 
 
 def streaming_simhash_dedup(spark, docs_path, store_path, pairs_path,
@@ -257,21 +182,13 @@ def streaming_simhash_dedup(spark, docs_path, store_path, pairs_path,
     Incremental form of the batch simhash_near_dups operator; same
     restart/compaction contract as streaming_minhash_dedup (the
     signature store compacts with compact_signature_store)."""
-    if schema is None:
-        schema = ("doc_id long, text string, lang string, "
-                  "source string, n_chars long")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(docs_path))
-    writer = (stream.writeStream
-              .foreachBatch(simhash_probe_writer(
-                  store_path, pairs_path, text_col=text_col,
-                  id_col=id_col, max_hamming=max_hamming,
-                  blocks=blocks, hash_bits=hash_bits, k=k))
-              .option("checkpointLocation", checkpoint_path))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return file_stream(
+        spark, schema or DOCUMENTS_SCHEMA, docs_path,
+        simhash_probe_writer(store_path, pairs_path,
+                             text_col=text_col, id_col=id_col,
+                             max_hamming=max_hamming, blocks=blocks,
+                             hash_bits=hash_bits, k=k),
+        checkpoint_path, max_files_per_trigger, trigger_once)
 
 
 def embedding_probe_writer(sketch_path, vec_path, pairs_path,
@@ -288,75 +205,33 @@ def embedding_probe_writer(sketch_path, vec_path, pairs_path,
     vectors per banded row, the single-store layout the text probers
     use, would multiply the dominant footprint by ``bands``.
 
-    Per micro-batch: intra-batch pairs from the batch operator
-    (embedding_near_dups), cross-batch candidates from new band keys
-    ⨝ old sketch store, vectors joined back for the candidates only,
-    cosine >= threshold verified with the same cosine_expr as every
-    batch operator. Idempotence contract identical to the other
-    probers (batch_id partitions + dynamic overwrite + probe
-    filtered to batch_id < current). The hyperplane planes are a
-    deterministic function of (seed, dim), so every batch derives
-    identical keys; the embedding dimension must be constant across
-    the stream."""
-    from ..operators.dedup import (embedding_near_dups,
-                                   hyperplane_band_keys)
-    from ..operators.similarity import cosine_expr
+    Per micro-batch, ONE sketch pass derives the batch's band keys,
+    and the batch operator's candidate join + attach-join verify
+    (dedup._embedding_pairs, the JVM-fold cosine twin) runs on
+    (batch, batch) and on (batch, sketch + vector stores of every
+    EARLIER batch). Both stores and the pairs sink are idempotent
+    under an at-least-once replay (batch_sink, read_store). The
+    hyperplane planes are a deterministic function of (seed, dim), so
+    every batch derives identical keys; the embedding dimension must
+    be constant across the stream."""
+    from ..operators.dedup import _embedding_keys, _embedding_pairs
 
-    def process(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
+    def outputs(batch_df, batch_id):
         spark = batch_df.sparkSession
-        banded = hyperplane_band_keys(
-            batch_df, id_col=id_col, vec_col=vec_col, bits=bits,
-            bands=bands, seed=seed).localCheckpoint()
-        pairs = embedding_near_dups(batch_df, id_col=id_col,
-                                    vec_col=vec_col,
-                                    threshold=threshold, bits=bits,
-                                    bands=bands, seed=seed)
-        from pyspark.errors import AnalysisException
-        try:
-            sketches = (spark.read.parquet(sketch_path)
-                        .where(F.col("batch_id") < int(batch_id)))
-            old_vecs = (spark.read.parquet(vec_path)
-                        .where(F.col("batch_id") < int(batch_id))
-                        .select(F.col(id_col).alias("o_id"),
-                                F.col(vec_col).alias("v_o")))
-            new_keys = banded.select(F.col(id_col).alias("n_id"),
-                                     "band", "key")
-            old_keys = sketches.select(F.col(id_col).alias("o_id"),
-                                       "band", "key")
-            # candidates deduped BEFORE the vector fetch: each pair
-            # pays for its two vectors + one cosine exactly once
-            cand = (new_keys.join(old_keys, ["band", "key"])
-                    .select("n_id", "o_id").distinct())
-            new_vecs = batch_df.select(F.col(id_col).alias("n_id"),
-                                       F.col(vec_col).alias("v_n"))
-            cross = (cand.join(new_vecs, "n_id")
-                     .join(old_vecs, "o_id")
-                     .select(F.least("n_id", "o_id").alias("a"),
-                             F.greatest("n_id", "o_id").alias("b"),
-                             cosine_expr("v_n", "v_o")
-                             .alias("cosine"))
-                     .filter(F.col("cosine") >= threshold))
-            pairs = pairs.union(cross)
-        except AnalysisException:
-            pass    # first batch: no stores written yet
-        (pairs.withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(pairs_path))
-        (banded.drop(vec_col)
-         .withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(sketch_path))
-        (batch_df.select(id_col, vec_col)
-         .withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(vec_path))
+        keys = _embedding_keys(batch_df, id_col, vec_col, bits, bands,
+                               seed)
+        pairs = _embedding_pairs(keys, keys, batch_df, batch_df,
+                                 id_col, vec_col, threshold)
+        sketches = read_store(spark, sketch_path, batch_id)
+        old_vecs = read_store(spark, vec_path, batch_id)
+        if sketches is not None and old_vecs is not None:
+            pairs = pairs.union(_embedding_pairs(
+                keys, sketches, batch_df, old_vecs, id_col, vec_col,
+                threshold))
+        return [(pairs, pairs_path), (keys, sketch_path),
+                (batch_df.select(id_col, vec_col), vec_path)]
 
-    return process
+    return batch_sink(outputs)
 
 
 def streaming_embedding_dedup(spark, emb_path, sketch_path, vec_path,
@@ -371,21 +246,16 @@ def streaming_embedding_dedup(spark, emb_path, sketch_path, vec_path,
     Incremental form of the batch embedding_near_dups operator; same
     restart contract as the other streaming dedup wrappers. Both
     stores compact with compact_signature_store."""
-    if schema is None:
+    return file_stream(
+        spark,
         # the testdata embeddings-table shape
-        schema = "vec_id long, embedding array<float>, label int"
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(emb_path))
-    writer = (stream.writeStream
-              .foreachBatch(embedding_probe_writer(
-                  sketch_path, vec_path, pairs_path, id_col=id_col,
-                  vec_col=vec_col, threshold=threshold, bits=bits,
-                  bands=bands, seed=seed))
-              .option("checkpointLocation", checkpoint_path))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        schema or "vec_id long, embedding array<float>, label int",
+        emb_path,
+        embedding_probe_writer(sketch_path, vec_path, pairs_path,
+                               id_col=id_col, vec_col=vec_col,
+                               threshold=threshold, bits=bits,
+                               bands=bands, seed=seed),
+        checkpoint_path, max_files_per_trigger, trigger_once)
 
 
 def compact_signature_store(spark, store_path, target_files=8):
@@ -395,7 +265,6 @@ def compact_signature_store(spark, store_path, target_files=8):
     streaming runs (stream stopped): compaction keeps probe-side scan
     cost flat as micro-batches accumulate, and replay idempotence is
     unaffected because only the in-flight batch ever replays."""
-    from pyspark.sql import functions as F
     store = spark.read.parquet(store_path)
     compacted = (store.drop("batch_id")
                  .withColumn("batch_id", F.lit(-1))
@@ -414,8 +283,8 @@ def decontaminate_writer(bench_grams_df, out_path, text_col="text",
     corpus-side text shuffle) and only clean rows land in
     ``out_path``. Stateless across batches (the benchmark never
     changes mid-stream), so exactly-once comes purely from the
-    batch_id dynamic-partition overwrite: a replayed batch replaces
-    its own output partition bit-for-bit.
+    idempotent batch_sink: a replayed batch replaces its own output
+    partition bit-for-bit.
 
     ``bench_grams_df`` is the raw benchmark docs frame (any frame
     with a text column); gram extraction happens per batch on the
@@ -423,19 +292,14 @@ def decontaminate_writer(bench_grams_df, out_path, text_col="text",
     build — pass ``.cache()``'d input if the suite is large."""
     from ..operators.dedup import contamination_flags
 
-    def process(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
+    def outputs(batch_df, batch_id):
         clean = (contamination_flags(batch_df, bench_grams_df,
                                      text_col=text_col,
                                      id_col=id_col, n=n)
                  .filter("NOT contaminated")
-                 .drop("n_contaminated_grams", "contaminated")
-                 .withColumn("batch_id", F.lit(batch_id)))
-        (clean.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(out_path))
-    return process
+                 .drop("n_contaminated_grams", "contaminated"))
+        return [(clean, out_path)]
+    return batch_sink(outputs)
 
 
 def streaming_decontaminate(spark, docs_path, bench_path, out_path,
@@ -448,18 +312,9 @@ def streaming_decontaminate(spark, docs_path, bench_path, out_path,
     static benchmark parquet. Restart processes only new files (the
     streaming checkpoint tracks progress); the union of all clean
     partitions equals batch decontaminate() on the full table."""
-    if schema is None:
-        schema = ("doc_id long, text string, lang string, "
-                  "source string, n_chars long")
     bench = spark.read.parquet(bench_path).cache()
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(docs_path))
-    writer = (stream.writeStream
-              .foreachBatch(decontaminate_writer(
-                  bench, out_path, text_col=text_col,
-                  id_col=id_col, n=n))
-              .option("checkpointLocation", checkpoint_path))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return file_stream(
+        spark, schema or DOCUMENTS_SCHEMA, docs_path,
+        decontaminate_writer(bench, out_path, text_col=text_col,
+                             id_col=id_col, n=n),
+        checkpoint_path, max_files_per_trigger, trigger_once)

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import (GroupState,
                                          GroupStateTimeout)
 
+from . import IMAGES_SCHEMA, batch_sink, file_stream
+
 COMPLETION_OUT_SCHEMA = ("image_id string, seg_id long, "
                          "pix_count long, mean_val double, "
                          "min_val long, max_val long")
@@ -36,11 +38,7 @@ def streaming_segment_images(spark, images_path, cfg, schema=None):
 
     schema defaults to the input_hint images schema (imagegen)."""
     from ..operators.segment import segment_images
-    if schema is None:
-        schema = ("image_id string, bytes binary, w int, h int, "
-                  "fmt string, caption string, phash long, "
-                  "num_clusters long")
-    stream = (spark.readStream.schema(schema)
+    stream = (spark.readStream.schema(schema or IMAGES_SCHEMA)
               .option("maxFilesPerTrigger", 4)
               .parquet(images_path))
     return segment_images(stream, cfg)
@@ -51,24 +49,16 @@ def stats_batch_writer(cfg, out_path, percentiles=(50,)):
     stats for one micro-batch, written IDEMPOTENTLY. foreachBatch is
     at-least-once — a crash after the parquet write but before the
     streaming checkpoint commits the batch replays it on restart —
-    so the output is partitioned by batch_id and written with
-    dynamic-partition overwrite: a replay replaces its own partition
-    instead of appending duplicate stats rows, making the
-    end-to-end pipeline effectively exactly-once. Exposed separately
-    so the replay path is directly testable."""
+    so the output goes through the idempotent :func:`batch_sink`: a
+    replay replaces its own batch_id partition instead of appending
+    duplicate stats rows, making the end-to-end pipeline effectively
+    exactly-once. Exposed separately so the replay path is directly
+    testable."""
     from ..operators.zonal import segment_stats_tiled
 
-    def process(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        (segment_stats_tiled(batch_df, cfg, percentiles=percentiles)
-         .withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id")
-         .parquet(out_path))
-
-    return process
+    return batch_sink(lambda batch_df, batch_id: [(
+        segment_stats_tiled(batch_df, cfg, percentiles=percentiles),
+        out_path)])
 
 
 def streaming_segment_stats(spark, images_path, cfg, out_path,
@@ -90,21 +80,10 @@ def streaming_segment_stats(spark, images_path, cfg, out_path,
     stitch — is a per-row pure function; micro-batch boundaries
     cannot split an image and the streamed union of outputs equals
     the batch run on the full table (tested)."""
-    if schema is None:
-        schema = ("image_id string, bytes binary, w int, h int, "
-                  "fmt string, caption string, phash long, "
-                  "num_clusters long")
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(images_path))
-    writer = (stream.writeStream
-              .foreachBatch(stats_batch_writer(cfg, out_path,
-                                               percentiles))
-              .option("checkpointLocation", checkpoint_path))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return file_stream(spark, schema or IMAGES_SCHEMA, images_path,
+                       stats_batch_writer(cfg, out_path, percentiles),
+                       checkpoint_path, max_files_per_trigger=4,
+                       trigger_once=trigger_once)
 
 
 def segment_completion_stream(partials):

@@ -26,12 +26,16 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_exact_duplicates(spark, docs):
@@ -626,25 +630,52 @@ def test_streaming_embedding_near_dups_matches_batch(spark, tmp_path):
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_minhash_probe_replay_is_idempotent(spark, tmp_path):
+@pytest.mark.parametrize("family", ["minhash", "simhash", "embedding"])
+def test_probe_replay_is_idempotent(spark, tmp_path, family):
     """foreachBatch is at-least-once: replaying the last micro-batch
     (crash between the parquet writes and the checkpoint commit)
-    must leave the pairs table AND the signature store byte-for-byte
-    unchanged — both sinks are batch_id-partitioned with
-    dynamic-partition overwrite, and the replayed probe filters the
-    store to earlier batches only."""
-    import pandas as pd
+    must leave the pairs table AND every store byte-for-byte
+    unchanged, for each near-dup prober — all sinks are
+    batch_id-partitioned with dynamic-partition overwrite, and the
+    replayed probe filters its stores to earlier batches only."""
+    from pyshepseg_spark.streaming.dedup import (
+        embedding_probe_writer, minhash_probe_writer,
+        simhash_probe_writer)
 
-    from pyshepseg_spark.streaming.dedup import minhash_probe_writer
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet")
-    pdf = docs.toPandas().sort_values("doc_id", ignore_index=True)
     store = str(tmp_path / "store")
+    vecs = str(tmp_path / "vecs")
     pairs = str(tmp_path / "pairs")
-    writer = minhash_probe_writer(store, pairs)
-    b0 = spark.createDataFrame(pdf.iloc[:250])
-    b1 = spark.createDataFrame(pdf.iloc[250:])
+    if family == "embedding":
+        emb = spark.read.parquet(
+            "/root/testdata/sf0.001/embeddings.parquet")
+        # scaled copies of 0..9 in batch 1: cross-batch pairs
+        copies = (emb.filter(F.col("vec_id") < 10)
+                  .select((F.col("vec_id") + 1_000_000).alias("vec_id"),
+                          F.transform("embedding",
+                                      lambda x: x * F.lit(1.0001))
+                          .cast("array<float>").alias("embedding"),
+                          "label"))
+        b0 = emb.filter(F.col("vec_id") < 300)
+        b1 = emb.filter(F.col("vec_id") >= 300).unionByName(copies)
+        writer = embedding_probe_writer(store, vecs, pairs,
+                                        threshold=0.999, bits=24,
+                                        bands=3)
+        score = "cosine"
+        stores = {store: ["batch_id", "vec_id", "band", "key"],
+                  vecs: ["batch_id", "vec_id"]}
+    else:
+        docs = spark.read.parquet(
+            "/root/testdata/sf0.001/documents.parquet")
+        pdf = docs.toPandas().sort_values("doc_id", ignore_index=True)
+        b0 = spark.createDataFrame(pdf.iloc[:250])
+        b1 = spark.createDataFrame(pdf.iloc[250:])
+        if family == "minhash":
+            writer = minhash_probe_writer(store, pairs)
+            score, key = "est_jaccard", ["band", "bucket"]
+        else:
+            writer = simhash_probe_writer(store, pairs)
+            score, key = "hamming", ["block", "key"]
+        stores = {store: ["batch_id", "doc_id", *key]}
     writer(b0, 0)
     writer(b1, 1)
 
@@ -652,13 +683,14 @@ def test_minhash_probe_replay_is_idempotent(spark, tmp_path):
         return (spark.read.parquet(path).select(*cols).toPandas()
                 .sort_values(cols, ignore_index=True))
 
-    pair_cols = ["batch_id", "a", "b", "est_jaccard"]
-    store_cols = ["batch_id", "doc_id", "band", "bucket"]
-    pairs1, store1 = snap(pairs, pair_cols), snap(store, store_cols)
+    pair_cols = ["batch_id", "a", "b", score]
+    pairs1 = snap(pairs, pair_cols)
+    stores1 = {p: snap(p, c) for p, c in stores.items()}
     assert (pairs1["batch_id"] == 1).any()   # cross-batch probe hit
     writer(b1, 1)                            # the at-least-once replay
     pd.testing.assert_frame_equal(snap(pairs, pair_cols), pairs1)
-    pd.testing.assert_frame_equal(snap(store, store_cols), store1)
+    for p, c in stores.items():
+        pd.testing.assert_frame_equal(snap(p, c), stores1[p])
 
 
 # ---------------------------------------------------------------

@@ -9,9 +9,10 @@ as a timing that noise can hide.
 
 The budgets are the counts measured on this fixture (tests/conftest.py:
 3 images of 256^2, tile 128, overlap 32, ``local[8]``; for
-``duplicate_groups`` a three-pair integer frame with one chain and one
-lone pair). They may only go down: lower a budget when a change
-removes jobs.
+``duplicate_groups`` a three-pair frame with one chain and one lone
+pair, with integer and with string ids; for ``embedding_near_dups``
+the sf0.001 embeddings table at threshold 0.9, 16 bits, 4 bands).
+They may only go down: lower a budget when a change removes jobs.
 """
 
 from __future__ import annotations
@@ -19,7 +20,8 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from pyshepseg_spark.operators.dedup import duplicate_groups
+from pyshepseg_spark.operators.dedup import (duplicate_groups,
+                                             embedding_near_dups)
 from pyshepseg_spark.operators.segment import (fit_global_centres,
                                                segment_images_tiled)
 from pyshepseg_spark.operators.spatial import point_in_segment
@@ -34,6 +36,8 @@ BUDGETS = {
     "segment_sizes": 2,
     "segment_stats_tiled": 4,
     "duplicate_groups": 1,
+    "duplicate_groups_string": 10,
+    "embedding_near_dups": 5,
 }
 
 
@@ -50,9 +54,12 @@ def _calls(images_fixture, cfg, final_tiles):
                          for r in pdf.itertuples()], ignore_index=True)
         return spark.createDataFrame(pts)
 
-    def pairs():
-        return spark.createDataFrame(pd.DataFrame(
-            {"a": [1, 2, 10], "b": [2, 3, 11]}))
+    # read outside the counted call: its schema-inference job is not
+    # the operator's
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+
+    def pairs(a=(1, 2, 10), b=(2, 3, 11)):
+        return spark.createDataFrame(pd.DataFrame({"a": a, "b": b}))
 
     return {
         "fit_global_centres": lambda: fit_global_centres(images, cfg),
@@ -64,6 +71,13 @@ def _calls(images_fixture, cfg, final_tiles):
         "segment_stats_tiled":
             lambda: _run(segment_stats_tiled(images, cfg)),
         "duplicate_groups": lambda: _run(duplicate_groups(pairs())),
+        "duplicate_groups_string": lambda: _run(duplicate_groups(pairs(
+            ["https://a.example/1", "https://b.example/2",
+             "https://x.example/9"],
+            ["https://b.example/2", "https://c.example/3",
+             "https://y.example/8"]))),
+        "embedding_near_dups": lambda: _run(embedding_near_dups(
+            emb, threshold=0.9, bits=16, bands=4)),
     }
 
 
