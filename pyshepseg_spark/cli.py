@@ -29,6 +29,16 @@ def _add_common(p):
     p.add_argument("--shuffle-partitions", type=int, default=None)
 
 
+def _seg_config(args):
+    """The SegConfig of the segment and pipeline commands."""
+    from .operators.segment import SegConfig
+    return SegConfig(img_null_val=args.null_val,
+                     four_connected=args.four_connected,
+                     min_segment_size=args.min_segment_size,
+                     num_clusters=args.num_clusters,
+                     tile_size=args.tilesize, overlap=args.overlap)
+
+
 def cmd_gen(args):
     spark = _session(args)
     from .sources.imagegen import images_spark_df
@@ -39,13 +49,9 @@ def cmd_gen(args):
 
 def cmd_segment(args):
     spark = _session(args)
-    from .operators.segment import (SegConfig, fit_global_centres,
+    from .operators.segment import (fit_global_centres,
                                     segment_images_tiled)
-    cfg = SegConfig(img_null_val=args.null_val,
-                    four_connected=args.four_connected,
-                    min_segment_size=args.min_segment_size,
-                    num_clusters=args.num_clusters,
-                    tile_size=args.tilesize, overlap=args.overlap)
+    cfg = _seg_config(args)
     images = spark.read.parquet(args.images)
     # --global-centres = the reference's own prepare protocol (one
     # k-means over a global subsample, tiling.py:196-224) and the
@@ -66,13 +72,8 @@ def cmd_pipeline(args):
     inside the sequential stitch — one linear job, pixels cross
     Arrow once, mosaic never materialized)."""
     spark = _session(args)
-    from .operators.segment import SegConfig
     from .operators.zonal import segment_stats_tiled
-    cfg = SegConfig(img_null_val=args.null_val,
-                    four_connected=args.four_connected,
-                    min_segment_size=args.min_segment_size,
-                    num_clusters=args.num_clusters,
-                    tile_size=args.tilesize, overlap=args.overlap)
+    cfg = _seg_config(args)
     images = spark.read.parquet(args.images)
     pcts = tuple(int(p) for p in args.percentiles.split(","))
     centres = None

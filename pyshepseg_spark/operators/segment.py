@@ -33,9 +33,10 @@ from pyspark.sql import functions as F
 
 from ..constants import MAX_CLUMP_SIZE
 from ..kernels.kmeans import fit_spectral_clusters_sample
-from ..kernels.shepherd import do_shepherd_segmentation
-from .tiling import (collect_sample, decode_tile_pixels, explode_tiles,
-                     stride_sample_pixels)
+from ..sources.codec import encode_raw_u16
+from .tiling import (_image_columns, _image_rows, _shepherd,
+                     collect_sample, decode_tile_pixels, explode_tiles,
+                     stride_sample_pixels, tile_grid)
 from .zonal import value_histogram
 
 
@@ -80,8 +81,9 @@ def fit_global_centres(images_df, cfg: SegConfig,
                        validate: bool = True) -> np.ndarray:
     """Prepare phase for the one-giant-raster scenario: deterministic
     global stride sample -> driver Lloyd fit (reference
-    tiling.py:196-224). For a table of independent images use
-    :func:`fit_centres_per_image` instead.
+    tiling.py:196-224). A table of independent images needs no
+    prepare phase: each image's centres are fitted inside the
+    segmentation kernel (tiling.fit_image_centres).
 
     validate=True runs the same S4 nodata discovery as
     segment_images_tiled's validate block BEFORE sampling: the
@@ -100,57 +102,8 @@ def fit_global_centres(images_df, cfg: SegConfig,
         images_df, cfg.sample_target_pixels, cfg.img_null_val)
     x = collect_sample(sample_df)
     return fit_spectral_clusters_sample(
-        x, cfg.num_clusters, cfg.fixed_kmeans_init)
-
-
-CENTRES_SCHEMA = "image_id string, k int, nbands int, centres binary"
-
-
-def fit_centres_per_image(images_df, cfg: SegConfig):
-    """Per-image k-means fit (each table row is an independent raster,
-    so each gets its own deterministic clustering — the reference's
-    one-kmeans-per-raster rule applied row-wise). Runs as mapInPandas,
-    embarrassingly parallel, no driver bottleneck. If images_df has a
-    ``num_clusters`` column it overrides cfg.num_clusters per row.
-
-    Returns a small DataFrame (image_id, k, nbands, centres) meant to
-    be broadcast-joined onto the tiles table."""
-    from ..sources.codec import decode_image
-
-    cfg_b = cfg
-    has_k = "num_clusters" in images_df.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (
-        ["num_clusters"] if has_k else [])
-
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt, row.w, row.h)
-                nbands = img.shape[0]
-                x = img.transpose(1, 2, 0).reshape(-1, nbands)
-                if cfg_b.img_null_val is not None:
-                    x = x[(x != cfg_b.img_null_val).all(axis=1)]
-                npix = x.shape[0]
-                k = int(getattr(row, "num_clusters",
-                                cfg_b.num_clusters) or
-                        cfg_b.num_clusters)
-                # reference in-memory default: 1% stride sample
-                # (shepseg.py clusterSubsamplePcnt=1), floored so tiny
-                # images still give Lloyd enough points per cluster
-                target = min(npix, max(npix // 100, k * 200, 2000))
-                skip = max(1, npix // target)
-                x = x[::skip].astype(np.float64)
-                centres = fit_spectral_clusters_sample(
-                    x, k, cfg_b.fixed_kmeans_init)
-                out.append({"image_id": row.image_id, "k": k,
-                            "nbands": nbands,
-                            "centres": centres.astype(
-                                "<f8").tobytes()})
-            yield pd.DataFrame(out, columns=["image_id", "k",
-                                             "nbands", "centres"])
-
-    return images_df.select(*cols).mapInPandas(kernel, CENTRES_SCHEMA)
+        x, cfg.num_clusters, cfg.fixed_kmeans_init,
+        n_init=cfg.kmeans_n_init)
 
 
 def _trim_bounds(tc, tr, ntc, ntr, xs, ys, margin):
@@ -187,15 +140,7 @@ def _segment_tile_record(image_id, tcol, trow, ntcols, ntrows,
     overlap = cfg.overlap
     margin = overlap // 2
     t0 = time.time()
-    res = do_shepherd_segmentation(
-        img,
-        min_segment_size=cfg.min_segment_size,
-        max_spectral_diff=cfg.max_spectral_diff,
-        img_null_val=cfg.img_null_val,
-        four_connected=cfg.four_connected,
-        centres=centres,
-        spect_dist_pcntile=cfg.spect_dist_pcntile,
-        max_clump_size=cfg.max_clump_size)
+    res = _shepherd(img, centres, cfg)
     seg = res.segimg
     nseg = int(seg.max())
     top, bottom, left, right = _trim_bounds(
@@ -290,28 +235,12 @@ def explode_and_segment(images_df, cfg: SegConfig,
     pixel/segtile binaries — the checkpoint and every downstream
     exchange then scale with histogram bins + strip bytes, not
     pixels."""
-    from ..sources.codec import decode_image, encode_raw_u16
-    from .tiling import fit_image_centres, tile_grid
-
-    has_k = "num_clusters" in images_df.columns
     schema, out_cols = _seg_tile_schema(emit_hist, keep_binaries)
 
     def kernel(batches):
         for pdf in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    img = decode_image(row.bytes, row.fmt,
-                                       row.w, row.h)
-                except Exception:
-                    if cfg.on_decode_error == "skip":
-                        continue
-                    raise
-                k = int(getattr(row, "num_clusters",
-                                cfg.num_clusters)
-                        or cfg.num_clusters) if has_k \
-                    else cfg.num_clusters
-                centres = fit_image_centres(img, k, cfg)
+            for row, img, centres in _image_rows(pdf, cfg):
                 tiles, ntcols, ntrows = tile_grid(
                     row.w, row.h, cfg.tile_size, cfg.overlap)
                 for (tc, tr, xp, yp, xs, ys) in tiles:
@@ -326,10 +255,8 @@ def explode_and_segment(images_df, cfg: SegConfig,
                         keep_binaries=keep_binaries))
             yield pd.DataFrame(out, columns=out_cols)
 
-    cols = ["image_id", "bytes", "w", "h", "fmt"]
-    if has_k:
-        cols.append("num_clusters")
-    return images_df.select(*cols).mapInPandas(kernel, schema)
+    return images_df.select(*_image_columns(images_df)).mapInPandas(
+        kernel, schema)
 
 
 def segment_tiles(tiles_df, centres, cfg: SegConfig,
@@ -343,10 +270,10 @@ def segment_tiles(tiles_df, centres, cfg: SegConfig,
     never re-reads the fat tile rows), and per-tile metrics for the
     lineage table.
 
-    ``centres``: None if tiles_df already carries a per-image
-    ``centres`` column (the fused explode_tiles path — preferred), a
-    numpy (k, nbands) matrix (giant-single-raster mode), or the
-    per-image centres DataFrame from :func:`fit_centres_per_image`.
+    ``centres``: None when tiles_df carries each image's own
+    ``centres`` column (``explode_tiles(fit_cfg=cfg)``), or one shared
+    (k, nbands) numpy matrix (giant-single-raster mode, fitted by
+    :func:`fit_global_centres`).
 
     emit_hist/keep_binaries mirror explode_and_segment: stats-only
     consumers set (True, False) so the kernel output carries per-tile
@@ -354,23 +281,13 @@ def segment_tiles(tiles_df, centres, cfg: SegConfig,
     giant-single-raster stats path (segment_stats_tiled with shared
     centres) needs them here because it runs the UNFUSED kernel to
     spread one mosaic's tiles across the cluster."""
-    margin = cfg.overlap // 2
-    overlap = cfg.overlap
-    cfg_b = cfg
-    if centres is None:
-        if "centres" not in tiles_df.columns:
-            raise ValueError("tiles_df lacks 'centres'; pass "
-                             "fit_cfg to explode_tiles or supply "
-                             "centres")
-    elif isinstance(centres, np.ndarray):
+    if centres is not None:
         tiles_df = tiles_df.withColumn(
             "centres", F.lit(bytearray(centres.astype(
                 "<f8").tobytes())))
-    else:
-        # per-image centres: one row per image (unbounded at scale)
-        # — AQE broadcasts when small
-        tiles_df = tiles_df.join(
-            centres.select("image_id", "centres"), "image_id")
+    elif "centres" not in tiles_df.columns:
+        raise ValueError("tiles_df lacks 'centres'; pass fit_cfg to "
+                         "explode_tiles or supply centres")
 
     schema, out_cols = _seg_tile_schema(emit_hist, keep_binaries)
 
@@ -385,7 +302,7 @@ def segment_tiles(tiles_df, centres, cfg: SegConfig,
                 out.append(_segment_tile_record(
                     row.image_id, row.tcol, row.trow, row.ntcols,
                     row.ntrows, row.xpos, row.ypos, row.xsize,
-                    row.ysize, img, row.pixels, c, cfg_b,
+                    row.ysize, img, row.pixels, c, cfg,
                     emit_hist=emit_hist,
                     keep_binaries=keep_binaries))
             yield pd.DataFrame(out, columns=out_cols)
@@ -716,6 +633,33 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
     return joined.mapInPandas(kernel, schema)
 
 
+def _kernel_tiles(images_df, cfg: SegConfig, centres,
+                  emit_hist: bool = False, keep_binaries: bool = True):
+    """images -> seg_tiles for both forms of centres (the shared
+    front half of segment_images_tiled and zonal.segment_stats_tiled).
+
+    centres None: the fused path — decode + fit + tile + segment in
+    ONE kernel pass (raw tiles never round-trip through Arrow);
+    parallelism = image count, the many-images regime.
+
+    A shared (k, nbands) matrix: the giant-single-raster mode. Tiling
+    and segmentation are separate kernels so the tile rows can SPREAD
+    between them — explode_tiles emits all of an image's tiles in the
+    one partition that decoded it, and without the shuffle the
+    segment kernel would run an entire mosaic serially.
+    spread_small_scan is a no-op once input splits already provide
+    parallelism (the 10^12-images regime), so the extra exchange is
+    paid exactly when intra-image parallelism is the point."""
+    if centres is None:
+        return explode_and_segment(images_df, cfg, emit_hist=emit_hist,
+                                   keep_binaries=keep_binaries)
+    from .skew import spread_small_scan
+    tiles = spread_small_scan(
+        explode_tiles(images_df, cfg.tile_size, cfg.overlap))
+    return segment_tiles(tiles, centres, cfg, emit_hist=emit_hist,
+                         keep_binaries=keep_binaries)
+
+
 def segment_images_tiled(images_df, cfg: SegConfig, centres=None,
                          validate: bool = True,
                          keep_pixels: bool = True):
@@ -741,26 +685,7 @@ def segment_images_tiled(images_df, cfg: SegConfig, centres=None,
             nv = discover_img_null_val(images_df)
             if nv is not None:
                 cfg = dataclasses.replace(cfg, img_null_val=int(nv))
-    if centres is None:
-        # fully fused path: decode + fit + tile + segment in ONE
-        # kernel pass (raw tiles never round-trip through Arrow).
-        # Parallelism = image count; the right default for the
-        # many-images flagship.
-        seg_tiles = explode_and_segment(images_df, cfg)
-    else:
-        # giant-single-raster mode: tiling and segmentation are
-        # separate kernels so the tile rows can SPREAD between them
-        # — explode_tiles emits all of an image's tiles in the one
-        # partition that decoded it, and without the shuffle the
-        # segment kernel would run an entire mosaic serially.
-        # spread_small_scan is a no-op once input splits already
-        # provide parallelism (the 10^12-images regime), so the
-        # extra exchange is paid exactly when intra-image
-        # parallelism is the point.
-        from .skew import spread_small_scan
-        tiles = spread_small_scan(
-            explode_tiles(images_df, cfg.tile_size, cfg.overlap))
-        seg_tiles = segment_tiles(tiles, centres, cfg)
+    seg_tiles = _kernel_tiles(images_df, cfg, centres)
     final = stitch(seg_tiles, cfg, keep_pixels=keep_pixels)
     return final, seg_tiles, centres
 
@@ -812,62 +737,22 @@ SEG_IMAGE_SCHEMA = (
 )
 
 
-def segment_images(images_df, cfg: SegConfig, centres=None):
+def segment_images(images_df, cfg: SegConfig):
     """Segment each image as a single tile (mapInPandas, zero
     shuffle). The common path when individual images fit a worker —
     at 10^12-image scale parallelism comes from the image count, and
-    tiling is reserved for oversized rasters.
-
-    centres: None (fit per image inside the kernel — fully fused, one
-    pass over the data), a shared numpy matrix, or a per-image
-    centres DataFrame to broadcast-join."""
-    cfg_b = cfg
-    shared = centres if isinstance(centres, np.ndarray) else None
-    has_k = "num_clusters" in images_df.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (
-        ["num_clusters"] if has_k else [])
-    df = images_df.select(*cols)
-    if centres is not None and not isinstance(centres, np.ndarray):
-        df = df.join(centres.select("image_id", "centres"),
-                     "image_id")
+    tiling is reserved for oversized rasters. Each image is read by
+    tiling._image_rows (its own centre fit, the same as the tiled
+    path's, so both give identical results on images that fit one
+    tile); seg_secs times the Shepherd kernel alone, as in the
+    tiled rows."""
 
     def kernel(batches):
-        from ..sources.codec import decode_image
-        from .tiling import fit_image_centres
         for pdf in batches:
             out = []
-            for row in pdf.itertuples(index=False):
+            for row, img, centres in _image_rows(pdf, cfg):
                 t0 = time.time()
-                try:
-                    img = decode_image(row.bytes, row.fmt,
-                                       row.w, row.h)
-                except Exception:
-                    if cfg_b.on_decode_error == "skip":
-                        continue
-                    raise
-                k = int(getattr(row, "num_clusters",
-                                cfg_b.num_clusters)
-                        or cfg_b.num_clusters)
-                if shared is not None:
-                    c = shared
-                elif hasattr(row, "centres"):
-                    c = np.frombuffer(row.centres,
-                                      dtype="<f8").reshape(
-                        -1, img.shape[0])
-                else:
-                    # same floored-sample fit as the tiled path:
-                    # both consumption paths give identical results
-                    # on images that fit one tile
-                    c = fit_image_centres(img, k, cfg_b)
-                res = do_shepherd_segmentation(
-                    img,
-                    min_segment_size=cfg_b.min_segment_size,
-                    max_spectral_diff=cfg_b.max_spectral_diff,
-                    img_null_val=cfg_b.img_null_val,
-                    four_connected=cfg_b.four_connected,
-                    centres=c,
-                    spect_dist_pcntile=cfg_b.spect_dist_pcntile,
-                    max_clump_size=cfg_b.max_clump_size)
+                res = _shepherd(img, centres, cfg)
                 seg = res.segimg.astype("<i8")
                 out.append({
                     "image_id": row.image_id,
@@ -882,7 +767,8 @@ def segment_images(images_df, cfg: SegConfig, centres=None):
                 "image_id", "w", "h", "nbands", "nseg", "segdata",
                 "n_single_elim", "n_small_elim", "seg_secs"])
 
-    return df.mapInPandas(kernel, SEG_IMAGE_SCHEMA)
+    return images_df.select(*_image_columns(images_df)).mapInPandas(
+        kernel, SEG_IMAGE_SCHEMA)
 
 
 def assemble_image(final_tiles_pdf: pd.DataFrame, w: int, h: int):

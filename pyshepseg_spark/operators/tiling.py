@@ -19,8 +19,6 @@ the engine's H3/S2-analogue spatial index for in-image spatial joins
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pandas as pd
 
@@ -195,7 +193,6 @@ def morton_cell(x: int, y: int, bits: int = 16) -> int:
     return v
 
 
-
 def fit_image_centres(img, k, cfg):
     """Deterministic per-image centre fit on a strided non-null
     sample (the reference's ~1e6-px sampling rule scaled to image
@@ -215,8 +212,54 @@ def fit_image_centres(img, k, cfg):
     target = min(npix, max(npix // 100, k * 200, 2000))
     x = x[::max(1, npix // target)].astype(np.float64)
     return fit_spectral_clusters_sample(
-        x, k, cfg.fixed_kmeans_init,
-        n_init=getattr(cfg, "kmeans_n_init", 5))
+        x, k, cfg.fixed_kmeans_init, n_init=cfg.kmeans_n_init)
+
+
+def _image_columns(images_df):
+    """The image-row columns the kernels read: the pixels, and the
+    per-row ``num_clusters`` when the table has one."""
+    return (["image_id", "bytes", "w", "h", "fmt"]
+            + (["num_clusters"] if "num_clusters" in images_df.columns
+               else []))
+
+
+def _image_rows(pdf, cfg):
+    """The one image-row reader of every images -> segments kernel:
+    yields (row, img, centres) for each row of an Arrow batch
+    selected with :func:`_image_columns`. ``img`` is the decoded
+    (nbands, h, w) array; ``centres`` its own :func:`fit_image_centres`
+    fit, with k = the row's ``num_clusters`` (when set and nonzero)
+    else ``cfg.num_clusters``. A row whose bytes do not decode raises,
+    or is dropped when ``cfg.on_decode_error == "skip"`` — at
+    10^12-image scale garbage rows exist and must not kill the
+    stage."""
+    for row in pdf.itertuples(index=False):
+        try:
+            img = decode_image(row.bytes, row.fmt, row.w, row.h)
+        except Exception:
+            if cfg.on_decode_error == "skip":
+                continue
+            raise
+        k = getattr(row, "num_clusters", None)
+        if not k or pd.isna(k):
+            k = cfg.num_clusters
+        yield row, img, fit_image_centres(img, int(k), cfg)
+
+
+def _shepherd(img, centres, cfg):
+    """The engine's one Shepherd kernel call (the reference's
+    doShepherdSegmentation, shepseg.py:130): ``img`` segmented
+    against ``centres`` with the SegConfig's parameters."""
+    from ..kernels.shepherd import do_shepherd_segmentation
+    return do_shepherd_segmentation(
+        img,
+        min_segment_size=cfg.min_segment_size,
+        max_spectral_diff=cfg.max_spectral_diff,
+        img_null_val=cfg.img_null_val,
+        four_connected=cfg.four_connected,
+        centres=centres,
+        spect_dist_pcntile=cfg.spect_dist_pcntile,
+        max_clump_size=cfg.max_clump_size)
 
 
 def explode_tiles(images_df, tile_size: int, overlap: int,
@@ -225,31 +268,35 @@ def explode_tiles(images_df, tile_size: int, overlap: int,
     tile, pixels re-encoded raw_u16). Runs as mapInPandas: narrow,
     no shuffle; Catalyst prunes unused image columns upstream.
 
-    With ``fit_cfg`` (a SegConfig) the per-image deterministic
-    k-means fit is FUSED into the same kernel — each image is decoded
-    exactly once, and every tile row carries its image's centre
-    matrix (a few hundred bytes), replacing a separate fit stage plus
-    broadcast join."""
+    With ``fit_cfg`` (a SegConfig) the rows are read by
+    :func:`_image_rows`: each image is decoded once, its centres are
+    fitted in the same kernel, every tile row carries that centre
+    matrix (a few hundred bytes) and ``fit_cfg.on_decode_error``
+    applies. Without it every row must decode."""
     if overlap % 2 != 0:
         raise ValueError("overlap size must be even")  # tiling.py:746
     if tile_size <= 2 * overlap:
         raise ValueError("tile_size must exceed 2*overlap")
-    has_k = fit_cfg is not None and "num_clusters" in images_df.columns
+    cols = ["image_id", "tcol", "trow", "ntcols", "ntrows", "xpos",
+            "ypos", "xsize", "ysize", "nbands", "cell", "pixels"]
+    if fit_cfg is None:
+        images_df = images_df.select("image_id", "bytes", "w", "h", "fmt")
+    else:
+        images_df = images_df.select(*_image_columns(images_df))
+        cols.append("centres")
 
     def kernel(batches):
         for pdf in batches:
+            if fit_cfg is None:
+                rows = ((row, decode_image(row.bytes, row.fmt, row.w,
+                                           row.h), None)
+                        for row in pdf.itertuples(index=False))
+            else:
+                rows = _image_rows(pdf, fit_cfg)
             out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt, row.w, row.h)
-                nbands = img.shape[0]
-                centres_bytes = None
-                if fit_cfg is not None:
-                    k = int(getattr(row, "num_clusters",
-                                    fit_cfg.num_clusters)
-                            or fit_cfg.num_clusters) if has_k \
-                        else fit_cfg.num_clusters
-                    centres_bytes = fit_image_centres(
-                        img, k, fit_cfg).astype("<f8").tobytes()
+            for row, img, centres in rows:
+                if centres is not None:
+                    centres = centres.astype("<f8").tobytes()
                 tiles, ntcols, ntrows = tile_grid(
                     row.w, row.h, tile_size, overlap)
                 for (tc, tr, xp, yp, xs, ys) in tiles:
@@ -260,27 +307,18 @@ def explode_tiles(images_df, tile_size: int, overlap: int,
                         "ntcols": ntcols, "ntrows": ntrows,
                         "xpos": xp, "ypos": yp,
                         "xsize": xs, "ysize": ys,
-                        "nbands": nbands,
+                        "nbands": img.shape[0],
                         "cell": morton_cell(xp >> cell_shift,
                                             yp >> cell_shift),
                         "pixels": encode_raw_u16(sub),
                     }
-                    if fit_cfg is not None:
-                        rec["centres"] = centres_bytes
+                    if centres is not None:
+                        rec["centres"] = centres
                     out.append(rec)
-            cols = ["image_id", "tcol", "trow", "ntcols", "ntrows",
-                    "xpos", "ypos", "xsize", "ysize", "nbands",
-                    "cell", "pixels"]
-            if fit_cfg is not None:
-                cols.append("centres")
             yield pd.DataFrame(out, columns=cols)
 
-    cols = ["image_id", "bytes", "w", "h", "fmt"]
-    if has_k:
-        cols.append("num_clusters")
-    schema = (TILE_SCHEMA_WITH_CENTRES if fit_cfg is not None
-              else TILE_SCHEMA)
-    return images_df.select(*cols).mapInPandas(kernel, schema)
+    return images_df.mapInPandas(
+        kernel, TILE_SCHEMA if fit_cfg is None else TILE_SCHEMA_WITH_CENTRES)
 
 
 def decode_tile_pixels(pixels: bytes, nbands: int, ysize: int,
@@ -351,6 +389,3 @@ def tile_metrics(seg_tiles_df):
 __all__ = ["tile_grid", "explode_tiles", "decode_tile_pixels",
            "stride_sample_pixels", "collect_sample", "morton_cell",
            "tile_metrics", "TILE_SCHEMA"]
-
-
-_ = time  # noqa: retained for kernels that time per-tile work

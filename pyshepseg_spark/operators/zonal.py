@@ -9,9 +9,9 @@ reference's whole accumulate/complete/evict state machine
      seg -> {pixval -> count} dict (A3, tilingstats.py:466-515),
      computed vectorized by the one numpy helper
      :func:`value_histogram` (the segmentation kernel's emit_hist,
-     tile_value_histogram, seg_image_value_histogram and
-     segment_and_histogram all call it). Partial agg inside the
-     kernel = map-side combine; pixel rows are never materialized.
+     tile_value_histogram and seg_image_value_histogram all call
+     it). Partial agg inside the kernel = map-side combine; pixel
+     rows are never materialized.
   2. groupBy(image_id, seg_id, band, val).sum(cnt) merges partials,
      then exact finalizers (A5, tilingstats.py:922-1008) derive
      min/max/mean/stddev/mode/median/percentile/pixcount from the
@@ -129,18 +129,10 @@ def segment_stats_tiled(images_df, cfg, percentiles=(50,),
     the single task that decoded the image (fit the matrix with
     segment.fit_global_centres — the reference's own prepare
     phase)."""
-    from .segment import (explode_and_segment, explode_tiles,
-                          segment_tiles, sequential_stitch_mapping)
-    from .skew import spread_small_scan
+    from .segment import _kernel_tiles, sequential_stitch_mapping
 
-    if centres is None:
-        st = explode_and_segment(images_df, cfg, emit_hist=True,
-                                 keep_binaries=False)
-    else:
-        tiles = spread_small_scan(
-            explode_tiles(images_df, cfg.tile_size, cfg.overlap))
-        st = segment_tiles(tiles, centres, cfg, emit_hist=True,
-                           keep_binaries=False)
+    st = _kernel_tiles(images_df, cfg, centres, emit_hist=True,
+                       keep_binaries=False)
     part = sequential_stitch_mapping(st, cfg.overlap, output="hist")
     hist_all = (part.groupBy("image_id", "seg_id", "band", "val")
                 .agg(F.sum("cnt").alias("cnt")))
@@ -262,55 +254,6 @@ def seg_image_value_histogram(seg_images, images_df,
             yield _concat_hist(frames)
 
     part = j.mapInPandas(kernel, HIST_SCHEMA)
-    return (part.groupBy("image_id", "seg_id", "band", "val")
-            .agg(F.sum("cnt").alias("cnt")))
-
-
-def segment_and_histogram(images_df, cfg):
-    """Fused flagship kernel: decode -> segment -> per-segment value
-    histogram in ONE mapInPandas pass (no second decode, no shuffle
-    join of raster binaries — at 10^12-image scale the only shuffle
-    is the tiny histogram-row merge). Emits HIST_SCHEMA rows."""
-    from ..kernels.shepherd import do_shepherd_segmentation
-
-    cfg_b = cfg
-    has_k = "num_clusters" in images_df.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (
-        ["num_clusters"] if has_k else [])
-
-    def kernel(batches):
-        from ..sources.codec import decode_image
-        from .tiling import fit_image_centres
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    img = decode_image(row.bytes, row.fmt,
-                                       row.w, row.h)
-                except Exception:
-                    if cfg_b.on_decode_error == "skip":
-                        continue
-                    raise
-                k = int(getattr(row, "num_clusters",
-                                cfg_b.num_clusters)
-                        or cfg_b.num_clusters)
-                # same floored-sample centre fit as the tiled path,
-                # so single-tile images give identical results on
-                # both consumption paths
-                res = do_shepherd_segmentation(
-                    img,
-                    centres=fit_image_centres(img, k, cfg_b),
-                    min_segment_size=cfg_b.min_segment_size,
-                    max_spectral_diff=cfg_b.max_spectral_diff,
-                    img_null_val=cfg_b.img_null_val,
-                    four_connected=cfg_b.four_connected,
-                    spect_dist_pcntile=cfg_b.spect_dist_pcntile,
-                    max_clump_size=cfg_b.max_clump_size)
-                frames.append(_hist_frame(row.image_id, res.segimg,
-                                          img, cfg_b.img_null_val))
-            yield _concat_hist(frames)
-
-    part = images_df.select(*cols).mapInPandas(kernel, HIST_SCHEMA)
     return (part.groupBy("image_id", "seg_id", "band", "val")
             .agg(F.sum("cnt").alias("cnt")))
 

@@ -183,8 +183,7 @@ def reference_stitched_mosaic(img, k, cfg):
     recode chain (SegmentationConcurrencyMgr.recodeSharedSegments +
     relabelSegments, /root/reference/pyshepseg/tiling.py:950-1064,
     1128-1306). Returns the final (h, w) int64 segment mosaic."""
-    from .kernels.shepherd import do_shepherd_segmentation
-    from .operators.tiling import fit_image_centres, tile_grid
+    from .operators.tiling import _shepherd, fit_image_centres, tile_grid
 
     _, reftiling = import_reference()
     Mgr = reftiling.SegmentationConcurrencyMgr
@@ -197,15 +196,7 @@ def reference_stitched_mosaic(img, k, cfg):
     seg_by_pos = {}
     for (tc, tr, xp, yp, xs, ys) in tiles:
         sub = np.ascontiguousarray(img[:, yp:yp + ys, xp:xp + xs])
-        res = do_shepherd_segmentation(
-            sub,
-            min_segment_size=cfg.min_segment_size,
-            max_spectral_diff=cfg.max_spectral_diff,
-            img_null_val=cfg.img_null_val,
-            four_connected=cfg.four_connected,
-            centres=centres,
-            spect_dist_pcntile=cfg.spect_dist_pcntile,
-            max_clump_size=cfg.max_clump_size)
+        res = _shepherd(sub, centres, cfg)
         seg_by_pos[(tc, tr)] = (res.segimg.astype(np.uint32),
                                 xp, yp, xs, ys)
 

@@ -12,11 +12,10 @@ cores) and additionally local[8] vs local[32] (which on this host
 crosses into SMT siblings — reported for transparency; see notes in
 BENCH/BASELINE.md).
 
-Jobs:
-  - flagship (whole-image path): fused decode+segment+histogram
-    kernel -> exact stats; one kernel pass + one tiny shuffle.
-  - tiled pipeline: explode -> per-tile kernels -> strip-join stitch
-    -> CC -> zonal stats (the giant-raster shape).
+Job: zonal.segment_stats_tiled, the images -> per-segment stats
+path of the entry query and `cli pipeline` (fused decode + fit +
+per-tile kernels with in-kernel histograms -> sequential stitch ->
+exact stats).
 
 Run: python scripts/scaling_bench.py
 """
@@ -48,12 +47,9 @@ print("GEN OK")
 RUNNER = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
 from pyshepseg_spark.session import get_spark
-from pyshepseg_spark.operators.segment import (SegConfig,
-    segment_images_tiled)
-from pyshepseg_spark.operators.zonal import (segment_and_histogram,
-    segment_stats, tile_value_histogram)
+from pyshepseg_spark.operators.segment import SegConfig
+from pyshepseg_spark.operators.zonal import segment_stats_tiled
 
 n = {n}
 cfg = SegConfig(img_null_val=65535, four_connected=False,
@@ -65,15 +61,7 @@ images = spark.read.parquet({path!r})
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
 
-def flagship(df):
-    noop(segment_stats(segment_and_histogram(df, cfg),
-                       percentiles=(50,)))
-
 def tiled(df):
-    # stats-only consumption path: full stitch mapping, histogram
-    # emitted in the same kernel pass (no second mosaic through
-    # Arrow) — zonal.segment_stats_tiled
-    from pyshepseg_spark.operators.zonal import segment_stats_tiled
     noop(segment_stats_tiled(df, cfg, percentiles=(50,)))
 
 from pyshepseg_spark.session import warm_python_workers
@@ -88,19 +76,12 @@ def best_of(fn, arg, reps=2):
         best = dt if best is None or dt < best else best
     return best
 
-fl = images.limit({flagship_images}).repartition({n} * 2).cache()
-n_fl = fl.count()
-flagship(fl)            # warmup pass (workers, codegen, Arrow)
-t_f = best_of(flagship, fl)
 ti = images.limit({tiled_images}).repartition({n} * 2).cache()
 n_ti = ti.count()
 tiled(ti)               # warmup pass
 t_t = best_of(tiled, ti)
 print("RESULT " + json.dumps({{
     "cores": {n},
-    "flagship_images": n_fl,
-    "flagship_sec": round(t_f, 2),
-    "flagship_img_per_sec": round(n_fl / t_f, 3),
     "tiled_images": n_ti,
     "tiled_sec": round(t_t, 2),
     "tiled_img_per_sec": round(n_ti / t_t, 3),
@@ -162,9 +143,8 @@ def run_control(n, tasks=96):
                        f"{out.stdout[-1000:]}\n{out.stderr[-1000:]}")
 
 
-def run_level(n, path, flagship_images, tiled_images):
+def run_level(n, path, tiled_images):
     code = RUNNER.format(repo=REPO, n=n, path=path,
-                         flagship_images=flagship_images,
                          tiled_images=tiled_images)
     out = subprocess.run([sys.executable, "-c", code],
                          capture_output=True, text=True, timeout=1800)
@@ -176,13 +156,12 @@ def run_level(n, path, flagship_images, tiled_images):
 
 
 def main():
-    flagship_images = int(os.environ.get("SCALING_IMAGES", "288"))
     tiled_images = int(os.environ.get("SCALING_TILED_IMAGES", "288"))
     tmp = tempfile.mkdtemp(prefix="scaling_images_")
     path = os.path.join(tmp, "images.parquet")
     gen = subprocess.run(
         [sys.executable, "-c",
-         GEN.format(repo=REPO, n_img=flagship_images, path=path)],
+         GEN.format(repo=REPO, n_img=tiled_images, path=path)],
         capture_output=True, text=True, timeout=900)
     if "GEN OK" not in gen.stdout:
         raise RuntimeError(gen.stdout[-2000:] + gen.stderr[-2000:])
@@ -197,22 +176,17 @@ def main():
     for r in range(rounds):
         this = {}
         for n in (2, 8, 32):
-            res = run_level(n, path, flagship_images, tiled_images)
+            res = run_level(n, path, tiled_images)
             res.update(run_control(n))
             print(f"round {r}: " + json.dumps(res), flush=True)
             this[n] = res
             cur = levels.get(n)
             if cur is None:
                 levels[n] = dict(res)
-            else:
-                for key in ("flagship", "tiled"):
-                    if (res[f"{key}_img_per_sec"]
-                            > cur[f"{key}_img_per_sec"]):
-                        for suffix in ("_sec", "_img_per_sec"):
-                            cur[key + suffix] = res[key + suffix]
-                        if key == "tiled":
-                            cur["tiled_tiles_per_sec"] = \
-                                res["tiled_tiles_per_sec"]
+            elif res["tiled_img_per_sec"] > cur["tiled_img_per_sec"]:
+                for key in ("tiled_sec", "tiled_img_per_sec",
+                            "tiled_tiles_per_sec"):
+                    cur[key] = res[key]
         all_rounds.append(this)
 
     def med(vals):
@@ -230,18 +204,10 @@ def main():
         "levels": levels,
         "rounds": all_rounds,
         "round_efficiencies": {
-            "flagship_2_to_8": round_effs(2, 8,
-                                          "flagship_img_per_sec"),
             "tiled_2_to_8": round_effs(2, 8, "tiled_img_per_sec"),
-            "flagship_8_to_32": round_effs(8, 32,
-                                           "flagship_img_per_sec"),
             "tiled_8_to_32": round_effs(8, 32, "tiled_img_per_sec"),
         },
-        "efficiency_flagship_2_to_8": eff(2, 8,
-                                          "flagship_img_per_sec"),
         "efficiency_tiled_2_to_8": eff(2, 8, "tiled_img_per_sec"),
-        "efficiency_flagship_8_to_32": eff(8, 32,
-                                           "flagship_img_per_sec"),
         "efficiency_tiled_8_to_32": eff(8, 32, "tiled_img_per_sec"),
         "efficiency_control_2_to_8": eff(2, 8,
                                          "control_tiles_per_sec"),
@@ -253,12 +219,8 @@ def main():
         return round(result[f"efficiency_{key}"]
                      / result[f"efficiency_{ctl}"], 3)
 
-    result["normalized_flagship_2_to_8"] = norm(
-        "flagship_2_to_8", "control_2_to_8")
     result["normalized_tiled_2_to_8"] = norm(
         "tiled_2_to_8", "control_2_to_8")
-    result["normalized_flagship_8_to_32"] = norm(
-        "flagship_8_to_32", "control_8_to_32")
     result["normalized_tiled_8_to_32"] = norm(
         "tiled_8_to_32", "control_8_to_32")
     print(json.dumps(result, indent=2))
@@ -273,16 +235,15 @@ cluster sizes per BASELINE.md §3.
 
 ## Throughput by parallelism level
 
-Flagship = whole-image path (fused decode+segment+histogram kernel ->
-exact zonal stats), {flagship_images} images 512x512x3.
-Tiled = explode -> per-tile kernels -> strip-join stitch -> CC ->
-zonal stats, {tiled_images} images (4 tiles each).
+Tiled = zonal.segment_stats_tiled (fused decode + fit + per-tile
+kernels with in-kernel histograms -> sequential stitch -> exact
+zonal stats), {tiled_images} images 512x512x3 (4 tiles each).
 
-| cores | flagship wall (s) | flagship img/s | tiled wall (s) | tiled img/s | tiled tiles/s | control kernel tiles/s |
-|---|---|---|---|---|---|---|
-| 2 (N) | {r2['flagship_sec']} | {r2['flagship_img_per_sec']} | {r2['tiled_sec']} | {r2['tiled_img_per_sec']} | {r2['tiled_tiles_per_sec']} | {r2.get('control_tiles_per_sec', '-')} |
-| 8 (4N) | {r8['flagship_sec']} | {r8['flagship_img_per_sec']} | {r8['tiled_sec']} | {r8['tiled_img_per_sec']} | {r8['tiled_tiles_per_sec']} | {r8.get('control_tiles_per_sec', '-')} |
-| 32 | {r32['flagship_sec']} | {r32['flagship_img_per_sec']} | {r32['tiled_sec']} | {r32['tiled_img_per_sec']} | {r32['tiled_tiles_per_sec']} | {r32.get('control_tiles_per_sec', '-')} |
+| cores | tiled wall (s) | tiled img/s | tiled tiles/s | control kernel tiles/s |
+|---|---|---|---|---|
+| 2 (N) | {r2['tiled_sec']} | {r2['tiled_img_per_sec']} | {r2['tiled_tiles_per_sec']} | {r2.get('control_tiles_per_sec', '-')} |
+| 8 (4N) | {r8['tiled_sec']} | {r8['tiled_img_per_sec']} | {r8['tiled_tiles_per_sec']} | {r8.get('control_tiles_per_sec', '-')} |
+| 32 | {r32['tiled_sec']} | {r32['tiled_img_per_sec']} | {r32['tiled_tiles_per_sec']} | {r32.get('control_tiles_per_sec', '-')} |
 
 The **control** column is the hardware ceiling: the identical
 segmentation kernel run under plain multiprocessing (no Spark, no
@@ -298,10 +259,10 @@ Computed within each interleaved round (adjacent-in-time runs, so
 shared-host capacity drift cancels); median across
 {len(all_rounds)} rounds. Per-round values in BENCH/scaling.json.
 
-| pair | flagship | tiled | control (hw ceiling) | flagship / ceiling | tiled / ceiling |
-|---|---|---|---|---|---|
-| N=2 -> 4N=8 | **{result['efficiency_flagship_2_to_8']}** | **{result['efficiency_tiled_2_to_8']}** | {result['efficiency_control_2_to_8']} | **{result['normalized_flagship_2_to_8']}** | **{result['normalized_tiled_2_to_8']}** |
-| 8 -> 32 | {result['efficiency_flagship_8_to_32']} | {result['efficiency_tiled_8_to_32']} | {result['efficiency_control_8_to_32']} | {result['normalized_flagship_8_to_32']} | {result['normalized_tiled_8_to_32']} |
+| pair | tiled | control (hw ceiling) | tiled / ceiling |
+|---|---|---|---|
+| N=2 -> 4N=8 | **{result['efficiency_tiled_2_to_8']}** | {result['efficiency_control_2_to_8']} | **{result['normalized_tiled_2_to_8']}** |
+| 8 -> 32 | {result['efficiency_tiled_8_to_32']} | {result['efficiency_control_8_to_32']} | {result['normalized_tiled_8_to_32']} |
 
 ## Notes
 

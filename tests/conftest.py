@@ -60,3 +60,32 @@ def reconstruction_fraction(seg: np.ndarray, img: np.ndarray,
                     float((np.abs(rec[valid] - img[b][valid])
                            <= tol).mean()))
     return worst
+
+
+def assert_driver_histogram(hist, seg_rows, images_pdf, img_null_val):
+    """``hist`` (a merged HIST_SCHEMA frame) equals value_histogram
+    run on the driver over each collected whole-image raster and its
+    decoded image."""
+    import pandas as pd
+
+    from pyshepseg_spark.operators.zonal import value_histogram
+    from pyshepseg_spark.sources.codec import decode_image
+    frames = []
+    for r in seg_rows.itertuples(index=False):
+        src = images_pdf[images_pdf.image_id == r.image_id].iloc[0]
+        seg = np.frombuffer(r.segdata, dtype="<i8").reshape(r.h, r.w)
+        img = decode_image(src["bytes"], src["fmt"], r.w, r.h)
+        s, b, v, c = value_histogram(seg, img, img_null_val)
+        frames.append(pd.DataFrame({"image_id": r.image_id, "seg_id": s,
+                                    "band": b, "val": v, "cnt": c}))
+    key = ["image_id", "seg_id", "band", "val"]
+    want = pd.concat(frames, ignore_index=True).sort_values(
+        key, ignore_index=True)
+    got = hist.sort_values(key, ignore_index=True)
+    assert len(want) > 0
+    assert list(got.columns) == list(want.columns)
+    assert list(got.image_id) == list(want.image_id)
+    for col in ["seg_id", "band", "val", "cnt"]:
+        assert np.array_equal(got[col].to_numpy(np.int64),
+                              want[col].to_numpy(np.int64)), col
+

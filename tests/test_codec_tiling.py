@@ -74,6 +74,35 @@ def test_tile_grid_small_image_single_tile():
     assert ntc == ntr == 1
 
 
+def test_image_rows_pick_k_and_skip_corrupt_rows():
+    """The image-row reader: a row's k is its num_clusters, else
+    cfg.num_clusters when the value is null or 0; an undecodable row
+    raises, or is dropped under on_decode_error="skip"."""
+    import dataclasses
+
+    import pandas as pd
+    import pytest
+
+    from pyshepseg_spark.operators.segment import SegConfig
+    from pyshepseg_spark.operators.tiling import _image_rows
+    rng = np.random.default_rng(5)
+    img = rng.integers(0, 4000, (3, 40, 40)).astype(np.uint16)
+    good = {"image_id": "a", "bytes": encode_image(img, "raw_u16"),
+            "w": 40, "h": 40, "fmt": "raw_u16"}
+    pdf = pd.DataFrame([
+        dict(good, num_clusters=5),
+        dict(good, image_id="b", num_clusters=None),
+        dict(good, image_id="c", num_clusters=0),
+        dict(good, image_id="bad", bytes=b"junk", num_clusters=5)])
+    cfg = SegConfig(num_clusters=7)
+    with pytest.raises(Exception):
+        list(_image_rows(pdf, cfg))
+    skip = dataclasses.replace(cfg, on_decode_error="skip")
+    got = [(row.image_id, centres.shape)
+           for row, _, centres in _image_rows(pdf, skip)]
+    assert got == [("a", (5, 3)), ("b", (7, 3)), ("c", (7, 3))]
+
+
 def test_morton_cell_locality():
     assert morton_cell(0, 0) == 0
     assert morton_cell(1, 0) == 1

@@ -10,7 +10,8 @@ from pyshepseg_spark.operators.tiling import explode_tiles, tile_metrics
 from pyshepseg_spark.operators.zonal import (check_empty_segments,
                                              segment_sizes)
 from pyshepseg_spark.sources.codec import decode_image
-from tests.conftest import SIZE, reconstruction_fraction
+from tests.conftest import (SIZE, assert_driver_histogram,
+                            reconstruction_fraction)
 
 
 def test_explode_tiles_pixel_equality(spark, images_fixture):
@@ -72,12 +73,11 @@ def test_whole_image_path_agrees_on_segment_structure(
 
 
 def test_lineage_metrics(spark, images_fixture, cfg):
-    from pyshepseg_spark.operators.segment import (
-        fit_centres_per_image, segment_tiles)
+    from pyshepseg_spark.operators.segment import segment_tiles
     _, _, images = images_fixture
-    tiles = explode_tiles(images, cfg.tile_size, cfg.overlap)
-    centres = fit_centres_per_image(images, cfg)
-    st = segment_tiles(tiles, centres, cfg)
+    tiles = explode_tiles(images, cfg.tile_size, cfg.overlap,
+                          fit_cfg=cfg)
+    st = segment_tiles(tiles, None, cfg)
     m = tile_metrics(st).toPandas()
     assert (m.n_tiles == 4).all()
     assert (m.kernel_secs > 0).all()
@@ -315,11 +315,14 @@ def test_sequential_stitch_random_configs_bitwise(spark):
 
 def test_single_tile_images_tiled_equals_whole_image_stats(spark):
     """Images no bigger than one tile: the tiled stats path (stitch
-    degenerate) must produce exactly the whole-image fused flagship's
-    stats — the two consumption paths agree where they overlap."""
+    degenerate) must produce exactly the stats of the whole-image
+    path (segment_images -> seg_image_value_histogram) — the two
+    consumption paths agree where they overlap. The whole-image
+    histogram itself must equal value_histogram over the collected
+    rasters, computed on the driver."""
     import pandas as pd
     from pyshepseg_spark.operators.zonal import (
-        segment_and_histogram, segment_stats, segment_stats_tiled)
+        seg_image_value_histogram, segment_stats, segment_stats_tiled)
     from pyshepseg_spark.sources.imagegen import generate_images_pdf
     pdf = generate_images_pdf(3, size=96, seed=5)
     pdf["num_clusters"] = [int(c.split(": ")[1].split()[0])
@@ -330,11 +333,13 @@ def test_single_tile_images_tiled_equals_whole_image_stats(spark):
     a = segment_stats_tiled(images, cfg, percentiles=(50,)) \
         .toPandas().sort_values(
             ["image_id", "seg_id", "band"], ignore_index=True)
-    b = segment_stats(
-        segment_and_histogram(images, cfg), percentiles=(50,)) \
+    seg = segment_images(images, cfg).localCheckpoint()
+    hist = seg_image_value_histogram(seg, images, img_null_val=65535)
+    b = segment_stats(hist, percentiles=(50,)) \
         .toPandas().sort_values(
             ["image_id", "seg_id", "band"], ignore_index=True)
     pd.testing.assert_frame_equal(a, b)
+    assert_driver_histogram(hist.toPandas(), seg.toPandas(), pdf, 65535)
 
 
 def test_fully_null_image_degrades_gracefully(spark):
@@ -434,7 +439,7 @@ def test_tall_mosaic_streams_across_arrow_batches(spark):
     assert (got == ref).all()
 
 
-def test_corrupt_image_row_skippable(spark):
+def test_corrupt_image_row_skippable(spark, tmp_path):
     """A corrupt bytes row with cfg.on_decode_error='skip' drops out
     of every consumption path instead of killing the stage; the
     default ('fail') still raises, matching the reference."""
@@ -461,6 +466,13 @@ def test_corrupt_image_row_skippable(spark):
     assert set(out["image_id"]) == set(pdf["image_id"])
     segs = segment_images(images, cfg_skip).toPandas()
     assert set(segs["image_id"]) == set(pdf["image_id"])
+    # the checkpointed pipeline reads its images through
+    # explode_tiles(fit_cfg=...), which honours the same setting
+    from pyshepseg_spark.plans.checkpoint import (
+        run_segmentation_checkpointed)
+    final, _ = run_segmentation_checkpointed(
+        spark, images, cfg_skip, str(tmp_path / "ckpt"))
+    assert set(final.toPandas()["image_id"]) == set(pdf["image_id"])
 
 
 def test_fit_global_centres_discovers_nodata(spark, images_fixture,
@@ -489,6 +501,31 @@ def test_fit_global_centres_discovers_nodata(spark, images_fixture,
     assert np.array_equal(c_auto, c_explicit)
     c_raw = fit_global_centres(tagged, nocfg, validate=False)
     assert not np.array_equal(c_raw, c_explicit)
+
+
+def test_fit_global_centres_honours_kmeans_n_init(spark, images_fixture,
+                                                 cfg):
+    """With fixed_kmeans_init=False the global fit runs
+    cfg.kmeans_n_init k-means++ inits, the same fit as the kernel
+    function on the same stride sample."""
+    import dataclasses
+
+    from pyshepseg_spark.kernels.kmeans import fit_spectral_clusters_sample
+    from pyshepseg_spark.operators.segment import fit_global_centres
+    from pyshepseg_spark.operators.tiling import (collect_sample,
+                                                  stride_sample_pixels)
+    _, _, images = images_fixture
+    one = dataclasses.replace(cfg, fixed_kmeans_init=False,
+                              kmeans_n_init=1, num_clusters=8,
+                              sample_target_pixels=20_000)
+    got = fit_global_centres(images, one, validate=False)
+    x = collect_sample(stride_sample_pixels(
+        images, one.sample_target_pixels, one.img_null_val))
+    want = fit_spectral_clusters_sample(x, 8, False, n_init=1)
+    assert np.array_equal(got, want)
+    # five inits keep a different (lower-inertia) fit on this sample
+    assert not np.array_equal(
+        got, fit_spectral_clusters_sample(x, 8, False, n_init=5))
 
 
 def test_giant_mosaic_shared_centres_paths_agree(spark,

@@ -77,10 +77,10 @@ def test_tiny_image_single_tile_pipeline(spark):
 
 def test_streaming_image_ingest(spark, tmp_path, images_fixture):
     """Structured Streaming ingest of the images table through the
-    fused flagship kernel (readStream parquet -> mapInPandas ->
-    append sink)."""
+    whole-image segmentation kernel (readStream parquet ->
+    mapInPandas -> append sink)."""
     import os
-    from pyshepseg_spark.operators.zonal import segment_and_histogram
+    from pyshepseg_spark.operators.segment import segment_images
     pdf, _, images = images_fixture
     src = str(tmp_path / "stream_src")
     os.makedirs(src)
@@ -90,16 +90,16 @@ def test_streaming_image_ingest(spark, tmp_path, images_fixture):
               .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
     cfg = SegConfig(img_null_val=65535, four_connected=False,
                     min_segment_size=50)
-    hist = segment_and_histogram(stream, cfg)
-    q = (hist.writeStream.format("memory").queryName("img_hist")
-         .outputMode("complete")  # streaming agg without watermark
+    segs = segment_images(stream, cfg)
+    q = (segs.writeStream.format("memory").queryName("img_segs")
+         .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ck"))
          .start())
     try:
         q.processAllAvailable()
-        n = spark.sql(
-            "select count(distinct image_id) c from img_hist"
-        ).first()["c"]
-        assert n == 2
+        r = spark.sql(
+            "select count(distinct image_id) c, min(nseg) m "
+            "from img_segs").first()
+        assert r["c"] == 2 and r["m"] > 0
     finally:
         q.stop()

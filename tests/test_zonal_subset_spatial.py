@@ -481,23 +481,20 @@ def test_giant_raster_mode_shared_centres(spark, images_fixture, cfg):
     assert got.max() > 0 and want.max() > 0
 
 
-def test_seg_image_value_histogram_matches_fused(spark,
-                                                 images_fixture, cfg):
+def test_seg_image_value_histogram_matches_driver_histogram(
+        spark, images_fixture, cfg):
     """Stats-from-stored-rasters path: histogramming saved
     whole-image segmentations (seg_image_value_histogram join) must
-    equal the fused segment_and_histogram kernel."""
+    equal value_histogram over the collected rasters, computed on
+    the driver."""
     from pyshepseg_spark.operators.segment import segment_images
-    from pyshepseg_spark.operators.zonal import (
-        seg_image_value_histogram, segment_and_histogram)
-    _, _, images = images_fixture
-    seg = segment_images(images, cfg)
+    from pyshepseg_spark.operators.zonal import seg_image_value_histogram
+    from tests.conftest import assert_driver_histogram
+    pdf, _, images = images_fixture
+    seg = segment_images(images, cfg).localCheckpoint()
     h1 = seg_image_value_histogram(seg, images, img_null_val=65535) \
         .toPandas()
-    h2 = segment_and_histogram(images, cfg).toPandas()
-    key = ["image_id", "seg_id", "band", "val"]
-    h1 = h1.sort_values(key, ignore_index=True)
-    h2 = h2.sort_values(key, ignore_index=True)
-    assert h1.equals(h2)
+    assert_driver_histogram(h1, seg.toPandas(), pdf, 65535)
 
 
 def test_seg_image_value_histogram_rejects_fewer_value_bands(spark):
