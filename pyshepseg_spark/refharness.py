@@ -22,6 +22,7 @@ the final mosaic, not a re-run of the Spark plan.
 from __future__ import annotations
 
 import importlib.machinery
+import os
 import sys
 import types as pytypes
 from types import SimpleNamespace
@@ -29,6 +30,12 @@ from types import SimpleNamespace
 import numpy as np
 
 REFERENCE_PATH = "/root/reference"
+
+
+def reference_available() -> bool:
+    """Whether the reference package directory exists under
+    ``REFERENCE_PATH``. Checks the path only; imports nothing."""
+    return os.path.isdir(os.path.join(REFERENCE_PATH, "pyshepseg"))
 
 
 def _mk_module(name):

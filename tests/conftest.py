@@ -2,11 +2,24 @@ import numpy as np
 import pytest
 
 from pyshepseg_spark.operators.segment import SegConfig, segment_images_tiled
+from pyshepseg_spark.refharness import REFERENCE_PATH, reference_available
 from pyshepseg_spark.session import get_spark
 from pyshepseg_spark.sources.imagegen import generate_images_pdf
 
 SIZE = 256
 N_IMAGES = 3
+
+
+def requires_reference(nearby):
+    """skipif mark for a test of bitwise parity with the reference's
+    own code: it runs wherever the reference checkout exists, and
+    nothing in this repo stands in for that code. ``nearby`` names the
+    reference-free test that covers a nearby property, or says that
+    none does."""
+    return pytest.mark.skipif(
+        not reference_available(),
+        reason=f"needs the reference checkout {REFERENCE_PATH}/pyshepseg;"
+               f" nearby reference-free check: {nearby}")
 
 
 @pytest.fixture(scope="session")

@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from tests.conftest import requires_reference
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -35,9 +36,18 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 ORACLE_KEYS = sorted(entrymod.oracle_sql().keys())
+# the VALUES oracles that replay the reference's stitch: their cases
+# are skipped before the query runs where the checkout is absent
+_REFERENCE_CASE = requires_reference(
+    "test_stitched_mosaic_regression_anchor (the stitched mosaics, an "
+    "engine regression anchor, not reference parity), "
+    "test_zonal_stats_match_numpy, test_point_in_segment_exact")
+ORACLE_CASES = [pytest.param(k, marks=_REFERENCE_CASE)
+                if k in entrymod.REFERENCE_ORACLE_KEYS else k
+                for k in ORACLE_KEYS]
 
 
-@pytest.mark.parametrize("name", ORACLE_KEYS)
+@pytest.mark.parametrize("name", ORACLE_CASES)
 def test_query_matches_oracle(spark, ddb, name):
     q = entrymod.queries()[name]
     got = _normalize(q(spark, SF_DIR).toPandas())

@@ -9,9 +9,13 @@ from pyshepseg_spark.operators.segment import (SegConfig, segment_images_tiled,
 from pyshepseg_spark.operators.tiling import explode_tiles, tile_metrics
 from pyshepseg_spark.operators.zonal import (check_empty_segments,
                                              segment_sizes)
+from pyshepseg_spark.refharness import reference_available
 from pyshepseg_spark.sources.codec import decode_image
 from tests.conftest import (SIZE, assert_driver_histogram,
-                            reconstruction_fraction)
+                            reconstruction_fraction, requires_reference)
+
+_STITCH_NEARBY = ("test_stitched_mosaic_regression_anchor (an engine "
+                  "regression anchor, not reference parity)")
 
 
 def test_explode_tiles_pixel_equality(spark, images_fixture):
@@ -101,9 +105,11 @@ def test_stitch_consistency_single_vs_multi_partition(
 
 
 def test_large_multi_tile_grid(spark):
-    """5x5 tile grid (interior tiles, 4-neighbour stitch chains):
+    """4x4 tile grid (interior tiles, 4-neighbour stitch chains):
     the reconstruction gate must hold across long correspondence
-    chains, not just 2x2 grids."""
+    chains, not just 2x2 grids. Where the reference checkout exists,
+    the mosaic must also equal the reference's sequential stitch
+    bitwise."""
     import pandas as pd
     from pyshepseg_spark.operators.segment import segment_images_tiled
     from pyshepseg_spark.sources.imagegen import generate_image
@@ -124,6 +130,8 @@ def test_large_multi_tile_grid(spark):
     assert (seg[truth == 0] == 0).all()
     sizes = np.bincount(seg.ravel())
     assert (sizes[1:] > 0).all()
+    if not reference_available():
+        return
     # bitwise vs the reference sequential stitch across the full
     # 4x4 grid (long recode chains through interior tiles)
     from pyshepseg_spark.refharness import reference_stitched_mosaic
@@ -278,6 +286,7 @@ def test_stitched_mosaic_regression_anchor(images_fixture, final_tiles):
     assert got == STITCH_ANCHORS
 
 
+@requires_reference(_STITCH_NEARBY)
 def test_sequential_stitch_random_configs_bitwise(spark):
     """Property-style stitch parity: random seeds x random grid
     shapes (edge-grown last row/col, asymmetric overlaps) — the
@@ -366,6 +375,7 @@ def test_fully_null_image_degrades_gracefully(spark):
     assert out[0]["nseg"] == 0
 
 
+@requires_reference(_STITCH_NEARBY)
 def test_non_square_image_bitwise(spark):
     """Rectangular rasters (3x2 tile grid) stitch bitwise-equal to
     the reference replay — every other fixture is square."""
@@ -398,6 +408,9 @@ def test_non_square_image_bitwise(spark):
     assert (got == ref).all()
 
 
+@requires_reference(
+    "none streams a mosaic across Arrow batches; "
+    "test_stitched_mosaic_regression_anchor pins the stitch itself")
 def test_tall_mosaic_streams_across_arrow_batches(spark):
     """The sequential stitch keeps its rolling cache across Arrow
     batch boundaries: force tiny batches (4 tile rows each) on a

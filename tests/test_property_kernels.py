@@ -7,6 +7,7 @@ from hypothesis import strategies as st
 from pyshepseg_spark.kernels.shepherd import (clump, clump_slow,
                                               make_seg_size,
                                               relabel_segments)
+from tests.conftest import requires_reference
 
 
 @settings(max_examples=40, deadline=None)
@@ -65,6 +66,10 @@ def test_relabel_makes_ids_contiguous(h, w, seed):
         assert len(np.unique(seg[cells])) == 1
 
 
+@requires_reference(
+    "test_pipeline.py::test_stitched_mosaic_regression_anchor (fixed "
+    "configs, an engine regression anchor, not reference parity); "
+    "none over random configs")
 @settings(max_examples=8, deadline=None, derandomize=True)
 @given(st.integers(100, 230),                  # image size
        st.sampled_from([(48, 16), (64, 16), (64, 24), (96, 24)]),

@@ -13,6 +13,15 @@ import numpy as np
 import pytest
 
 from pyshepseg_spark.refharness import import_reference
+from tests.conftest import requires_reference
+
+pytestmark = requires_reference(
+    "kernel: test_property_kernels.py::test_clump_equals_sequential_dfs;"
+    " zonal: test_zonal_stats_match_numpy; subset: test_subset_roundtrip;"
+    " stitch: test_stitched_mosaic_regression_anchor (an engine"
+    " regression anchor, not reference parity); spatial UDFs:"
+    " test_variogram_tiled_equals_udf, test_edge_pixels_tiled_equals_udf;"
+    " global-stats estimate: none")
 
 
 @pytest.fixture(scope="module")
