@@ -689,12 +689,11 @@ def _q_a8_centre_dist(spark, sf):
 
 def _q_cosine_near_dups(spark, sf):
     # exact embedding-cosine near-dup pairs (the correctness baseline
-    # for embedding_near_dups' LSH scale path). r06: the broadcast
-    # crossJoin + interpreted-HOF fold (112 s at sf=1.0) is replaced
-    # by cosine_all_pairs_ids — blocked BLAS matmul against the
-    # broadcast corpus matrix with an exact JVM-fold replay of every
-    # pair within 1e-4 of the threshold, so the emitted pair set is
-    # IDENTICAL (proof + A/B in the operator docstring). Output
+    # for embedding_near_dups' LSH scale path). cosine_all_pairs_ids
+    # scores pairs of hashed id blocks (attached by join, nothing
+    # collected) with BLAS, replaying every pair within 1e-4 of the
+    # threshold on the fold twin of the JVM fold, so the emitted pair
+    # set is exactly the fold's (see the operator docstring). Output
     # keeps ids only (floats are engine-precision-sensitive).
     from pyshepseg_spark.operators.similarity import (
         cosine_all_pairs_ids)

@@ -779,15 +779,17 @@ def _embedding_pairs(left, right, left_vecs, right_vecs, id_col,
     >= ``threshold``. The verify is an attach join: each distinct
     pair fetches its two vectors (``left_vecs`` on l, ``right_vecs``
     on r; one (id, vector) row per id), then one mapInArrow pass
-    scores them with the JVM-fold cosine twin
-    (similarity.fold_dots/fold_norms — the doubles of
-    ``cosine_expr``, bit for bit). The pairs get an explicit
+    decides them with similarity._fold_decide and emits the
+    fold-twin cosine (similarity.fold_dots/fold_norms — the doubles
+    of Spark's higher-order-function fold, bit for bit, as
+    tests/test_dedup_text_similarity.py::
+    test_fold_twins_match_spark_hof checks). The pairs get an explicit
     partition count for the same reason as the keys: their shuffle
     is small (16 B/pair), and a coalesced one would run the whole
     verify in one task (measured: 7 s single-task fold at sf1.0 vs
     sub-second parallel)."""
     from .similarity import (_arrow_matrix, _concat_batches,
-                             _np_elem_dtype, fold_dots, fold_norms)
+                             _fold_decide, _np_elem_dtype, fold_norms)
     ldt = _np_elem_dtype(left_vecs, vec_col)
     rdt = _np_elem_dtype(right_vecs, vec_col)
     thr = float(threshold)
@@ -806,20 +808,12 @@ def _embedding_pairs(left, right, left_vecs, right_vecs, id_col,
             ml = _arrow_matrix(tbl.column("v_l"), ldt)
             mr = _arrow_matrix(tbl.column("v_r"), rdt)
             nl, nr = fold_norms(ml), fold_norms(mr)
-            # fast float64 row-dot for the DECISION, then fold-exact
-            # replay of (a) every pair within 1e-4 of the threshold
-            # (the f32-product/sum-order error is <= ~2.4e-7, so only
-            # replayed pairs can change decision) and (b) every
-            # SURVIVOR (its cosine double is emitted downstream and
-            # must be the bit-exact fold value)
+            # a fast float64 row-dot decides; survivors are replayed
+            # too, because their cosine is emitted downstream
             cos = np.einsum("ij,ij->i", ml.astype(np.float64),
                             mr.astype(np.float64)) / (nl * nr)
-            keep = cos >= thr
-            redo = np.nonzero(keep | (np.abs(cos - thr) <= 1e-4))[0]
-            if len(redo):
-                cos[redo] = fold_dots(ml[redo], mr[redo]) \
-                    / (nl[redo] * nr[redo])
-                keep = cos >= thr
+            keep = _fold_decide(cos, thr, ml, mr, nl, nr,
+                                exact_kept=True)
             if not keep.any():
                 continue
             mask = pa.array(keep)

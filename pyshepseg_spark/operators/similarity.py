@@ -1,70 +1,64 @@
 """Similarity search over embedding columns.
 
-Brute-force cosine top-k as the exact baseline, and an IVF
-(inverted-file) variant as the scale path: k-means coarse quantizer
-(reusing the engine's deterministic Lloyd kernel) assigns each vector
-to a cell; queries probe only the ``nprobe`` nearest cells, an
-equi-join on cell id instead of the all-pairs cross join.
+One path per job:
+
+- :func:`brute_force_topk` — exact cosine top-k;
+- :func:`ivf_topk` — the same kernel, with each query scoring only
+  the corpus rows whose nearest coarse cell (a k-means quantizer from
+  :func:`train_ivf_centroids`, the engine's deterministic Lloyd
+  kernel) is among the query's ``nprobe`` nearest cells;
+- :func:`cosine_all_pairs_ids` — exact all-pairs near-dup ids, scored
+  one pair of bounded id blocks per row, so nothing is collected.
+
+Both top-k operators run one per-task kernel and one rank window
+(:func:`_topk`). Every cosine comes from the numpy fold twins below;
+every threshold decision comes from :func:`_fold_decide`, which
+``dedup._embedding_pairs`` shares.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 
 from ..kernels.kmeans import lloyd_kmeans
 
+# The query side of a top-k call is collected to the driver and
+# shipped to every task; a larger query set is split across calls.
+MAX_QUERIES = 4096
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, v: acc + v))
-
-
-def cosine_expr(a, b):
-    """Cosine similarity Column between two array<float/double>
-    columns — JVM-side HOF fold, and the reference formulation of
-    the numpy fold twins below (fold_dots/fold_norms), which
-    replicate its IEEE semantics exactly. Its only caller is
-    ivf_pq_topk's exact refine of the short PQ candidate list; every
-    other cosine path scores through the twins."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-# --- numpy twins of the JVM HOF fold (r06 optimization) -----------
+# --- numpy twins of Spark's higher-order-function cosine ----------
 #
-# Catalyst higher-order functions run INTERPRETED (no whole-stage
-# codegen): cosine_expr costs ~3 lambda evaluations per vector
-# element per pair, which made every embedding operator
-# fold-bound (cosine all-pairs at sf1.0: 112 s measured). The
-# kernels below compute the SAME doubles bit-for-bit: Spark
-# evaluates cosine_expr as x*y products IN THE COLUMN'S ELEMENT
-# TYPE (FloatType multiply for array<float> parquet columns,
-# DoubleType multiply for array<double> frames), folded
-# LEFT-TO-RIGHT into a float64 accumulator, then float64
-# sqrt/divide. Vectorizing across rows while looping the dims
-# preserves the per-row fold order, and float32/float64 multiply,
-# exact float32→float64 upcast, and float64 add are the identical
-# IEEE-754 operations in numpy and the JVM — so every >=-threshold
-# and ordering decision downstream is unchanged (verified
-# output-identical vs the HOF form at sf0.001..1.0). When the two
-# sides' element types differ, Spark promotes the float side to
-# double before the multiply — mirrored by _promote below.
+# The Spark form of a cosine over two array columns is
+#   dot(a, b) = aggregate(zip_with(a, b, (x, y) -> x * y), 0D,
+#                         (acc, v) -> acc + v)
+#   norm(a)   = sqrt(aggregate(transform(a, x -> x * x), 0D,
+#                              (acc, v) -> acc + v))
+# and Catalyst runs those lambdas INTERPRETED (no whole-stage
+# codegen), ~3 lambda evaluations per element per pair. The kernels
+# below compute the SAME doubles bit-for-bit: Spark forms the x*y
+# products IN THE COLUMN'S ELEMENT TYPE (FloatType multiply for
+# array<float> parquet columns, DoubleType multiply for
+# array<double> frames), folds them LEFT-TO-RIGHT into a float64
+# accumulator, then takes a float64 sqrt/divide. Vectorizing across
+# rows while looping the dims keeps the per-row fold order, and
+# float32/float64 multiply, exact float32->float64 upcast and float64
+# add are the identical IEEE-754 operations in numpy and the JVM.
+# When the two sides' element types differ, Spark promotes the float
+# side to double before the multiply — mirrored by _promote. The one
+# difference is a zero vector's cosine: Spark's ANSI division raises
+# on 0/0, numpy gives NaN, which the top-k kernel ranks first as
+# Spark's window ranks a NaN double. Pinned against the Spark form by
+# tests/test_dedup_text_similarity.py::test_fold_twins_match_spark_hof.
 
 def fold_norms(m: np.ndarray) -> np.ndarray:
-    """JVM-fold norms of float32/float64 row vectors: squares in
+    """Fold-exact norms of float32/float64 row vectors: squares in
     the input dtype, left-to-right float64 accumulation, float64
-    sqrt — exactly _norm()'s evaluation order. The input is
-    transposed ONCE so the d accumulation passes read contiguous
-    memory (a strided column walk re-touches every cache line of
-    the matrix per dim — measured ~6x slower); values unchanged."""
+    sqrt. The input is transposed ONCE so the d accumulation passes
+    read contiguous memory (a strided column walk re-touches every
+    cache line of the matrix per dim — measured ~6x slower); values
+    unchanged."""
     mt = np.ascontiguousarray(m.T)
     acc = np.zeros(m.shape[0], dtype=np.float64)
     for t in range(mt.shape[0]):
@@ -73,10 +67,10 @@ def fold_norms(m: np.ndarray) -> np.ndarray:
 
 
 def fold_dots_t(at: np.ndarray, bt: np.ndarray) -> np.ndarray:
-    """JVM-fold dot products over PRE-TRANSPOSED (d, n) (or (d, 1)
+    """Fold-exact dot products over PRE-TRANSPOSED (d, n) (or (d, 1)
     broadcast) inputs that are already dtype-promoted: products in
-    the input dtype, left-to-right float64 accumulation — exactly
-    _dot()'s evaluation order, reading contiguous rows."""
+    the input dtype, left-to-right float64 accumulation, reading
+    contiguous rows."""
     n = max(at.shape[1], bt.shape[1])
     acc = np.zeros(n, dtype=np.float64)
     for t in range(at.shape[0]):
@@ -85,11 +79,10 @@ def fold_dots_t(at: np.ndarray, bt: np.ndarray) -> np.ndarray:
 
 
 def fold_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """JVM-fold dot products of row-aligned matrices (or a (n, d)
+    """Fold-exact dot products of row-aligned matrices (or a (n, d)
     matrix against one (d,) vector broadcast): products in the
-    common dtype, left-to-right float64 accumulation — exactly
-    _dot()'s evaluation order. Transposed-contiguous like
-    fold_norms."""
+    common dtype, left-to-right float64 accumulation.
+    Transposed-contiguous like fold_norms."""
     a2 = a if a.ndim == 2 else a[None, :]
     b2 = b if b.ndim == 2 else b[None, :]
     a2, b2 = _promote(a2, b2)
@@ -108,10 +101,36 @@ def _promote(a: np.ndarray, b: np.ndarray):
     return a, b
 
 
+def _fold_decide(cos, thr, a, b, na, nb, band=1e-4, exact_kept=False):
+    """The one cosine threshold decision: the keep mask of
+    ``cos >= thr``, where ``cos`` holds fast float64 cosines either
+    of the row-aligned pairs (a[i], b[i]) — shape (n,) — or of every
+    pair (a[i], b[j]) — shape (n, m). ``na``/``nb`` are fold_norms of
+    ``a``/``b``.
+
+    Every pair within ``band`` of the threshold is re-decided on the
+    fold-exact cosine (fold_dots over the fold norms), and with
+    ``exact_kept`` so is every kept pair, for callers that emit the
+    cosine. The fast and fold cosines of 64-dim float32 vectors
+    differ by at most ~2.4e-7 (64 float32 product roundings, bounded
+    via Cauchy-Schwarz, plus two norm roundings), 400x inside the
+    1e-4 band, so only replayed pairs can change decision and the
+    kept set is exactly the fold's. ``cos`` is updated in place at
+    the replayed pairs."""
+    keep = cos >= thr
+    near = np.abs(cos - thr) <= band
+    redo = np.nonzero(near | keep if exact_kept else near)
+    if len(redo[0]):
+        i, j = redo[0], redo[-1]
+        cos[redo] = fold_dots(a[i], b[j]) / (na[i] * nb[j])
+        keep[redo] = cos[redo] >= thr
+    return keep
+
+
 def _np_elem_dtype(df, col: str):
     """numpy dtype matching a DataFrame's array column element type
     (float32 for array<float>, float64 for array<double>)."""
-    dt = dict(df.select(col).dtypes)[col]
+    dt = dict(df.dtypes)[col]
     return np.float32 if dt == "array<float>" else np.float64
 
 
@@ -162,157 +181,175 @@ def cosine_all_pairs_ids(emb, threshold=0.4, id_col="vec_id",
                          vec_col="embedding", band=1e-4):
     """Exact all-pairs cosine near-dup id pairs (a < b) — the
     labelled correctness baseline for the LSH scale path
-    (embedding_near_dups), computed as a blocked dense matmul
-    instead of a row-expanded crossJoin + interpreted HOF fold.
+    (embedding_near_dups). The emitted set is exactly the pairs whose
+    fold-exact cosine (the Spark higher-order-function fold, see the
+    module note) is >= ``threshold``: each pair is decided on a
+    float64 BLAS cosine, and :func:`_fold_decide` replays every pair
+    within ``band`` of the threshold on the fold.
 
-    Result-identity with ``crossJoin.filter(cosine_expr >= t)``:
-    every pair is decided from the float64 BLAS cosine; any pair
-    within ``band`` (1e-4) of the threshold is re-decided by an
-    exact replay of the JVM fold (float32 products, left-to-right
-    float64 accumulation, float64 sqrt/divide). The fold and BLAS
-    cosines differ by at most ~2.4e-7 (64 float32 product roundings
-    bounded via Cauchy-Schwarz + two norm roundings), 400x inside
-    the band — so a pair can only change decision if it is
-    re-decided, and re-decided pairs use the bit-identical fold:
-    the emitted pair set is IDENTICAL (verified at sf0.001..1.0;
-    the nearest cosine to the 0.4 threshold across fixtures is
-    4.3e-7 away, so even the bound alone would decide correctly).
-
-    Scale shape: all-pairs exact is O(n^2) by definition — this is
-    the correctness baseline, not the production path. One side is
-    materialized driver-side and broadcast (the same bytes
-    F.broadcast shipped in the crossJoin form); the distributed
-    side ships only ids (guide §2.3: decide with small rows) and
-    each task multiplies its id block against the broadcast matrix
-    with BLAS. n^2 d FLOPs replace n^2 interpreted fold closures."""
-    from .skew import spread_small_scan
+    Scale shape: all-pairs exact is O(n^2) by definition, but no
+    side is collected. The ids are hashed into defaultParallelism
+    blocks (the same derived count as dedup's embedding keys), each
+    block's (id, vector) rows are packed into one row, and every
+    block pair a <= b attaches its two packed blocks through
+    ``dedup._attach``. The block pairs are dealt round-robin over one
+    partition each, and one mapInArrow kernel scores each pair with
+    BLAS in chunks of at most 512 rows against the other block, so a
+    task holds its pair's two blocks and one chunk's cosines, not the
+    corpus."""
+    from .dedup import _attach
     vdt = _np_elem_dtype(emb, vec_col)
-    pdf = emb.select(id_col, vec_col).toPandas()
-    ids_all = pdf[id_col].to_numpy(np.int64)
-    m32 = _as_matrix(pdf[vec_col], vdt)
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((ids_all, m32))
     thr, bandw = float(threshold), float(band)
+    spark = emb.sparkSession
+    nblk = spark.sparkContext.defaultParallelism
+    blocks = (emb.select(
+        F.pmod(F.xxhash64(id_col), F.lit(nblk)).alias("blk"),
+        F.struct(F.col(id_col).cast("long").alias("id"),
+                 F.col(vec_col).alias("v")).alias("row"))
+        .groupBy("blk").agg(F.collect_list("row").alias("rows")))
+    pairs = spark.range(nblk).select(
+        F.col("id").alias("l"),
+        F.explode(F.sequence("id", F.lit(nblk - 1))).alias("r"))
+    # one partition per block pair, round-robin: AQE would coalesce
+    # the block exchanges (few rows, few bytes) into one task
+    blk_pairs = _attach(pairs, blocks, blocks, "blk", "rows") \
+        .repartition(nblk * (nblk + 1) // 2)
 
-    a_side = spread_small_scan(
-        emb.select(F.col(id_col).cast("long").alias("a")))
-
-    def gen(it):
-        import pyarrow as pa
-        ids_, mat32 = bc.value
-        pos = {int(v): i for i, v in enumerate(ids_)}
-        m64 = mat32.astype(np.float64)
-        n64 = np.linalg.norm(m64, axis=1)
-        u64 = m64 / n64[:, None]
-        nf = fold_norms(mat32)           # fold-exact norms
-        for tbl in _concat_batches(it, target_rows=512):
-            aid = tbl.column(0).to_numpy()
-            if len(aid) == 0:
-                continue
-            rows = np.asarray([pos[int(v)] for v in aid], np.int64)
-            cos = u64[rows] @ u64.T      # float64 BLAS decision
-            keep = cos >= thr
-            bi, bj = np.nonzero(np.abs(cos - thr) <= bandw)
-            for i, j in zip(bi.tolist(), bj.tolist()):
-                r = int(rows[i])
-                acc = 0.0
-                for p in (mat32[r] * mat32[j]).tolist():
-                    acc += p             # left-to-right f64 fold
-                keep[i, j] = (acc / (nf[r] * nf[j])) >= thr
-            keep &= ids_[rows][:, None] < ids_[None, :]
-            ki, kj = np.nonzero(keep)
-            if len(ki) == 0:
-                continue
-            yield pa.record_batch(
-                [pa.array(ids_[rows][ki], pa.int64()),
-                 pa.array(ids_[kj], pa.int64())],
-                names=["a", "b"])
-
-    return a_side.mapInArrow(gen, "a long, b long")
-
-
-def brute_force_topk(queries, corpus, k=5,
-                     q_id="q_id", c_id="vec_id",
-                     q_vec="embedding", c_vec="embedding"):
-    """Exact cosine top-k. The query side is bounded (the ANN
-    serving shape — ivf_pq_topk already materializes it driver-side
-    for its ADC tables); the corpus side is scanned ONCE by a
-    mapInArrow kernel that scores each batch against every query
-    with the bit-identical JVM-fold twin (fold_dots/fold_norms —
-    see the module note) and keeps a per-task top-k per query, so
-    the exchange carries at most tasks x queries x k candidate rows
-    instead of |corpus| x |queries| crossJoin rows with interpreted
-    HOF folds. The final rank window runs over that bounded
-    candidate frame with the ORIGINAL ordering (cosine desc, c_id
-    asc) on bit-identical cosine doubles — ranks are unchanged.
-    Per-task pruning is lossless: rows ranked > k within a task
-    cannot enter the global top-k under the same strict total
-    order."""
-    from .skew import spread_small_scan
-    qdt = _np_elem_dtype(queries, q_vec)
-    cdt = _np_elem_dtype(corpus, c_vec)
-    qpdf = queries.select(F.col(q_id).alias("q_id"),
-                          F.col(q_vec).alias("qv")).toPandas()
-    qids = qpdf["q_id"].to_numpy()
-    q32 = (_as_matrix(qpdf["qv"], qdt) if len(qpdf)
-           else np.zeros((0, 1), qdt))
-    qn = fold_norms(q32)
-    sc = queries.sparkSession.sparkContext
-    bc = sc.broadcast((qids, q32, qn))
-    kk = int(k)
-
-    c = spread_small_scan(corpus.select(F.col(c_id).alias("c_id"),
-                                        F.col(c_vec).alias("cv")))
+    def unpack(rows):
+        """(ids, vectors, fold norms, unit float64 rows) of a block."""
+        ids = rows.field("id").to_numpy()
+        m = _arrow_matrix(rows.field("v"), vdt)
+        m64 = m.astype(np.float64)
+        return ids, m, fold_norms(m), \
+            m64 / np.linalg.norm(m64, axis=1)[:, None]
 
     def score(it):
         import pyarrow as pa
-        qids_, q32_, qn_ = bc.value
-        nq = len(qids_)
-        parts = []        # per-task accumulation of candidate rows
+        for batch in it:
+            ls, rs = batch.column("l"), batch.column("r")
+            vl, vr = batch.column("v_l"), batch.column("v_r")
+            for p in range(batch.num_rows):
+                same = ls[p].as_py() == rs[p].as_py()
+                ia, ma, na, ua = unpack(vl[p].values)
+                ib, mb, nb, ub = (ia, ma, na, ua) if same \
+                    else unpack(vr[p].values)
+                for s in range(0, len(ia), 512):
+                    e = s + 512
+                    keep = _fold_decide(ua[s:e] @ ub.T, thr, ma[s:e],
+                                        mb, na[s:e], nb, bandw)
+                    if same:
+                        keep &= ia[s:e, None] < ib[None, :]
+                    ki, kj = np.nonzero(keep)
+                    if len(ki) == 0:
+                        continue
+                    x, y = ia[s:e][ki], ib[kj]
+                    yield pa.record_batch(
+                        [pa.array(np.minimum(x, y), pa.int64()),
+                         pa.array(np.maximum(x, y), pa.int64())],
+                        names=["a", "b"])
+
+    return blk_pairs.mapInArrow(score, "a long, b long")
+
+
+def _topk(queries, corpus, k, q_id, c_id, q_vec, c_vec, cells=None):
+    """The one top-k path: (q_id, c_id, cosine, rank) of the ``k``
+    corpus rows of highest cosine per query, ranked by (cosine desc,
+    c_id asc).
+
+    The query side is bounded (at most MAX_QUERIES rows, else a
+    ValueError) and collected once; the corpus is scanned ONCE by a
+    mapInArrow kernel that scores each batch against every query with
+    the fold twins (see the module note) and keeps a running top-k
+    per query, so the exchange carries at most tasks x queries x k
+    candidate rows. The final rank window runs over that bounded
+    candidate frame with the same ordering on the same doubles, so
+    per-task pruning is lossless: a row ranked > k within a task
+    cannot enter the global top-k under the same strict total order.
+
+    ``cells`` (the IVF path) is (centroids, nprobe): query i then
+    scores only the corpus rows whose nearest centroid is among its
+    ``nprobe`` nearest, a per-query mask over the cells."""
+    from .skew import spread_small_scan
+    qs = queries.select(F.col(q_id).alias("q_id"),
+                        F.col(q_vec).alias("qv"))
+    c = corpus.select(F.col(c_id).alias("c_id"),
+                      F.col(c_vec).alias("cv"))
+    qdt, cdt = _np_elem_dtype(qs, "qv"), _np_elem_dtype(c, "cv")
+    qpdf = qs.limit(MAX_QUERIES + 1).toPandas()
+    if len(qpdf) > MAX_QUERIES:
+        raise ValueError(
+            f"top-k takes at most MAX_QUERIES={MAX_QUERIES} query rows "
+            f"per call; split the query set across calls")
+    qids = qpdf["q_id"].to_numpy()
+    q = (_as_matrix(qpdf["qv"], qdt) if len(qpdf)
+         else np.zeros((0, 1), qdt))
+    cent = probe = None
+    if cells is not None:
+        cent = cells[0].astype(np.float32)
+        probe = np.zeros((len(q), len(cent)), bool)
+        np.put_along_axis(
+            probe, _nearest_cells(q.astype(np.float32), cent, cells[1]),
+            True, axis=1)
+    sc = queries.sparkSession.sparkContext
+    bc = sc.broadcast((qids, q, fold_norms(q), cent, probe))
+    kk = int(k)
+
+    def score(it):
+        import pyarrow as pa
+        qids_, q_, qn_, cent_, probe_ = bc.value
+        top = [None] * len(qids_)    # per query: (c_id, cosine) best k
         for tbl in _concat_batches(it):
-            if nq == 0 or tbl.num_rows == 0:
+            if len(qids_) == 0:
                 continue
             cid = tbl.column(0).to_numpy()
-            cv32 = _arrow_matrix(tbl.column(1), cdt)
-            cn = fold_norms(cv32)
-            for qi in range(nq):
-                dots = fold_dots(cv32, q32_[qi])
-                cos = dots / (qn_[qi] * cn)
-                parts.append((qi, cid, cos))
-        if not parts:
+            cv = _arrow_matrix(tbl.column(1), cdt)
+            cn = fold_norms(cv)
+            if probe_ is not None:
+                own = _nearest_cells(cv.astype(np.float32, copy=False),
+                                     cent_, 1)[:, 0]
+            for i in range(len(qids_)):
+                rows = slice(None) if probe_ is None else probe_[i][own]
+                ci = cid[rows]
+                if len(ci) == 0:
+                    continue
+                cos = fold_dots(cv[rows], q_[i]) / (qn_[i] * cn[rows])
+                if top[i] is not None:
+                    ci = np.concatenate([top[i][0], ci])
+                    cos = np.concatenate([top[i][1], cos])
+                # (cosine desc, c_id asc): lexsort is stable, last key
+                # primary. Spark orders NaN as LARGER than any double,
+                # so a NaN cosine (zero-norm vector) must rank first —
+                # map NaN to +inf for the pruning key only.
+                key = np.where(np.isnan(cos), np.inf, cos)
+                order = np.lexsort((ci, -key))[:kk]
+                top[i] = (ci[order], cos[order])
+        hit = [i for i, t in enumerate(top) if t is not None]
+        if not hit:
             return
-        out_q, out_c, out_s = [], [], []
-        for qi in range(nq):
-            cs = [(c_, s_) for (q_, c_, s_) in parts if q_ == qi]
-            if not cs:
-                continue
-            cid = np.concatenate([c_ for c_, _ in cs])
-            cos = np.concatenate([s_ for _, s_ in cs])
-            # top-k by (cosine desc, c_id asc): lexsort is stable,
-            # last key primary. Spark orders NaN as LARGER than any
-            # double, so a NaN cosine (zero-norm vector) must rank
-            # first — map NaN to +inf for the pruning key only.
-            key = np.where(np.isnan(cos), np.inf, cos)
-            order = np.lexsort((cid, -key))[:kk]
-            out_q.append(np.full(len(order), qi, np.int64))
-            out_c.append(cid[order])
-            out_s.append(cos[order])
-        qpos = np.concatenate(out_q)
         yield pa.record_batch(
-            [pa.array(qids_[qpos]),
-             pa.array(np.concatenate(out_c)),
-             pa.array(np.concatenate(out_s), pa.float64())],
+            [pa.array(qids_[np.repeat(hit, [len(top[i][0])
+                                            for i in hit])]),
+             pa.array(np.concatenate([top[i][0] for i in hit])),
+             pa.array(np.concatenate([top[i][1] for i in hit]),
+                      pa.float64())],
             names=["q_id", "c_id", "cosine"])
 
-    qt = dict(queries.select(F.col(q_id).alias("q_id")).dtypes)["q_id"]
-    ct = dict(corpus.select(F.col(c_id).alias("c_id")).dtypes)["c_id"]
-    cand = c.mapInArrow(score,
-                        f"q_id {qt}, c_id {ct}, cosine double")
+    qt, ct = dict(qs.dtypes)["q_id"], dict(c.dtypes)["c_id"]
+    cand = spread_small_scan(c).mapInArrow(
+        score, f"q_id {qt}, c_id {ct}, cosine double")
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
                                            F.col("c_id").asc())
     return (cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("q_id", "c_id", "cosine", "rank"))
+
+
+def brute_force_topk(queries, corpus, k=5,
+                     q_id="q_id", c_id="vec_id",
+                     q_vec="embedding", c_vec="embedding"):
+    """Exact cosine top-k of each query row over the whole corpus
+    (:func:`_topk`)."""
+    return _topk(queries, corpus, k, q_id, c_id, q_vec, c_vec)
 
 
 def train_ivf_centroids(corpus, n_cells=16, vec_col="embedding",
@@ -329,197 +366,10 @@ def train_ivf_centroids(corpus, n_cells=16, vec_col="embedding",
     return lloyd_kmeans(x, init)
 
 
-def _assign_cells_udf(centroids: np.ndarray, nprobe: int = 1):
-    cent = centroids.astype(np.float32)
-
-    @pandas_udf("array<int>")
-    def assign(vs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float32) for v in vs])
-        d = ((m[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        idx = np.argsort(d, axis=1)[:, :nprobe]
-        return pd.Series([r.tolist() for r in idx])
-
-    return assign
-
-
-def train_pq_codebooks(corpus, m=16, nbits=6, vec_col="embedding",
-                       sample=4096, seed=42):
-    """Product-quantizer codebooks (Jégou et al. 2011): the vector
-    space splits into ``m`` subspaces; each gets its own 2**nbits
-    codewords via the engine's deterministic Lloyd kernel over a
-    bounded driver sample (the same sample-fit protocol as
-    train_ivf_centroids and the reference's own k-means prepare
-    step). Returns ndarray (m, 2**nbits, d/m).
-
-    Default config (r06, VERDICT r5): m=16/nbits=6 — 12 B of codes
-    per 64-dim vector. Recall@5 on the engine's fixture:
-
-      m=8,  nbits=4 (8 B):  plain 0.45, refined(3x) 0.62
-      m=16, nbits=6 (12 B): plain 0.55, refined(3x) 0.95
-
-    The old m=8/nbits=4 default saved 4 B/vector but cost half the
-    refined recall; callers trading recall for bytes can still pass
-    it explicitly.
-
-    At 100 TB this is the memory story for ANN: a 64-dim float
-    vector (256 B) compresses to m bytes of codes (8 B at m=8) —
-    the inverted lists fit in RAM where raw vectors cannot."""
-    pdf = corpus.select(vec_col).limit(sample).toPandas()
-    x = np.stack([np.asarray(v, dtype=np.float64)
-                  for v in pdf[vec_col]])
-    d = x.shape[1]
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m} subspaces")
-    ncodes, dsub = 1 << nbits, d // m
-    books = np.empty((m, ncodes, dsub))
-    for j in range(m):
-        xs = x[:, j * dsub:(j + 1) * dsub]
-        mn, mx = xs.min(axis=0), xs.max(axis=0)
-        step = (mx - mn) / (ncodes + 1)
-        init = mn[None, :] + np.arange(1, ncodes + 1)[:, None] * step
-        books[j] = lloyd_kmeans(xs, init)
-    return books
-
-
-def pq_encode(corpus, codebooks, vec_col="embedding",
-              code_col="pq_code", centroids=None):
-    """Encode vectors to their per-subspace nearest-codeword indices
-    (array<int>, length m): one vectorized argmin per Arrow batch.
-    The stored form for PQ search — at scale this column is written
-    next to (or instead of) the raw vector. Pass the IVF
-    ``centroids`` to also store each vector's coarse ``cell``: with
-    (cell, pq_code) persisted at write time the ANN scan never
-    touches a raw vector again."""
-    books = codebooks.astype(np.float32)
-    m, _, dsub = books.shape
-
-    @pandas_udf("array<int>")
-    def enc(vs: pd.Series) -> pd.Series:
-        x = np.stack([np.asarray(v, dtype=np.float32) for v in vs])
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for j in range(m):
-            xs = x[:, j * dsub:(j + 1) * dsub]
-            d2 = ((xs[:, None, :] - books[j][None, :, :]) ** 2) \
-                .sum(axis=2)
-            codes[:, j] = d2.argmin(axis=1)
-        return pd.Series([r.tolist() for r in codes])
-
-    out = corpus.withColumn(code_col, enc(F.col(vec_col)))
-    if centroids is not None:
-        one = _assign_cells_udf(centroids, 1)
-        out = out.withColumn("cell", one(F.col(vec_col))[0])
-    return out
-
-
-def ivf_pq_topk(queries, corpus, centroids, codebooks, k=5,
-                nprobe=4, refine_factor=0,
-                q_id="q_id", c_id="vec_id",
-                q_vec="embedding", c_vec="embedding",
-                code_col="pq_code"):
-    """IVF-PQ ANN — the full 100 TB shape: IVF cell equi-join prunes
-    the candidate set (as ivf_topk), then candidates are scored from
-    their PQ codes alone by asymmetric distance computation (ADC):
-    per query a (m x 2**nbits) lookup table of subspace dot products
-    is built ONCE driver-side, and each candidate's approximate
-    cosine is a table gather-sum over its m byte codes — no raw
-    vector is touched in the scan, so the scan reads bytes, not
-    floats. cos(q, x^) is exact in the RECONSTRUCTION x^: numerator
-    = sum_j <q_j, c_{j,code_j}>, |x^| = sqrt(sum_j |c_{j,code_j}|^2)
-    (a query-independent norm table).
-
-    ``refine_factor`` > 1 re-ranks the top refine_factor*k PQ
-    candidates with the EXACT cosine over the raw vectors (one
-    semi-join back to the corpus, cost scales with k, not corpus) —
-    with exhaustive probing (nprobe = n_cells) and a refine window
-    covering the corpus this returns exactly brute_force_topk
-    (tested). If ``code_col`` / ``cell`` already exist on the corpus
-    (pq_encode with centroids — the production write path) the
-    stored columns are used and the scan is vector-free; otherwise
-    both are derived on the fly from the raw vectors."""
-    from .skew import spread_small_scan
-    books = codebooks.astype(np.float32)
-    m, ncodes, dsub = books.shape
-    # query-independent reconstruction-norm table
-    norm_tab = (books ** 2).sum(axis=2)          # (m, ncodes)
-
-    qpdf = queries.select(F.col(q_id).alias("q_id"),
-                          F.col(q_vec).alias("qv")).toPandas()
-    qmat = np.stack([np.asarray(v, dtype=np.float32)
-                     for v in qpdf["qv"]])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    # ADC lookup tables for ALL queries: (nq, m, ncodes). The LUT
-    # tensor is nq x m x 2**nbits doubles — the query-set bound for
-    # one call (e.g. 10k queries x 16 x 64 = 80 MB); batch larger
-    # query sets across calls. r06 (ADVICE): shipped as an explicit
-    # broadcast (once per executor, not pickled into every task
-    # closure), and query ids map through a pandas Index keyed by
-    # the RAW id value — string/UUID query ids no longer crash.
-    luts = np.einsum("qjd,jcd->qjc",
-                     qmat.reshape(len(qmat), m, dsub), books)
-    qindex = pd.Index(qpdf["q_id"])
-    bc_adc = queries.sparkSession.sparkContext.broadcast(
-        (luts, norm_tab, qnorm, qindex))
-
-    c = corpus
-    if code_col not in c.columns or "cell" not in c.columns:
-        c = pq_encode(c, codebooks, vec_col=c_vec,
-                      code_col=code_col, centroids=centroids)
-    c = spread_small_scan(c.select(F.col(c_id).alias("c_id"),
-                                   F.col(code_col).alias("code"),
-                                   "cell"))
-
-    probe = _assign_cells_udf(centroids, nprobe)
-    q = (queries.select(F.col(q_id).alias("q_id"),
-                        F.col(q_vec).alias("qv"))
-         .withColumn("cell", F.explode(probe(F.col("qv")))))
-
-    @pandas_udf("double")
-    def adc(codes: pd.Series, qids: pd.Series) -> pd.Series:
-        luts_, norm_tab_, qnorm_, qindex_ = bc_adc.value
-        cm = np.stack([np.asarray(v, dtype=np.int64) for v in codes])
-        qi = qindex_.get_indexer(qids)
-        gather = luts_[qi[:, None], np.arange(m)[None, :], cm]
-        num = gather.sum(axis=1)
-        rnorm = np.sqrt(norm_tab_[np.arange(m)[None, :], cm]
-                        .sum(axis=1))
-        denom = rnorm * qnorm_[qi]
-        return pd.Series(np.where(denom > 0, num / denom, 0.0))
-
-    j = c.join(F.broadcast(q.select("q_id", "cell")), "cell")
-    scored = j.withColumn("pq_cosine", adc(F.col("code"),
-                                           F.col("q_id")))
-    w = Window.partitionBy("q_id").orderBy(F.col("pq_cosine").desc(),
-                                           F.col("c_id").asc())
-    kk = k * refine_factor if refine_factor and refine_factor > 1 \
-        else k
-    top = (scored.withColumn("rank", F.row_number().over(w))
-           .filter(F.col("rank") <= kk))
-    if not refine_factor or refine_factor <= 1:
-        return top.select("q_id", "c_id",
-                          F.col("pq_cosine").alias("cosine"), "rank")
-    # exact re-rank of the short PQ candidate list
-    cand = top.select("q_id", "c_id")
-    vecs = corpus.select(F.col(c_id).alias("c_id"),
-                         F.col(c_vec).alias("cv"))
-    qv = queries.select(F.col(q_id).alias("q_id"),
-                        F.col(q_vec).alias("qv"))
-    # cand is k*refine_factor rows per query — broadcast it against
-    # the big vector table so the re-rank never shuffles the corpus
-    rej = (vecs.join(F.broadcast(cand), "c_id")
-           .join(F.broadcast(qv), "q_id")
-           .withColumn("cosine", cosine_expr("qv", "cv")))
-    w2 = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                            F.col("c_id").asc())
-    return (rej.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "c_id", "cosine", "rank"))
-
-
-def _assign_cells_np(m32: np.ndarray, cent32: np.ndarray,
-                     nprobe: int) -> np.ndarray:
-    """The exact numpy body of _assign_cells_udf (same float32
-    distance sums over the last axis, same argsort) so in-kernel
-    cell assignment is bit-identical to the UDF path."""
+def _nearest_cells(m32: np.ndarray, cent32: np.ndarray,
+                   nprobe: int) -> np.ndarray:
+    """Each float32 row's ``nprobe`` nearest centroids: float32
+    squared distances summed over the last axis, then argsort."""
     d = ((m32[:, None, :] - cent32[None, :, :]) ** 2).sum(axis=2)
     return np.argsort(d, axis=1)[:, :nprobe]
 
@@ -531,91 +381,9 @@ def ivf_topk(queries, corpus, centroids, k=5, nprobe=4,
     probes its ``nprobe`` nearest cells, so only ~nprobe/n_cells of
     the corpus is scored per query. Recall < 1 only when a true
     neighbour lives outside the probed cells (raise nprobe for
-    recall, classic IVF trade-off).
-
-    Execution (r06): the query side is bounded and materialized
-    driver-side (as ivf_pq_topk already does for its ADC tables);
-    its probe cells come from the same float32 argmin numpy ops the
-    assignment UDF used. The corpus is scanned ONCE by a mapInArrow
-    kernel that assigns each batch's cells in-kernel
-    (_assign_cells_np — bit-identical to the UDF path), scores the
-    probed (query, vector) candidates with the JVM-fold twins
-    (fold_dots/fold_norms, see module note) and keeps a per-task
-    top-k per query. This replaces two pandas-UDF passes + a
-    broadcast equi-join carrying both vectors + an interpreted HOF
-    fold per candidate; the rank window runs over the bounded
-    candidate frame with the original ordering on bit-identical
-    doubles, so the result is unchanged (candidate multiset,
-    cosines, ranks all equal — verified vs the join form)."""
-    from .skew import spread_small_scan
-    cent32 = centroids.astype(np.float32)
-    qdt = _np_elem_dtype(queries, q_vec)
-    cdt = _np_elem_dtype(corpus, c_vec)
-    qpdf = queries.select(F.col(q_id).alias("q_id"),
-                          F.col(q_vec).alias("qv")).toPandas()
-    qids = qpdf["q_id"].to_numpy()
-    qmat = (_as_matrix(qpdf["qv"], qdt) if len(qpdf)
-            else np.zeros((0, cent32.shape[1]), qdt))
-    qn = fold_norms(qmat)
-    # probe cells exactly as _assign_cells_udf derived them: the UDF
-    # always casts to float32 before the distance argmin
-    probe_cells = _assign_cells_np(qmat.astype(np.float32), cent32,
-                                   int(nprobe))
-    sc = queries.sparkSession.sparkContext
-    bc = sc.broadcast((qids, qmat, qn, probe_cells, cent32))
-    kk = int(k)
-
-    c = spread_small_scan(corpus.select(F.col(c_id).alias("c_id"),
-                                        F.col(c_vec).alias("cv")))
-
-    def score(it):
-        import pyarrow as pa
-        qids_, q32_, qn_, probes_, cent_ = bc.value
-        nq = len(qids_)
-        parts = []
-        for tbl in _concat_batches(it):
-            if nq == 0 or tbl.num_rows == 0:
-                continue
-            cid = tbl.column(0).to_numpy()
-            cv32 = _arrow_matrix(tbl.column(1), cdt)
-            cells = _assign_cells_np(
-                cv32 if cv32.dtype == np.float32
-                else cv32.astype(np.float32), cent_, 1)[:, 0]
-            cn = fold_norms(cv32)
-            for qi in range(nq):
-                mask = np.isin(cells, probes_[qi])
-                if not mask.any():
-                    continue
-                sub = cv32[mask]
-                cos = fold_dots(sub, q32_[qi]) / (qn_[qi] * cn[mask])
-                parts.append((qi, cid[mask], cos))
-        if not parts:
-            return
-        out_q, out_c, out_s = [], [], []
-        for qi in range(nq):
-            cs = [(c_, s_) for (q_, c_, s_) in parts if q_ == qi]
-            if not cs:
-                continue
-            cid = np.concatenate([c_ for c_, _ in cs])
-            cos = np.concatenate([s_ for _, s_ in cs])
-            key = np.where(np.isnan(cos), np.inf, cos)
-            order = np.lexsort((cid, -key))[:kk]
-            out_q.append(np.full(len(order), qi, np.int64))
-            out_c.append(cid[order])
-            out_s.append(cos[order])
-        qpos = np.concatenate(out_q)
-        yield pa.record_batch(
-            [pa.array(qids_[qpos]),
-             pa.array(np.concatenate(out_c)),
-             pa.array(np.concatenate(out_s), pa.float64())],
-            names=["q_id", "c_id", "cosine"])
-
-    qt = dict(queries.select(F.col(q_id).alias("q_id")).dtypes)["q_id"]
-    ct = dict(corpus.select(F.col(c_id).alias("c_id")).dtypes)["c_id"]
-    cand = c.mapInArrow(score,
-                        f"q_id {qt}, c_id {ct}, cosine double")
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                           F.col("c_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "c_id", "cosine", "rank"))
+    recall, classic IVF trade-off); with nprobe = n_cells it returns
+    exactly :func:`brute_force_topk`. Runs the one top-k kernel
+    (:func:`_topk`), which assigns each corpus batch's cells
+    in-kernel."""
+    return _topk(queries, corpus, k, q_id, c_id, q_vec, c_vec,
+                 cells=(centroids, int(nprobe)))

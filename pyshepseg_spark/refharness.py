@@ -9,8 +9,8 @@ Two consumers:
   queries get a DuckDB VALUES-literal oracle derived from the
   reference's sequential recode path (tiling.py:950-1064) run
   driver-side, so the driver's hash gate cross-checks the engine's
-  order-independent distributed stitch against the reference's
-  order-dependent chaining end to end.
+  sequential stitch replay against the reference's own sequential
+  chaining end to end.
 
 The per-tile kernels here are the engine's own (bitwise-equal to the
 reference's doShepherdSegmentation — test_reference_parity.py::

@@ -1014,90 +1014,192 @@ def test_repetition_signals_cross_engine_random(spark):
 
 
 # ---------------------------------------------------------------
-# IVF-PQ (product-quantized ANN)
+# Similarity kernels: fold twins, the shared top-k kernel and the
+# all-pairs decision
 # ---------------------------------------------------------------
 
-def test_ivf_pq_exhaustive_refine_matches_exact(spark, emb):
-    """With exhaustive probing and a refine window covering the whole
-    corpus, IVF-PQ degrades to exact brute force — the same
-    validation contract ivf_topk carries."""
-    from pyshepseg_spark.operators.similarity import (
-        ivf_pq_topk, train_pq_codebooks)
-    centroids = train_ivf_centroids(emb, n_cells=8)
-    books = train_pq_codebooks(emb, m=8, nbits=4)
-    queries = emb.limit(6).select(
+def _hof_dot(a, b):
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _hof_norm(a):
+    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
+                              F.lit(0.0), lambda acc, v: acc + v))
+
+
+def _bitwise_equal(got, want):
+    """Equal doubles bit for bit, NaN where the other is NaN."""
+    got = np.asarray(got, np.float64)
+    want = np.asarray(want, np.float64)
+    nan = np.isnan(want)
+    return (np.array_equal(np.isnan(got), nan)
+            and np.array_equal(got[~nan].view(np.int64),
+                               want[~nan].view(np.int64)))
+
+
+def test_fold_twins_match_spark_hof(spark):
+    """fold_norms / fold_dots (with _promote for mixed element types)
+    give the doubles of Spark's higher-order-function fold — the
+    reference form ``dot / (norm * norm)`` with dot = aggregate over
+    zip_with products and norm = sqrt of aggregate over squares — bit
+    for bit, for array<float> x array<float>, array<double> x
+    array<double> and both mixed orders. Row 0 is a zero vector: its
+    norm and dots are 0.0 on both sides; Spark's ANSI division turns
+    its cosine into an error (NULL under try_divide), the numpy twin
+    into NaN, which the top-k kernel ranks as Spark's window ranks a
+    NaN double."""
+    from pyshepseg_spark.operators.similarity import (_promote,
+                                                      fold_dots,
+                                                      fold_norms)
+    rng = np.random.default_rng(11)
+    n, d = 200, 64
+    scale = 10.0 ** rng.uniform(-3, 3, (n, 1))
+    mats = {"fa": (rng.standard_normal((n, d)) * scale)
+            .astype(np.float32),
+            "fb": rng.standard_normal((n, d)).astype(np.float32),
+            "da": rng.standard_normal((n, d)) * scale,
+            "db": rng.standard_normal((n, d))}
+    for m in mats.values():
+        m[0] = 0
+    df = spark.createDataFrame(
+        [(i, *[mats[c][i].tolist() for c in mats]) for i in range(n)],
+        "i int, fa array<float>, fb array<float>, "
+        "da array<double>, db array<double>")
+    pairs = [("fa", "fb"), ("da", "db"), ("fa", "db"), ("da", "fb")]
+    cols = [F.col("i")] + [_hof_norm(c).alias(f"n_{c}") for c in mats]
+    for a, b in pairs:
+        cols += [_hof_dot(a, b).alias(f"d_{a}_{b}"),
+                 F.try_divide(_hof_dot(a, b),
+                              _hof_norm(a) * _hof_norm(b))
+                 .alias(f"c_{a}_{b}")]
+    got = df.select(*cols).toPandas().sort_values("i")
+
+    assert _promote(mats["fa"], mats["db"])[0].dtype == np.float64
+    assert _promote(mats["da"], mats["fb"])[1].dtype == np.float64
+    for c in mats:
+        assert _bitwise_equal(fold_norms(mats[c]), got[f"n_{c}"]), c
+    with np.errstate(invalid="ignore"):
+        for a, b in pairs:
+            dots = fold_dots(mats[a], mats[b])
+            assert _bitwise_equal(dots, got[f"d_{a}_{b}"]), (a, b)
+            cos = dots / (fold_norms(mats[a]) * fold_norms(mats[b]))
+            want = got[f"c_{a}_{b}"].to_numpy(np.float64)
+            assert np.isnan(cos[0]) and np.isnan(want[0])  # NULL
+            assert _bitwise_equal(cos[1:], want[1:]), (a, b)
+
+
+def test_topk_ranks_zero_vector_like_spark_window(spark, emb):
+    """A zero corpus vector has a NaN cosine with every query. Both
+    top-k operators (ivf_topk probing every cell) must return exactly
+    the ranks of a Spark row_number window over the fold-twin
+    cosines: Spark orders NaN above every double, so the zero vector
+    ranks first for every query."""
+    from pyshepseg_spark.operators.similarity import (fold_dots,
+                                                      fold_norms)
+    from pyspark.sql import Window
+    # one input partition, spread by the kernel's round-robin scan:
+    # the zero vector's task then holds more than k rows, so the
+    # per-task pruning key decides whether it survives
+    corpus = emb.filter(F.col("vec_id") < 120).select(
+        "vec_id", "embedding").unionByName(spark.createDataFrame(
+            [(10_000, [0.0] * 64)], "vec_id long, embedding array<float>"))\
+        .coalesce(1)
+    queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), "embedding")
-    exact = brute_force_topk(queries, emb, k=5).toPandas() \
-        .sort_values(["q_id", "rank"], ignore_index=True)
-    got = ivf_pq_topk(queries, emb, centroids, books, k=5,
-                      nprobe=8, refine_factor=100).toPandas() \
-        .sort_values(["q_id", "rank"], ignore_index=True)
-    assert got[["q_id", "c_id", "rank"]].values.tolist() == \
-        exact[["q_id", "c_id", "rank"]].values.tolist()
-    assert np.allclose(got.cosine, exact.cosine, atol=1e-6)
+    cp, qp = corpus.toPandas(), queries.toPandas()
+    cm = np.stack([np.asarray(v, np.float32) for v in cp.embedding])
+    with np.errstate(invalid="ignore"):
+        cos = [(int(q), int(c), float(s))
+               for q, v in zip(qp.q_id, qp.embedding)
+               for c, s in zip(cp.vec_id, fold_dots(
+                   cm, np.asarray(v, np.float32))
+                   / (fold_norms(np.asarray([v], np.float32))[0]
+                      * fold_norms(cm)))]
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
+                                           F.col("c_id").asc())
+    want = (spark.createDataFrame(cos, "q_id long, c_id long, "
+                                       "cosine double")
+            .withColumn("rank", F.row_number().over(w))
+            .filter("rank <= 4").toPandas()
+            .sort_values(["q_id", "rank"], ignore_index=True))
+    assert (want[want["rank"] == 1].c_id == 10_000).all()
+    centroids = train_ivf_centroids(corpus, n_cells=4)
+    for got in (brute_force_topk(queries, corpus, k=4),
+                ivf_topk(queries, corpus, centroids, k=4, nprobe=4)):
+        got = got.toPandas().sort_values(["q_id", "rank"],
+                                         ignore_index=True)
+        assert got[["q_id", "c_id", "rank"]].values.tolist() == \
+            want[["q_id", "c_id", "rank"]].values.tolist()
+        assert _bitwise_equal(got.cosine, want.cosine)
 
 
-def test_ivf_pq_recall_and_stored_path(spark, emb):
+def test_all_pairs_replays_the_threshold_band(spark, emb):
+    """cosine_all_pairs_ids decides on the fold-exact cosine. With the
+    threshold set to the fold cosine of a pair whose float64 BLAS
+    cosine is BELOW it, that pair must be emitted; with it one ulp
+    above the fold cosine of a pair whose BLAS cosine is ABOVE it,
+    that pair must be dropped. Either way the whole emitted set is
+    the fold's, also with broadcasts off (a sort-merge attach)."""
     from pyshepseg_spark.operators.similarity import (
-        ivf_pq_topk, pq_encode, train_pq_codebooks)
-    centroids = train_ivf_centroids(emb, n_cells=8)
-    # measured on this fixture: (m=8,nbits=4) plain 0.45/refined
-    # 0.62; (m=16,nbits=6) plain 0.55/refined 0.95 — the noisy
-    # intra-cluster fixture makes PQ-ranked top-5 genuinely hard,
-    # refine is the production answer
-    books = train_pq_codebooks(emb, m=16, nbits=6)
-    queries = emb.limit(8).select(
-        F.col("vec_id").alias("q_id"), "embedding")
-    exact = brute_force_topk(queries, emb, k=5).toPandas()
+        cosine_all_pairs_ids, fold_dots, fold_norms)
+    sub = emb.filter(F.col("vec_id") < 80)
+    pdf = sub.toPandas().sort_values("vec_id")
+    ids = pdf.vec_id.to_numpy()
+    m = np.stack([np.asarray(v, np.float32) for v in pdf.embedding])
+    nf = fold_norms(m)
+    i, j = np.triu_indices(len(ids), 1)
+    fold = fold_dots(m[i], m[j]) / (nf[i] * nf[j])
+    u = m.astype(np.float64)
+    u /= np.linalg.norm(u, axis=1)[:, None]
+    blas = (u @ u.T)[i, j]
+    lo = np.argmax(fold - blas)          # BLAS lowest under the fold
+    hi = np.argmax(blas - fold)          # BLAS highest over the fold
+    assert fold[lo] - blas[lo] > 1e-12 and blas[hi] - fold[hi] > 1e-12
 
-    def recall(df):
-        hits = tot = 0
-        for qid in exact.q_id.unique():
-            e = set(exact[exact.q_id == qid].c_id)
-            a = set(df[df.q_id == qid].c_id)
-            hits += len(e & a)
-            tot += len(e)
-        return hits / tot
+    def emitted(thr):
+        out = cosine_all_pairs_ids(sub, threshold=thr).toPandas()
+        return set(zip(out.a, out.b))
 
-    plain = ivf_pq_topk(queries, emb, centroids, books, k=5,
-                        nprobe=4).toPandas()
-    refined = ivf_pq_topk(queries, emb, centroids, books, k=5,
-                          nprobe=4, refine_factor=4).toPandas()
-    assert recall(plain) >= 0.4
-    assert recall(refined) >= recall(plain)
-    assert recall(refined) >= 0.8
-
-    # the production write path (stored cell + codes, vector-free
-    # scan) must return exactly the on-the-fly result
-    stored = pq_encode(emb, books, centroids=centroids)
-    got = ivf_pq_topk(queries, stored, centroids, books, k=5,
-                      nprobe=4).toPandas() \
-        .sort_values(["q_id", "rank"], ignore_index=True)
-    want = plain.sort_values(["q_id", "rank"], ignore_index=True)
-    pd.testing.assert_frame_equal(got, want)
+    cases = [(fold[lo], (ids[i[lo]], ids[j[lo]]), True),
+             (np.nextafter(fold[hi], np.inf),
+              (ids[i[hi]], ids[j[hi]]), False)]
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    try:
+        for value in (old, "-1"):
+            spark.conf.set(conf, value)
+            for thr, pair, kept in cases:
+                got = emitted(float(thr))
+                assert (pair in got) == kept, (value, pair)
+                assert got == set(zip(ids[i[fold >= thr]],
+                                      ids[j[fold >= thr]])), value
+        plan = cosine_all_pairs_ids(sub)._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert "SortMergeJoin" in plan and "Broadcast" not in plan
+    finally:
+        spark.conf.set(conf, old)
 
 
-def test_pq_encode_reconstruction_beats_random(spark, emb):
-    """Sanity on the codebooks: PQ reconstruction error must be far
-    below the error of random codes from the same codebooks."""
-    from pyshepseg_spark.operators.similarity import (
-        pq_encode, train_pq_codebooks)
-    books = train_pq_codebooks(emb, m=8, nbits=4)
-    enc = pq_encode(emb.limit(100), books).toPandas()
-    x = np.stack([np.asarray(v, dtype=np.float64)
-                  for v in enc.embedding])
-    codes = np.stack([np.asarray(c) for c in enc.pq_code])
-    m, _, dsub = books.shape
-    recon = np.concatenate([books[j][codes[:, j]]
-                            for j in range(m)], axis=1)
-    rng = np.random.default_rng(0)
-    rand = np.concatenate(
-        [books[j][rng.integers(0, 16, size=len(x))]
-         for j in range(m)], axis=1)
-    err = ((x - recon) ** 2).sum(axis=1).mean()
-    err_rand = ((x - rand) ** 2).sum(axis=1).mean()
-    # measured ~0.36x on the fixture; 0.5x guards real regressions
-    assert err < 0.5 * err_rand
+def test_topk_query_collect_is_bounded(spark, emb, monkeypatch):
+    """The one query-side collect takes at most MAX_QUERIES rows and
+    names the bound when there are more."""
+    from pyshepseg_spark.operators import similarity
+    bound = similarity.MAX_QUERIES
+    too_many = spark.range(bound + 1).select(
+        F.col("id").alias("q_id"),
+        F.array(F.lit(1.0).cast("float")).alias("embedding"))
+    with pytest.raises(ValueError, match=f"MAX_QUERIES={bound}"):
+        brute_force_topk(too_many, emb)
+    with pytest.raises(ValueError, match=f"MAX_QUERIES={bound}"):
+        ivf_topk(too_many, emb, np.zeros((2, 1)))
+    # the bound itself is allowed
+    monkeypatch.setattr(similarity, "MAX_QUERIES", 3)
+    q = emb.select(F.col("vec_id").alias("q_id"), "embedding")
+    assert brute_force_topk(q.filter("q_id < 3"), emb,
+                            k=1).count() == 3
+    with pytest.raises(ValueError, match="MAX_QUERIES=3"):
+        brute_force_topk(q.filter("q_id < 4"), emb, k=1)
 
 
 # ---------------------------------------------------------------

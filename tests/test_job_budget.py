@@ -11,8 +11,12 @@ The budgets are the counts measured on this fixture (tests/conftest.py:
 3 images of 256^2, tile 128, overlap 32, ``local[8]``; for
 ``duplicate_groups`` a three-pair frame with one chain and one lone
 pair, with integer and with string ids; for ``embedding_near_dups``
-the sf0.001 embeddings table at threshold 0.9, 16 bits, 4 bands).
-They may only go down: lower a budget when a change removes jobs.
+the sf0.001 embeddings table at threshold 0.9, 16 bits, 4 bands; for
+the similarity operators the same table, as corpus and as the query
+side's ``vec_id < 8`` rows, k=5, ``ivf_topk`` probing all 8 cells of
+centroids trained outside the counted call, ``cosine_all_pairs_ids``
+at threshold 0.4). They may only go down: lower a budget when a
+change removes jobs.
 """
 
 from __future__ import annotations
@@ -24,6 +28,10 @@ from pyshepseg_spark.operators.dedup import (duplicate_groups,
                                              embedding_near_dups)
 from pyshepseg_spark.operators.segment import (fit_global_centres,
                                                segment_images_tiled)
+from pyshepseg_spark.operators.similarity import (brute_force_topk,
+                                                  cosine_all_pairs_ids,
+                                                  ivf_topk,
+                                                  train_ivf_centroids)
 from pyshepseg_spark.operators.spatial import point_in_segment
 from pyshepseg_spark.operators.zonal import (segment_sizes,
                                              segment_stats_tiled)
@@ -38,6 +46,9 @@ BUDGETS = {
     "duplicate_groups": 1,
     "duplicate_groups_string": 10,
     "embedding_near_dups": 5,
+    "brute_force_topk": 4,
+    "ivf_topk": 4,
+    "cosine_all_pairs_ids": 5,
 }
 
 
@@ -45,7 +56,14 @@ def _run(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def _calls(images_fixture, cfg, final_tiles):
+@pytest.fixture(scope="module")
+def centroids(spark):
+    return train_ivf_centroids(
+        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"),
+        n_cells=8)
+
+
+def _calls(images_fixture, cfg, final_tiles, centroids):
     pdf, _, images = images_fixture
     spark = images.sparkSession
 
@@ -57,6 +75,7 @@ def _calls(images_fixture, cfg, final_tiles):
     # read outside the counted call: its schema-inference job is not
     # the operator's
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    queries = emb.filter("vec_id < 8").withColumnRenamed("vec_id", "q_id")
 
     def pairs(a=(1, 2, 10), b=(2, 3, 11)):
         return spark.createDataFrame(pd.DataFrame({"a": a, "b": b}))
@@ -78,6 +97,12 @@ def _calls(images_fixture, cfg, final_tiles):
              "https://y.example/8"]))),
         "embedding_near_dups": lambda: _run(embedding_near_dups(
             emb, threshold=0.9, bits=16, bands=4)),
+        "brute_force_topk": lambda: _run(brute_force_topk(
+            queries, emb, k=5)),
+        "ivf_topk": lambda: _run(ivf_topk(
+            queries, emb, centroids, k=5, nprobe=8)),
+        "cosine_all_pairs_ids": lambda: _run(cosine_all_pairs_ids(
+            emb, threshold=0.4)),
     }
 
 
@@ -95,7 +120,8 @@ def count_jobs(sc, group, action):
 
 
 @pytest.mark.parametrize("op", list(BUDGETS))
-def test_operator_job_budget(spark, images_fixture, cfg, final_tiles, op):
-    call = _calls(images_fixture, cfg, final_tiles)[op]
+def test_operator_job_budget(spark, images_fixture, cfg, final_tiles,
+                             centroids, op):
+    call = _calls(images_fixture, cfg, final_tiles, centroids)[op]
     n = count_jobs(spark.sparkContext, f"job-budget-{op}", call)
     assert n <= BUDGETS[op], f"{op} ran {n} jobs, budget {BUDGETS[op]}"
