@@ -47,9 +47,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: segmentation + zonal statistics over the synthetic
     images table (4 x 256x256x3, seeded), per the north rule.
 
-    Runs the ONE-LINEAR-JOB stats path (kernel-emitted histograms
-    remapped inside the reference-exact sequential stitch —
-    operators/zonal.segment_stats_tiled); its output is
+    Runs the one-exchange stats path (kernel-emitted histograms
+    remapped, merged and finalized inside the reference-exact
+    sequential stitch task — operators/zonal.segment_stats_tiled);
+    its output is
     value-identical to painting the mosaic and histogramming it
     (tests/test_pipeline.py path-consistency suite), and the DuckDB
     oracle replays the REFERENCE'S sequential stitch independently

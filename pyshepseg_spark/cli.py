@@ -68,9 +68,10 @@ def cmd_segment(args):
 
 def cmd_pipeline(args):
     """images parquet -> per-segment stats parquet in one go (the
-    stats-only consumption path: kernel-emitted histograms remapped
-    inside the sequential stitch — one linear job, pixels cross
-    Arrow once, mosaic never materialized)."""
+    stats-only consumption path: kernel-emitted histograms remapped,
+    merged and finalized inside the sequential stitch task — one
+    exchange, pixels cross Arrow once, mosaic never
+    materialized)."""
     spark = _session(args)
     from .operators.zonal import segment_stats_tiled
     cfg = _seg_config(args)

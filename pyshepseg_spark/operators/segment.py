@@ -37,7 +37,7 @@ from ..sources.codec import encode_raw_u16
 from .tiling import (_image_columns, _image_rows, _shepherd,
                      collect_sample, decode_tile_pixels, explode_tiles,
                      stride_sample_pixels, tile_grid)
-from .zonal import value_histogram
+from .zonal import group_starts, group_sums, value_histogram
 
 
 @dataclass
@@ -90,7 +90,10 @@ def fit_global_centres(images_df, cfg: SegConfig,
     reference's fitSpectralClustersWholeFile samples only non-null
     pixels, so fitting with an undiscovered null value would pin
     clusters to the nodata constant and silently degrade every
-    downstream segmentation (driver ADVICE r4)."""
+    downstream segmentation (driver ADVICE r4).
+
+    The sample reads images under ``cfg.on_decode_error``, like every
+    other image kernel."""
     if validate and cfg.img_null_val is None:
         import dataclasses
 
@@ -99,7 +102,8 @@ def fit_global_centres(images_df, cfg: SegConfig,
         if nv is not None:
             cfg = dataclasses.replace(cfg, img_null_val=int(nv))
     sample_df = stride_sample_pixels(
-        images_df, cfg.sample_target_pixels, cfg.img_null_val)
+        images_df, cfg.sample_target_pixels, cfg.img_null_val,
+        on_decode_error=cfg.on_decode_error)
     x = collect_sample(sample_df)
     return fit_spectral_clusters_sample(
         x, cfg.num_clusters, cfg.fixed_kmeans_init,
@@ -402,6 +406,72 @@ def _recode_strip(overlap_a, overlap_b, axis, recode):
         recode[int(svals[s])] = int(vals[np.argmax(cnts)])
 
 
+class _StitchReplay:
+    """One image's state in the replay of the reference's sequential
+    stitch: the previous tile row's relabelled bottom strips by
+    ``tcol``, the previous tile's relabelled right strip and the
+    running maxSegId. Tiles must arrive in (trow, tcol) order."""
+
+    def __init__(self, overlap: int):
+        self.overlap = overlap
+        self.bottoms = {}
+        self.right_rel = None
+        self.maxseg = 0
+
+    def lut(self, row):
+        """The tile's local id -> final id lut (0 = unmapped); updates
+        the strips and maxSegId for the tiles after it."""
+        overlap = self.overlap
+        rd = {}
+        if row.trow > 0 and row.strip_top is not None:
+            sa = np.frombuffer(row.strip_top, "<u4").reshape(
+                overlap, row.xsize)
+            _recode_strip(sa, self.bottoms[row.tcol], "H", rd)
+        if row.tcol > 0 and row.strip_left is not None:
+            sa = np.frombuffer(row.strip_left, "<u4").reshape(
+                row.ysize, overlap)
+            _recode_strip(sa, self.right_rel, "V", rd)
+        lut = np.zeros(int(row.nseg) + 1, dtype=np.int64)
+        if rd:
+            lut[np.fromiter(rd.keys(), np.int64, len(rd))] = \
+                np.fromiter(rd.values(), np.int64, len(rd))
+        # fresh ids: ascending raw id over anchored-not-recoded
+        # (segLoc insertion order == ascending id, shepseg.py
+        # makeSegmentLocations)
+        fresh = np.asarray(
+            sorted(set(int(a) for a in row.anchored) - set(rd)),
+            dtype=np.int64)
+        lut[fresh] = self.maxseg + 1 + np.arange(len(fresh))
+        present = np.asarray(row.present, dtype=np.int64)
+        if len(present):
+            self.maxseg = max(self.maxseg, int(lut[present].max()))
+        if row.strip_bottom is not None:
+            sb = np.frombuffer(row.strip_bottom, "<u4").reshape(
+                overlap, row.xsize).astype(np.int64)
+            self.bottoms[row.tcol] = lut[sb]
+        if row.strip_right is not None:
+            sr = np.frombuffer(row.strip_right, "<u4").reshape(
+                row.ysize, overlap).astype(np.int64)
+            self.right_rel = lut[sr]
+        return lut
+
+
+def _stitch_input(meta, cols):
+    """The tile rows of each image in one partition, (trow, tcol)
+    order: the stitch's one exchange."""
+    need = ["image_id", "tcol", "trow", "xsize", "ysize", "nseg",
+            "anchored", "present",
+            "strip_top", "strip_left", "strip_bottom", "strip_right"]
+    return (meta.select(*need, *cols)
+            .repartition("image_id")
+            .sortWithinPartitions("image_id", "trow", "tcol"))
+
+
+def _frames(out, columns):
+    return (pd.concat(out, ignore_index=True) if out
+            else pd.DataFrame(columns=columns))
+
+
 def sequential_stitch_mapping(meta, overlap: int,
                               output: str = "mapping"):
     """gid -> final mapping by EXACT replay of the reference's
@@ -437,91 +507,28 @@ def sequential_stitch_mapping(meta, overlap: int,
 
     output="hist": instead of mapping rows, remap each tile's
     kernel-emitted core histogram (``hist`` column, LOCAL ids)
-    through the lut in-kernel and emit partial final-id histogram
-    rows (image_id, seg_id, band, val, cnt) directly — the
-    stats-only path then needs NO checkpoint, NO mapping join and NO
-    explode: one linear job from image bytes to stats.
+    through the lut in-kernel and emit the merged final-id value
+    histogram (image_id, seg_id, band, val, cnt), one row per
+    (image_id, seg_id, band, val): each segment's bins leave the
+    kernel once, after the last tile row it can gain pixels in
+    (:func:`_stitch_bins`). No checkpoint, no mapping join, no
+    explode.
     """
-    need = ["image_id", "tcol", "trow", "xsize", "ysize", "nseg",
-            "anchored", "present",
-            "strip_top", "strip_left", "strip_bottom", "strip_right"]
-    # gids are only emitted by the mapping output; the hist output
-    # needs no per-tile offsets (so callers can skip the
-    # with_offsets window entirely)
     if output == "hist":
-        need.append("hist")
-    else:
-        need.append("offset")
-    df = (meta.select(*need)
-          .repartition("image_id")
-          .sortWithinPartitions("image_id", "trow", "tcol"))
+        return _stitch_bins(meta, overlap, lambda bins: bins,
+                            "image_id string, seg_id long, band int, "
+                            "val long, cnt long")
+    df = _stitch_input(meta, ["offset"])
+    cols = ["image_id", "tcol", "trow", "gid", "final"]
 
     def kernel(batches):
-        cur = None
-        bottoms = {}
-        right_rel = None
-        maxseg = 0
+        cur, rep = None, None
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 if row.image_id != cur:
-                    cur = row.image_id
-                    bottoms, right_rel, maxseg = {}, None, 0
-                rd = {}
-                if row.trow > 0 and row.strip_top is not None:
-                    sa = np.frombuffer(row.strip_top, "<u4").reshape(
-                        overlap, row.xsize)
-                    _recode_strip(sa, bottoms[row.tcol], "H", rd)
-                if row.tcol > 0 and row.strip_left is not None:
-                    sa = np.frombuffer(row.strip_left, "<u4").reshape(
-                        row.ysize, overlap)
-                    _recode_strip(sa, right_rel, "V", rd)
-                nseg = int(row.nseg)
-                lut = np.zeros(nseg + 1, dtype=np.int64)
-                if rd:
-                    lut[np.fromiter(rd.keys(), np.int64, len(rd))] = \
-                        np.fromiter(rd.values(), np.int64, len(rd))
-                # fresh ids: ascending raw id over anchored-not-
-                # recoded (segLoc insertion order == ascending id,
-                # shepseg.py makeSegmentLocations)
-                fresh = np.asarray(
-                    sorted(set(int(a) for a in row.anchored)
-                           - set(rd)), dtype=np.int64)
-                lut[fresh] = maxseg + 1 + np.arange(len(fresh))
-                present = np.asarray(row.present, dtype=np.int64)
-                if len(present):
-                    maxseg = max(maxseg, int(lut[present].max()))
-                if row.strip_bottom is not None:
-                    sb = np.frombuffer(row.strip_bottom,
-                                       "<u4").reshape(
-                        overlap, row.xsize).astype(np.int64)
-                    bottoms[row.tcol] = lut[sb]
-                if row.strip_right is not None:
-                    sr = np.frombuffer(row.strip_right,
-                                       "<u4").reshape(
-                        row.ysize, overlap).astype(np.int64)
-                    right_rel = lut[sr]
-                if output == "hist":
-                    h = row.hist
-                    if h is not None and len(h):
-                        loc = np.fromiter((e["local"] for e in h),
-                                          np.int64, len(h))
-                        fin = lut[loc]
-                        keep = fin > 0
-                        if keep.any():
-                            out.append(pd.DataFrame({
-                                "image_id": row.image_id,
-                                "seg_id": fin[keep],
-                                "band": np.fromiter(
-                                    (e["band"] for e in h),
-                                    np.int32, len(h))[keep],
-                                "val": np.fromiter(
-                                    (e["val"] for e in h),
-                                    np.int64, len(h))[keep],
-                                "cnt": np.fromiter(
-                                    (e["cnt"] for e in h),
-                                    np.int64, len(h))[keep]}))
-                    continue
+                    cur, rep = row.image_id, _StitchReplay(overlap)
+                lut = rep.lut(row)
                 ids = np.flatnonzero(lut)
                 if len(ids):
                     out.append(pd.DataFrame({
@@ -529,20 +536,94 @@ def sequential_stitch_mapping(meta, overlap: int,
                         "tcol": row.tcol, "trow": row.trow,
                         "gid": ids + int(row.offset),
                         "final": lut[ids]}))
-            if output == "hist":
-                yield (pd.concat(out, ignore_index=True) if out
-                       else pd.DataFrame(columns=[
-                           "image_id", "seg_id", "band", "val",
-                           "cnt"]))
-            else:
-                yield (pd.concat(out, ignore_index=True) if out
-                       else pd.DataFrame(columns=[
-                           "image_id", "tcol", "trow", "gid",
-                           "final"]))
+            yield _frames(out, cols)
 
-    schema = (MAPPING_SCHEMA if output == "mapping"
-              else "image_id string, seg_id long, band int, "
-                   "val long, cnt long")
+    return df.mapInPandas(kernel, MAPPING_SCHEMA)
+
+
+class _HeldBins:
+    """One image's final-id value histogram while its stitch runs:
+    remapped tile bins go in, and :meth:`release` merges them (sum of
+    counts per (seg_id, band, val)) and hands out the segments that
+    can gain no more pixels."""
+
+    def __init__(self, image_id):
+        self.image_id = image_id
+        self.parts = []
+
+    def add(self, lut, hist):
+        if hist is None or not len(hist):
+            return
+        n = len(hist)
+        fin = lut[np.fromiter((e["local"] for e in hist), np.int64, n)]
+        keep = fin > 0
+        if keep.any():
+            self.parts.append(tuple(a[keep] for a in (
+                fin,
+                np.fromiter((e["band"] for e in hist), np.int64, n),
+                np.fromiter((e["val"] for e in hist), np.int64, n),
+                np.fromiter((e["cnt"] for e in hist), np.int64, n))))
+
+    def release(self, open_ids=None):
+        """The merged bins of every held segment not in ``open_ids``
+        (all of them when None), as HIST_SCHEMA rows sorted by
+        (seg_id, band, val); the open segments stay held, merged."""
+        if not self.parts:
+            return None
+        seg, band, val, cnt = (np.concatenate(a)
+                               for a in zip(*self.parts))
+        order = np.lexsort((val, band, seg))
+        seg, band, val, cnt = (a[order] for a in (seg, band, val, cnt))
+        starts = group_starts(seg, band, val)
+        seg, band, val = seg[starts], band[starts], val[starts]
+        cnt = group_sums(cnt, starts)
+        done = (np.ones(len(seg), dtype=bool) if open_ids is None
+                else ~np.isin(seg, open_ids))
+        self.parts = ([] if done.all() else
+                      [tuple(a[~done] for a in (seg, band, val, cnt))])
+        if not done.any():
+            return None
+        return pd.DataFrame({"image_id": self.image_id,
+                             "seg_id": seg[done],
+                             "band": band[done].astype(np.int32),
+                             "val": val[done], "cnt": cnt[done]})
+
+
+def _stitch_bins(meta, overlap: int, finish, schema: str):
+    """The sequential stitch over tiles that carry their core
+    histograms (``hist``, on local ids): each tile's bins are
+    remapped through its lut and held, merged, per image. A final id
+    can gain pixels in a later tile only if it is fresh there (then
+    it is larger than every id so far) or carried through the
+    relabelled bottom strips, so after the last tile of a tile row
+    every held segment absent from those strips is complete, and at
+    the image's last tile every segment is. ``finish`` runs on each
+    released block (HIST_SCHEMA rows of one image, one row per
+    (seg_id, band, val), every segment whole) inside the stitch task
+    and returns rows of ``schema``. Memory holds one tile row's bins
+    plus the segments still open, never the whole image's."""
+    df = _stitch_input(meta, ["ntcols", "ntrows", "hist"])
+    cols = [c.split()[0] for c in schema.split(", ")]
+
+    def kernel(batches):
+        cur, rep, held = None, None, None
+        for pdf in batches:
+            out = []
+            for row in pdf.itertuples(index=False):
+                if row.image_id != cur:
+                    cur, rep = row.image_id, _StitchReplay(overlap)
+                    held = _HeldBins(cur)
+                held.add(rep.lut(row), row.hist)
+                if row.tcol < row.ntcols - 1:
+                    continue
+                open_ids = (np.unique(np.concatenate(
+                    [b.ravel() for b in rep.bottoms.values()]))
+                    if row.trow < row.ntrows - 1 else None)
+                block = held.release(open_ids)
+                if block is not None:
+                    out.append(finish(block))
+            yield _frames(out, cols)
+
     return df.mapInPandas(kernel, schema)
 
 
@@ -654,8 +735,9 @@ def _kernel_tiles(images_df, cfg: SegConfig, centres,
         return explode_and_segment(images_df, cfg, emit_hist=emit_hist,
                                    keep_binaries=keep_binaries)
     from .skew import spread_small_scan
-    tiles = spread_small_scan(
-        explode_tiles(images_df, cfg.tile_size, cfg.overlap))
+    tiles = spread_small_scan(explode_tiles(
+        images_df, cfg.tile_size, cfg.overlap,
+        on_decode_error=cfg.on_decode_error))
     return segment_tiles(tiles, centres, cfg, emit_hist=emit_hist,
                          keep_binaries=keep_binaries)
 

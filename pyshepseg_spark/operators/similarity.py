@@ -353,9 +353,10 @@ def brute_force_topk(queries, corpus, k=5,
 
 
 def train_ivf_centroids(corpus, n_cells=16, vec_col="embedding",
-                        sample=4096, seed=42):
-    """Coarse quantizer: deterministic Lloyd over a driver-collected
-    sample (diagonal init — same kernel as the segmentation fit)."""
+                        sample=4096):
+    """Coarse quantizer: deterministic Lloyd (diagonal init — same
+    kernel as the segmentation fit) over a driver-collected sample,
+    the first ``sample`` rows the scan of ``corpus`` yields."""
     pdf = (corpus.select(vec_col).limit(sample).toPandas())
     x = np.stack([np.asarray(v, dtype=np.float64)
                   for v in pdf[vec_col]])

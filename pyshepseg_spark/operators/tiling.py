@@ -223,23 +223,33 @@ def _image_columns(images_df):
                else []))
 
 
-def _image_rows(pdf, cfg):
-    """The one image-row reader of every images -> segments kernel:
-    yields (row, img, centres) for each row of an Arrow batch
-    selected with :func:`_image_columns`. ``img`` is the decoded
-    (nbands, h, w) array; ``centres`` its own :func:`fit_image_centres`
-    fit, with k = the row's ``num_clusters`` (when set and nonzero)
-    else ``cfg.num_clusters``. A row whose bytes do not decode raises,
-    or is dropped when ``cfg.on_decode_error == "skip"`` — at
-    10^12-image scale garbage rows exist and must not kill the
+def _decoded_rows(pdf, on_decode_error: str = "fail"):
+    """The one image-row reader of every image kernel: yields
+    (row, img) for each row of an Arrow batch holding ``bytes``,
+    ``fmt``, ``w`` and ``h``, ``img`` the decoded (nbands, h, w)
+    array. A row whose bytes do not decode raises, or is dropped when
+    ``on_decode_error == "skip"`` (the SegConfig field of that name)
+    — at 10^12-image scale garbage rows exist and must not kill the
     stage."""
     for row in pdf.itertuples(index=False):
         try:
             img = decode_image(row.bytes, row.fmt, row.w, row.h)
         except Exception:
-            if cfg.on_decode_error == "skip":
+            if on_decode_error == "skip":
                 continue
             raise
+        yield row, img
+
+
+def _image_rows(pdf, cfg):
+    """The image-row reader of every images -> segments kernel that
+    fits its own centres: :func:`_decoded_rows` under
+    ``cfg.on_decode_error`` over a batch selected with
+    :func:`_image_columns`, yielding (row, img, centres) — ``centres``
+    the image's own :func:`fit_image_centres` fit, with k = the row's
+    ``num_clusters`` (when set and nonzero) else
+    ``cfg.num_clusters``."""
+    for row, img in _decoded_rows(pdf, cfg.on_decode_error):
         k = getattr(row, "num_clusters", None)
         if not k or pd.isna(k):
             k = cfg.num_clusters
@@ -263,16 +273,18 @@ def _shepherd(img, centres, cfg):
 
 
 def explode_tiles(images_df, tile_size: int, overlap: int,
-                  cell_shift: int = 8, fit_cfg=None):
+                  cell_shift: int = 8, fit_cfg=None,
+                  on_decode_error: str = "fail"):
     """images DataFrame -> tiles DataFrame (one row per overlapping
     tile, pixels re-encoded raw_u16). Runs as mapInPandas: narrow,
     no shuffle; Catalyst prunes unused image columns upstream.
 
-    With ``fit_cfg`` (a SegConfig) the rows are read by
-    :func:`_image_rows`: each image is decoded once, its centres are
-    fitted in the same kernel, every tile row carries that centre
-    matrix (a few hundred bytes) and ``fit_cfg.on_decode_error``
-    applies. Without it every row must decode."""
+    Rows are read by :func:`_decoded_rows` under ``on_decode_error``.
+    With ``fit_cfg`` (a SegConfig) they are read by
+    :func:`_image_rows` instead: each image is decoded once, its
+    centres are fitted in the same kernel, every tile row carries
+    that centre matrix (a few hundred bytes) and
+    ``fit_cfg.on_decode_error`` applies."""
     if overlap % 2 != 0:
         raise ValueError("overlap size must be even")  # tiling.py:746
     if tile_size <= 2 * overlap:
@@ -288,9 +300,8 @@ def explode_tiles(images_df, tile_size: int, overlap: int,
     def kernel(batches):
         for pdf in batches:
             if fit_cfg is None:
-                rows = ((row, decode_image(row.bytes, row.fmt, row.w,
-                                           row.h), None)
-                        for row in pdf.itertuples(index=False))
+                rows = ((row, img, None) for row, img in
+                        _decoded_rows(pdf, on_decode_error))
             else:
                 rows = _image_rows(pdf, fit_cfg)
             out = []
@@ -328,12 +339,16 @@ def decode_tile_pixels(pixels: bytes, nbands: int, ysize: int,
 
 
 def stride_sample_pixels(images_df, target_pixels: int = 1_000_000,
-                         img_null_val: int | None = None):
+                         img_null_val: int | None = None,
+                         on_decode_error: str = "fail"):
     """Global k-means sample (reference tiling.py:196-224
     fitSpectralClustersWholeFile): read every k-th non-null pixel of
     every image so the total sample is ~target_pixels, deterministic
     stride (no RNG). Returns a DataFrame with one row per image of
     packed float32 sample bytes (compact collect to the driver).
+    Rows are read by :func:`_decoded_rows` under ``on_decode_error``;
+    the stride is planned from the declared w x h of every row before
+    any pixel is read, so a skipped row still counts toward it.
     """
     from pyspark.sql import functions as F
 
@@ -345,8 +360,7 @@ def stride_sample_pixels(images_df, target_pixels: int = 1_000_000,
     def kernel(batches):
         for pdf in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.bytes, row.fmt, row.w, row.h)
+            for _, img in _decoded_rows(pdf, on_decode_error):
                 nbands = img.shape[0]
                 x = img.transpose(1, 2, 0).reshape(-1, nbands)
                 if img_null_val is not None:

@@ -1,22 +1,26 @@
 """Zonal (per-segment) statistics — the tilingstats layer.
 
 Spark-first rebuild of /root/reference/pyshepseg/tilingstats.py: the
-reference's whole accumulate/complete/evict state machine
-(tilingstats.py:466-617) collapses into a two-stage aggregation:
+reference accumulates each segment's seg -> {pixval -> count} dict
+(A3, tilingstats.py:466-515), finalizes a segment once it is complete
+and evicts it (tilingstats.py:466-617). The engine keeps that shape:
 
   1. per-tile kernels emit *partial value histograms*
-     (image_id, seg_id, band, val, cnt) — the reference's
-     seg -> {pixval -> count} dict (A3, tilingstats.py:466-515),
-     computed vectorized by the one numpy helper
-     :func:`value_histogram` (the segmentation kernel's emit_hist,
-     tile_value_histogram and seg_image_value_histogram all call
-     it). Partial agg inside the kernel = map-side combine; pixel
-     rows are never materialized.
-  2. groupBy(image_id, seg_id, band, val).sum(cnt) merges partials,
-     then exact finalizers (A5, tilingstats.py:922-1008) derive
-     min/max/mean/stddev/mode/median/percentile/pixcount from the
-     histogram — *exact*, not percentile_approx, matching the
-     reference bitwise for integer imagery.
+     (image_id, seg_id, band, val, cnt), computed vectorized by the
+     one numpy helper :func:`value_histogram` (the segmentation
+     kernel's emit_hist, tile_value_histogram and
+     seg_image_value_histogram all call it); pixel rows are never
+     materialized.
+  2. exact finalizers (A5, tilingstats.py:922-1008) derive
+     min/max/mean/stddev/mode/median/percentile/pixcount from a
+     merged histogram — *exact*, not percentile_approx, matching the
+     reference bitwise for integer imagery. Two twins compute them:
+     :func:`stats_from_bins` in numpy, where the bins are already
+     grouped by image (:func:`segment_stats_tiled` finalizes each
+     segment inside the stitch task, as soon as the stitch has seen
+     its last tile row), and :func:`segment_stats_selected` in the
+     JVM, after a groupBy(image_id, seg_id, band, val) merge, for
+     histograms that are not grouped by image.
 
 Nodata pixels are excluded from the value histogram but counted apart
 (A4, tilingstats.py:640-653); a segment with no valid pixels reports
@@ -103,23 +107,24 @@ def segment_nodata_counts(hist_all, img_null_val: int):
 
 def segment_stats_tiled(images_df, cfg, percentiles=(50,),
                         with_nodata=False, centres=None):
-    """images -> per-segment exact stats as ONE LINEAR JOB, never
-    materializing the painted mosaic or re-reading pixels: the
-    segmentation kernel emits each tile's trimmed-core histogram on
-    local ids (explode_and_segment emit_hist, no pixel/segtile
-    binaries in its output at all), the sequential stitch kernel
-    remaps those bins to final ids as it computes each tile's lut
-    (sequential_stitch_mapping output="hist"), and the exact
-    finalizers run on the merged histogram. Pixels cross the Arrow
-    boundary exactly once; the only shuffles are the per-image
-    stitch repartition (strips + bins) and the histogram merge —
-    no checkpoint, no mapping join, no offsets window.
+    """images -> per-segment exact stats (:func:`segment_stats`'
+    columns) with ONE exchange, never materializing the painted
+    mosaic or re-reading pixels: the segmentation kernel emits each
+    tile's trimmed-core histogram on local ids (explode_and_segment
+    emit_hist, no pixel/segtile binaries in its output at all), and
+    the sequential stitch kernel, which already streams each image's
+    tiles in (trow, tcol) order, remaps those bins to final ids,
+    merges them and runs the numpy finalizer (:func:`stats_from_bins`)
+    on every segment as soon as it is complete — after the last tile
+    row it can gain pixels in. Pixels cross the Arrow boundary
+    exactly once; the only shuffle is the stitch's per-image
+    repartition — no checkpoint, no merge groupBy, no join.
 
-    with_nodata=True keeps the FULL histogram (nodata bins kept),
-    derives the stats from the filtered bins and joins the A4
-    nodata/valid counts on — the merged histogram is
-    locally checkpointed (it is segment-count-sized) so the kernel
-    runs once for the two consumers, with nothing left cached.
+    with_nodata=True adds the A4 ``nodata_cnt`` / ``valid_cnt``
+    columns, counted from the same full bins (the kernel keeps
+    nodata values as ordinary bins) ahead of the stats, which are
+    null where ``valid_cnt`` is 0 — the columns and values of
+    ``segment_nodata_counts(...).join(segment_stats(...), "left")``.
 
     centres: None (default) fits per image inside the fused kernel —
     parallelism = image count, the many-images regime. A shared
@@ -129,24 +134,29 @@ def segment_stats_tiled(images_df, cfg, percentiles=(50,),
     the single task that decoded the image (fit the matrix with
     segment.fit_global_centres — the reference's own prepare
     phase)."""
-    from .segment import _kernel_tiles, sequential_stitch_mapping
+    from .segment import _kernel_tiles, _stitch_bins
 
+    null = cfg.img_null_val
+    nodata = with_nodata and null is not None
+    sel = _fixed_selection(percentiles)
+
+    def finish(bins):
+        if not nodata and null is not None:
+            bins = bins[bins["val"].to_numpy() != null]
+        out = stats_from_bins(bins, sel, null if nodata else None)
+        if 50 in percentiles:
+            out["median_val"] = out["p50_val"]
+        return out
+
+    schema = ", ".join(
+        ["image_id string, seg_id long, band int"]
+        + (["nodata_cnt long, valid_cnt long"] if nodata else [])
+        + [f"{s[0]} {'double' if s[1] in _FLOAT_STATS else 'long'}"
+           for s in sel]
+        + (["median_val long"] if 50 in percentiles else []))
     st = _kernel_tiles(images_df, cfg, centres, emit_hist=True,
                        keep_binaries=False)
-    part = sequential_stitch_mapping(st, cfg.overlap, output="hist")
-    hist_all = (part.groupBy("image_id", "seg_id", "band", "val")
-                .agg(F.sum("cnt").alias("cnt")))
-    if not with_nodata or cfg.img_null_val is None:
-        if cfg.img_null_val is not None:
-            hist_all = hist_all.filter(
-                F.col("val") != cfg.img_null_val)
-        return segment_stats(hist_all, percentiles=percentiles)
-    hist_all = hist_all.localCheckpoint()
-    stats = segment_stats(
-        hist_all.filter(F.col("val") != cfg.img_null_val),
-        percentiles=percentiles)
-    nodata = segment_nodata_counts(hist_all, cfg.img_null_val)
-    return nodata.join(stats, ["image_id", "seg_id", "band"], "left")
+    return _stitch_bins(st, cfg.overlap, finish, schema)
 
 
 def tile_value_histogram(final_tiles, img_null_val: int | None = None):
@@ -258,6 +268,14 @@ def seg_image_value_histogram(seg_images, images_df,
             .agg(F.sum("cnt").alias("cnt")))
 
 
+def _fixed_selection(percentiles):
+    """:func:`segment_stats`' selection, in the named format."""
+    sel = [("min_val", "min"), ("max_val", "max"),
+           ("pix_count", "pixcount"), ("mean_val", "mean"),
+           ("stddev_val", "stddev"), ("mode_val", "mode")]
+    return sel + [(f"p{p:02d}_val", "percentile", p) for p in percentiles]
+
+
 def segment_stats(hist, percentiles=(50,)):
     """Stage 2: the fixed stats table over the value histogram —
     :func:`segment_stats_selected` with the selection
@@ -268,11 +286,7 @@ def segment_stats(hist, percentiles=(50,)):
     plus ``median_val`` (= p50_val) when 50 is selected. Matches
     SegmentStats (tilingstats.py:922-1008); the finalizer semantics
     are documented on :func:`segment_stats_selected`."""
-    sel = [("min_val", "min"), ("max_val", "max"),
-           ("pix_count", "pixcount"), ("mean_val", "mean"),
-           ("stddev_val", "stddev"), ("mode_val", "mode")]
-    sel += [(f"p{p:02d}_val", "percentile", p) for p in percentiles]
-    out = segment_stats_selected(hist, sel)
+    out = segment_stats_selected(hist, _fixed_selection(percentiles))
     if 50 in percentiles:
         out = out.withColumn("median_val", F.col("p50_val"))
     return out
@@ -289,36 +303,14 @@ def _mode_smallest(value_col: str, count_col: str):
 
 _SELECTABLE_STATS = ("min", "max", "mean", "stddev", "median",
                      "mode", "percentile", "pixcount")
+_FLOAT_STATS = ("mean", "stddev")
 
 
-def segment_stats_selected(hist, selection):
-    """Named stats-selection surface — the contract a caller ported
-    from the reference uses (tilingstats.py:798-863
-    makeFastStatsSelection; selection format :106-131): each entry is
-    ``(columnName, statName)`` or ``(columnName, 'percentile', p)``,
-    statName one of min/max/mean/stddev/median/mode/percentile/
-    pixcount. Output columns take the caller's names and the
-    reference's dtypes (mean/stddev float columns -> double,
-    everything else int -> long).
-
-    Exact finalizers (SegmentStats, tilingstats.py:922-1008):
-      min/max       — extreme values present
-      mean          — sum(v*c)/n
-      stddev        — population: sqrt(sum(c*(v-mean)^2)/n)
-      mode          — value with max count, ties -> smallest value
-                      (argmax over value-sorted arrays)
-      percentile p  — first value (ascending) whose cumulative count
-                      >= n*p/100 (exact; the reference's
-                      cumulative-count walk, tilingstats.py:969-986)
-      pixcount      — n
-    All derived with built-in JVM aggregations (max_by, windows) —
-    no UDFs in this stage. ONE window pass (cumulative + total counts
-    share the sort), added only when the selection needs an order
-    statistic, and ONE aggregation: the histogram — and therefore
-    everything upstream of it — is scanned exactly once. Variance is
-    single-pass in doubles (values <= 2^17 keep E[x^2]-E[x]^2 well
-    above the double noise floor)."""
-    g = ["image_id", "seg_id", "band"]
+def _parse_selection(selection):
+    """Validates a stats selection (tilingstats.py:106-131 format) for
+    both finalizers; returns (name, stat, p) triples, p the
+    percentile (50 for median, None for the other stats)."""
+    out = []
     for sel in selection:
         if len(sel) not in (2, 3) or sel[1] not in _SELECTABLE_STATS:
             raise ValueError(f"bad statsSelection entry {sel!r}: "
@@ -334,10 +326,45 @@ def segment_stats_selected(hist, selection):
             # ignore it
             raise ValueError(f"statsSelection entry {sel!r}: only "
                              f"'percentile' takes a third element")
+        p = sel[2] if sel[1] == "percentile" else (
+            50 if sel[1] == "median" else None)
+        out.append((sel[0], sel[1], p))
+    return out
 
-    need_cum = any(s[1] in ("median", "percentile") for s in selection)
+
+def segment_stats_selected(hist, selection):
+    """Named stats-selection surface — the contract a caller ported
+    from the reference uses (tilingstats.py:798-863
+    makeFastStatsSelection; selection format :106-131): each entry is
+    ``(columnName, statName)`` or ``(columnName, 'percentile', p)``,
+    statName one of min/max/mean/stddev/median/mode/percentile/
+    pixcount. Output columns take the caller's names and the
+    reference's dtypes (mean/stddev float columns -> double,
+    everything else int -> long).
+
+    Exact finalizers (SegmentStats, tilingstats.py:922-1008):
+      min/max       — extreme values present
+      mean          — sum(v*c)/n
+      stddev        — population: sqrt(max(sum(v*v*c)/n - mean^2, 0))
+      mode          — value with max count, ties -> smallest value
+                      (argmax over value-sorted arrays)
+      percentile p  — first value (ascending) whose cumulative count
+                      >= n*p/100, compared as a double (exact; the
+                      reference's cumulative-count walk,
+                      tilingstats.py:969-986); median is p = 50
+      pixcount      — n
+    All derived with built-in JVM aggregations (max_by, windows) —
+    no UDFs in this stage. ONE window pass (cumulative + total counts
+    share the sort), added only when the selection needs an order
+    statistic, and ONE aggregation: the histogram — and therefore
+    everything upstream of it — is scanned exactly once. Variance is
+    single-pass in doubles (values <= 2^17 keep E[x^2]-E[x]^2 well
+    above the double noise floor). :func:`stats_from_bins` is the
+    numpy twin, bitwise equal on merged histograms."""
+    g = ["image_id", "seg_id", "band"]
+    sel = _parse_selection(selection)
     h = hist
-    if need_cum:
+    if any(p is not None for _, _, p in sel):
         w_cum = (Window.partitionBy(*g).orderBy("val")
                  .rowsBetween(Window.unboundedPreceding, 0))
         w_all = (Window.partitionBy(*g)
@@ -350,30 +377,131 @@ def segment_stats_selected(hist, selection):
     v2c = (F.col("val").cast("double") * F.col("val").cast("double")
            * F.col("cnt"))
     mean = F.sum(vc) / F.sum("cnt")
-
-    def pctl(p):
-        return F.min(F.when(
-            F.col("cum") >= F.col("n") * F.lit(p) / F.lit(100),
-            F.col("val")))
-
     builders = {
         "min": lambda: F.min("val").cast("long"),
         "max": lambda: F.max("val").cast("long"),
         "mean": lambda: mean,
         "stddev": lambda: F.sqrt(F.greatest(
             F.sum(v2c) / F.sum("cnt") - mean * mean, F.lit(0.0))),
-        "median": lambda: pctl(50).cast("long"),
         "mode": lambda: _mode_smallest("val", "cnt").cast("long"),
         "pixcount": lambda: F.sum("cnt").cast("long"),
     }
     aggs = []
-    for sel in selection:
-        name, stat = sel[0], sel[1]
-        if stat == "percentile":
-            aggs.append(pctl(sel[2]).cast("long").alias(name))
+    for name, stat, p in sel:
+        if p is not None:
+            agg = F.min(F.when(
+                F.col("cum") >= F.col("n") * F.lit(p) / F.lit(100),
+                F.col("val"))).cast("long")
         else:
-            aggs.append(builders[stat]().alias(name))
+            agg = builders[stat]()
+        aggs.append(agg.alias(name))
     return h.groupBy(*g).agg(*aggs)
+
+
+def _first_per_group(mask, gid):
+    """Index of the first True of ``mask`` in each group (``gid``
+    ascending; every group has one)."""
+    idx = np.flatnonzero(mask)
+    g = gid[idx]
+    return idx[np.r_[True, g[1:] != g[:-1]]]
+
+
+def _bin_stats(val, cnt, starts, sel):
+    """The finalizers of :func:`segment_stats_selected` over
+    histogram rows sorted by (group, val), groups beginning at
+    ``starts``; returns {name: per-group array}."""
+    gid = np.repeat(np.arange(len(starts)), np.diff(np.r_[starts,
+                                                          len(val)]))
+    n = np.add.reduceat(cnt, starts)
+    vd = val.astype(np.float64)
+    mean = np.add.reduceat(vd * cnt, starts) / n
+    cs = np.cumsum(cnt)
+    cum = cs - (cs[starts] - cnt[starts])[gid]
+    out = {}
+    for name, stat, p in sel:
+        if p is not None:
+            col = val[_first_per_group(cum >= (n * p / 100)[gid], gid)]
+        elif stat == "min":
+            col = val[starts]
+        elif stat == "max":
+            col = val[np.r_[starts[1:], len(val)] - 1]
+        elif stat == "mean":
+            col = mean
+        elif stat == "stddev":
+            col = np.sqrt(np.maximum(
+                np.add.reduceat(vd * vd * cnt, starts) / n
+                - mean * mean, 0.0))
+        elif stat == "mode":
+            top = np.maximum.reduceat(cnt, starts)
+            col = val[_first_per_group(cnt == top[gid], gid)]
+        else:  # pixcount
+            col = n
+        out[name] = col
+    return out
+
+
+def group_starts(*keys):
+    """Start index of each run of equal key tuples in sorted rows."""
+    new = np.ones(len(keys[0]), dtype=bool)
+    if len(new):
+        new[1:] = False
+        for k in keys:
+            new[1:] |= k[1:] != k[:-1]
+    return np.flatnonzero(new)
+
+
+def group_sums(a, starts):
+    """np.add.reduceat over the groups beginning at ``starts``,
+    empty for no groups."""
+    return np.add.reduceat(a, starts) if len(starts) else a[:0]
+
+
+def stats_from_bins(bins, selection, nodata_val=None):
+    """Spark-free twin of :func:`segment_stats_selected`: the same
+    finalizers, columns and dtypes over a merged value histogram held
+    in pandas (HIST_SCHEMA columns, one row per (image_id, seg_id,
+    band, val), positive counts, any order). Every sum is taken in
+    float64 in the JVM form's operation order, so the two are
+    bitwise equal while the sums stay below 2^53.
+
+    ``nodata_val`` set: ``bins`` is a FULL histogram (nodata values
+    kept as ordinary bins) and the output is the twin of
+    ``segment_nodata_counts(bins, v).join(segment_stats_selected(
+    bins.filter(val != v), selection), "left")``: ``nodata_cnt`` and
+    ``valid_cnt`` ahead of the stats, which are null where
+    ``valid_cnt`` is 0."""
+    sel = _parse_selection(selection)
+    codes, images = pd.factorize(bins["image_id"], sort=False)
+    seg, band, val, cnt = (bins[c].to_numpy(np.int64)
+                           for c in ("seg_id", "band", "val", "cnt"))
+    order = np.lexsort((val, band, seg, codes))
+    codes, seg, band, val, cnt = (a[order] for a in
+                                  (codes, seg, band, val, cnt))
+    starts = group_starts(codes, seg, band)
+    out = {"image_id": np.asarray(images, dtype=object)[codes[starts]],
+           "seg_id": seg[starts], "band": band[starts].astype(np.int32)}
+    keep = np.ones(len(val), dtype=bool)
+    if nodata_val is not None:
+        keep = val != nodata_val
+        valid = group_sums(np.where(keep, cnt, 0), starts)
+        out["nodata_cnt"] = group_sums(cnt, starts) - valid
+        out["valid_cnt"] = valid
+    vstarts = group_starts(codes[keep], seg[keep], band[keep])
+    stats = (_bin_stats(val[keep], cnt[keep], vstarts, sel)
+             if len(vstarts) else {})
+    for name, stat, _ in sel:
+        dtype = np.float64 if stat in _FLOAT_STATS else np.int64
+        col = stats.get(name, np.empty(0, dtype))
+        if len(vstarts) < len(starts):
+            # groups with no valid bins: null stats
+            full = pd.array(np.zeros(len(starts), dtype),
+                            dtype="Float64" if dtype is np.float64
+                            else "Int64")
+            full[:] = pd.NA
+            full[np.flatnonzero(out["valid_cnt"])] = col
+            col = full
+        out[name] = col
+    return pd.DataFrame(out)
 
 
 def global_stats_from_histogram(seg_sizes):

@@ -42,7 +42,8 @@ BUDGETS = {
     "segment_images_tiled": 11,
     "point_in_segment": 10,
     "segment_sizes": 2,
-    "segment_stats_tiled": 4,
+    "segment_stats_tiled": 2,
+    "segment_stats_tiled_nodata": 2,
     "duplicate_groups": 1,
     "duplicate_groups_string": 10,
     "embedding_near_dups": 5,
@@ -89,6 +90,8 @@ def _calls(images_fixture, cfg, final_tiles, centroids):
         "segment_sizes": lambda: _run(segment_sizes(final_tiles)),
         "segment_stats_tiled":
             lambda: _run(segment_stats_tiled(images, cfg)),
+        "segment_stats_tiled_nodata": lambda: _run(segment_stats_tiled(
+            images, cfg, with_nodata=True)),
         "duplicate_groups": lambda: _run(duplicate_groups(pairs())),
         "duplicate_groups_string": lambda: _run(duplicate_groups(pairs(
             ["https://a.example/1", "https://b.example/2",

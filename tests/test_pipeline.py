@@ -1,6 +1,8 @@
 """Spark pipeline tests: tiled segmentation end-to-end."""
 
 import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from pyshepseg_spark.operators.segment import (SegConfig, segment_images_tiled,
@@ -157,12 +159,7 @@ def test_stats_from_stitch_equals_paint_then_histogram(
     g = got.sort_values(key, ignore_index=True)
     w = want.sort_values(key, ignore_index=True)
     assert len(g) == len(w)
-    for c in g.columns:
-        a, b = g[c].to_numpy(), w[c].to_numpy()
-        if a.dtype.kind == "f":
-            assert np.allclose(a, b, equal_nan=True), c
-        else:
-            assert (a == b).all(), c
+    pd.testing.assert_frame_equal(g, w, check_exact=True)
 
 
 def test_stats_tiled_with_nodata_counts(spark, images_fixture, cfg):
@@ -188,6 +185,21 @@ def test_stats_tiled_with_nodata_counts(spark, images_fixture, cfg):
             assert np.allclose(a, b, equal_nan=True), c
         else:
             assert (a == b).all(), c
+
+
+@pytest.mark.parametrize("with_nodata", [False, True])
+def test_stats_tiled_plan_has_one_exchange(images_fixture, cfg,
+                                           with_nodata):
+    """segment_stats_tiled finalizes inside the stitch task: its plan
+    holds the stitch's repartition and no other exchange, and no
+    aggregate, window, join or checkpoint scan."""
+    from pyshepseg_spark.operators.zonal import segment_stats_tiled
+    _, _, images = images_fixture
+    plan = segment_stats_tiled(images, cfg, with_nodata=with_nodata) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    for op in ("Aggregate", "Window", "Join", "ExistingRDD"):
+        assert op not in plan, (op, plan)
 
 
 def test_simple_recode_mode(spark, images_fixture, cfg):
@@ -567,12 +579,7 @@ def test_giant_mosaic_shared_centres_paths_agree(spark,
     g = got.sort_values(key, ignore_index=True)
     w = want.sort_values(key, ignore_index=True)
     assert len(g) == len(w) and len(g) > 0
-    for c in g.columns:
-        a, b = g[c].to_numpy(), w[c].to_numpy()
-        if a.dtype.kind == "f":
-            assert np.allclose(a, b, equal_nan=True), c
-        else:
-            assert (a == b).all(), c
+    pd.testing.assert_frame_equal(g, w, check_exact=True)
 
 
 def test_keep_pixels_false_drops_column_keeps_segdata(
@@ -593,3 +600,145 @@ def test_keep_pixels_false_drops_column_keeps_segdata(
             .toPandas().sort_values(keys, ignore_index=True))
     import pandas as pd
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_shared_centres_mode_honours_decode_skip(spark):
+    """The giant-single-raster mode reads images through the same
+    row reader as the fused kernel: with on_decode_error='skip' a
+    corrupt row drops out of fit_global_centres (the stride sample)
+    and of segment_stats_tiled(centres=...) (explode_tiles), so both
+    equal their result on the table without it; with 'fail' both
+    raise."""
+    import dataclasses
+
+    import pytest
+    from pyshepseg_spark.operators.segment import fit_global_centres
+    from pyshepseg_spark.operators.zonal import segment_stats_tiled
+    from pyshepseg_spark.sources.imagegen import generate_images_pdf
+    pdf = generate_images_pdf(2, size=96, seed=43)
+    pdf["num_clusters"] = 8
+    bad = pdf.iloc[[0]].copy()
+    bad["image_id"] = "corrupt"
+    bad["bytes"] = [b"not a png"]
+    good = spark.createDataFrame(pdf)
+    images = spark.createDataFrame(pd.concat([pdf, bad],
+                                             ignore_index=True))
+    cfg = SegConfig(img_null_val=65535, four_connected=False,
+                    min_segment_size=50, tile_size=64, overlap=16,
+                    num_clusters=8, on_decode_error="skip")
+    fail = dataclasses.replace(cfg, on_decode_error="fail")
+    with pytest.raises(Exception):
+        fit_global_centres(images, fail)
+    c = fit_global_centres(images, cfg)
+    assert np.array_equal(c, fit_global_centres(good, cfg))
+    with pytest.raises(Exception):
+        segment_stats_tiled(images, fail, centres=c).count()
+    key = ["image_id", "seg_id", "band"]
+    got = segment_stats_tiled(images, cfg, centres=c).toPandas() \
+        .sort_values(key, ignore_index=True)
+    want = segment_stats_tiled(good, cfg, centres=c).toPandas() \
+        .sort_values(key, ignore_index=True)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+def _tall_raster_row():
+    """A 150 x 300 raster without a null margin (tile 64, overlap 16:
+    2 tile columns by 5 tile rows): Voronoi regions, one vertical
+    stripe region that spans every tile row, and exactly one null
+    pixel. A tile holding a single null pixel turns it into a
+    one-pixel segment, which the single-pixel elimination merges into
+    a neighbour — so that segment's nodata count is 1."""
+    from pyshepseg_spark.sources.codec import average_phash, encode_image
+    from pyshepseg_spark.sources.imagegen import (make_pallete,
+                                                  paint_image,
+                                                  voronoi_truth)
+    w, h, k = 150, 300, 10
+    rng = np.random.default_rng(77)
+    centres = np.stack([rng.uniform(0, w, size=k),
+                        rng.uniform(0, h, size=k)], axis=1)
+    # a two-pixel-wider diagram cropped: no margin of null labels
+    truth = voronoi_truth(w + 4, h + 4, centres + 2)[2:-2, 2:-2]
+    truth[:, 60:84] = k + 1
+    img = paint_image(truth, make_pallete(k + 1, rng))
+    img[:, 130, 20] = 65535
+    return {"image_id": "tall", "bytes": encode_image(img, "png"),
+            "w": w, "h": h, "fmt": "png", "caption": "x",
+            "phash": int(average_phash(img[0])), "num_clusters": k + 1}
+
+
+@pytest.mark.parametrize("shared_centres", [False, True])
+def test_stats_tiled_row_release_tall_raster(spark, shared_centres):
+    """segment_stats_tiled finalizes each segment inside the stitch
+    task once no later tile row can add pixels to it. On a tall
+    raster with a segment spanning every tile row and a nonzero
+    nodata count, both modes equal paint -> tile_value_histogram ->
+    segment_stats (and the `cli stats --with-nodata` join) exactly,
+    with one row per (image_id, seg_id, band)."""
+    from pyshepseg_spark.operators.segment import fit_global_centres
+    from pyshepseg_spark.operators.zonal import (segment_nodata_counts,
+                                                 segment_stats,
+                                                 segment_stats_tiled,
+                                                 tile_value_histogram)
+    row = _tall_raster_row()
+    images = spark.createDataFrame(pd.DataFrame([row]))
+    cfg = SegConfig(img_null_val=65535, four_connected=False,
+                    min_segment_size=50, tile_size=64, overlap=16)
+    centres = fit_global_centres(images, cfg) if shared_centres else None
+    final, _, _ = segment_images_tiled(images, cfg, centres=centres)
+    hist_all = tile_value_histogram(final, img_null_val=None) \
+        .localCheckpoint()
+    stats = segment_stats(hist_all.filter(F.col("val") != 65535),
+                          percentiles=(25, 50))
+    key = ["image_id", "seg_id", "band"]
+    want_nd = (segment_nodata_counts(hist_all, 65535)
+               .join(stats, key, "left").toPandas()
+               .sort_values(key, ignore_index=True))
+    want = stats.toPandas().sort_values(key, ignore_index=True)
+    seg = assemble_image(final.toPandas(), row["w"], row["h"])
+    # the stripe's segment runs through every tile row
+    assert (seg[:, 72] == seg[0, 72]).all() and seg[0, 72] > 0
+    assert want_nd["nodata_cnt"].sum() > 0
+    for with_nodata, w in ((False, want), (True, want_nd)):
+        got = segment_stats_tiled(images, cfg, percentiles=(25, 50),
+                                  with_nodata=with_nodata,
+                                  centres=centres).toPandas()
+        assert not got.duplicated(key).any()
+        pd.testing.assert_frame_equal(
+            got.sort_values(key, ignore_index=True), w,
+            check_exact=True)
+
+
+def test_stitch_bins_releases_at_tile_row_boundaries(spark):
+    """The hist stitch hands each segment's merged bins out exactly
+    once, and segments that no later tile row reaches leave before
+    the image's end: on the tall raster the first block holds
+    segments of the top rows only, the stripe's segment comes last."""
+    from pyshepseg_spark.operators.segment import (_stitch_bins,
+                                                   explode_and_segment)
+    row = _tall_raster_row()
+    images = spark.createDataFrame(pd.DataFrame([row]))
+    cfg = SegConfig(img_null_val=65535, four_connected=False,
+                    min_segment_size=50, tile_size=64, overlap=16)
+    st = explode_and_segment(images, cfg, emit_hist=True,
+                             keep_binaries=False)
+    calls = iter(range(1 << 30))
+
+    def finish(bins):
+        return bins.assign(block=next(calls))
+
+    got = _stitch_bins(st, cfg.overlap, finish,
+                       "image_id string, seg_id long, band int, "
+                       "val long, cnt long, block long").toPandas()
+    assert not got.duplicated(["seg_id", "band", "val"]).any()
+    blocks = got.groupby("seg_id").block.nunique()
+    assert (blocks == 1).all()
+    first = got.groupby("seg_id").block.first()
+    assert first.nunique() > 2
+    final, _, _ = segment_images_tiled(images, cfg)
+    seg = assemble_image(final.toPandas(), row["w"], row["h"])
+    assert first[seg[0, 72]] == first.max()
+    # the first block leaves before the last tile row, whose trimmed
+    # cores start at row 200: none of its segments reaches that row
+    early = first.index[first == first.min()].to_numpy()
+    assert len(early) and not np.isin(seg[200:], early).any()

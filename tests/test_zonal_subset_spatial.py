@@ -373,6 +373,67 @@ def test_segment_stats_selected_matches_segment_stats(spark):
         segment_stats_selected(h, [("x", "percentile", 101)])
 
 
+@pytest.mark.parametrize("nodata_val", [None, 7])
+def test_stats_from_bins_equals_spark_bitwise(spark, nodata_val):
+    """The numpy finalizer twin equals the JVM one exactly, floats
+    included, on seeded random merged histograms with mode ties and
+    single-bin segments, for every stat name (a caller-named
+    ``median`` among them) and percentiles 0/25/50/75/100. With a
+    nodata value it equals segment_nodata_counts joined to the stats
+    of the valid bins, an all-nodata segment included. Every sum
+    stays below 2^53, where double sums are exact in any order."""
+    from pyshepseg_spark.operators.zonal import (segment_nodata_counts,
+                                                 segment_stats_selected,
+                                                 stats_from_bins)
+    rng = np.random.default_rng(11)
+    frames = []
+    for image_id in ("a", "b"):
+        for seg_id in range(1, 41):
+            for band in (0, 2):
+                nbins = 1 if seg_id % 9 == 0 else int(rng.integers(2, 60))
+                vals = rng.choice(1 << 17, nbins, replace=False)
+                if seg_id % 5 == 0:
+                    vals[0] = 7
+                frames.append(pd.DataFrame({
+                    "image_id": image_id, "seg_id": seg_id,
+                    "band": band, "val": vals,
+                    # few distinct counts: many mode ties
+                    "cnt": rng.integers(1, 4, nbins)}))
+    frames.append(pd.DataFrame({   # all-nodata, and an explicit tie
+        "image_id": "c", "seg_id": [1, 2, 2, 2], "band": 0,
+        "val": [7, 9, 5, 3], "cnt": [4, 2, 2, 1]}))
+    bins = pd.concat(frames, ignore_index=True).sample(frac=1,
+                                                       random_state=3)
+    bins["band"] = bins["band"].astype(np.int32)
+    h = spark.createDataFrame(
+        bins, "image_id string, seg_id long, band int, val long, "
+              "cnt long")
+    sel = [("mn", "min"), ("mx", "max"), ("avg", "mean"),
+           ("sd", "stddev"), ("median", "median"), ("mo", "mode"),
+           ("n", "pixcount")]
+    sel += [(f"q{p}", "percentile", p) for p in (0, 25, 50, 75, 100)]
+    key = ["image_id", "seg_id", "band"]
+    got = stats_from_bins(bins, sel, nodata_val)
+    if nodata_val is None:
+        want = segment_stats_selected(h, sel)
+    else:
+        want = segment_nodata_counts(h, nodata_val).join(
+            segment_stats_selected(h.filter(F.col("val") != nodata_val),
+                                   sel), key, "left")
+    want = want.toPandas().sort_values(key, ignore_index=True)
+    got = got.sort_values(key, ignore_index=True)
+    if nodata_val is not None:
+        assert want["mn"].isna().sum() == 1
+        # the nullable columns come back from Spark as float64
+        got = got.astype(want.dtypes.to_dict())
+    assert list(got.columns) == list(want.columns)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    tie = got[(got.image_id == "c") & (got.seg_id == 2)]
+    assert tie["mo"].tolist() == [5]
+    with pytest.raises(ValueError, match="statName"):
+        stats_from_bins(bins, [("x", "variance")])
+
+
 @pytest.mark.parametrize("four_connected", [True, False])
 def test_edge_pixels_tiled_equals_udf(spark, final_tiles,
                                       four_connected):
