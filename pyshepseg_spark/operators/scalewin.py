@@ -15,10 +15,10 @@ scalable rewrite is the classic two-phase prefix sum:
      PARTITIONED by the physical partition id — every window group
      is one bounded partition.
 
-The engine's real pipelines already do this per image
-(segment.with_offsets partitions by image_id, W2); these helpers are
-the GLOBAL variants for operators whose order key has no natural
-partition (reference analogues: the global contiguous relabel,
+The engine's real pipelines number segments per image (the stitch
+kernel carries a running id through each image's tiles, W2); these
+helpers are the GLOBAL variants for operators whose order key has no
+natural partition (reference analogues: the global contiguous relabel,
 tiling.py doTiledShepherdSegmentation's running segment-ID offset).
 
 The ranged frame is localCheckpoint'ed (eager): the per-partition

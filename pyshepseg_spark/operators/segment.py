@@ -14,11 +14,15 @@ Spark-first re-expression of the reference's tiled pipeline
             tiling.py:950-1306) over boundary strips only —
             sequential_stitch_mapping streams each image's tiles
             row-major with a one-tile-row rolling cache, parallel
-            across images, bitwise-equal mosaics on every input.
+            across images, bitwise-equal mosaics on every input, and
+            emits one lut per tile (local id -> final id)
+  paint     paint_final_tiles joins each tile to its lut and paints
+            lut[seg] over the trimmed core, as parallel as the tiles
 
-Segment IDs: per-image int64 ("gid" = per-tile prefix-sum offset +
-local id). uint32 would overflow at 10^12-image scale (SURVEY.md §7
-hard part 4); global uniqueness is the composite (image_id, seg_id).
+Segment IDs: per-image int64, numbered by the stitch's running
+maxSegId exactly as the reference does (tiling.py:979-1043). uint32
+would overflow at 10^12-image scale (SURVEY.md §7 hard part 4);
+global uniqueness is the composite (image_id, seg_id).
 """
 
 from __future__ import annotations
@@ -28,15 +32,14 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..constants import MAX_CLUMP_SIZE
 from ..kernels.kmeans import fit_spectral_clusters_sample
 from ..sources.codec import encode_raw_u16
 from .tiling import (_image_columns, _image_rows, _shepherd,
-                     collect_sample, decode_tile_pixels, explode_tiles,
-                     stride_sample_pixels, tile_grid)
+                     decode_tile_pixels, explode_tiles, global_sample,
+                     tile_grid)
 from .zonal import group_starts, group_sums, value_histogram
 
 
@@ -93,7 +96,8 @@ def fit_global_centres(images_df, cfg: SegConfig,
     downstream segmentation (driver ADVICE r4).
 
     The sample reads images under ``cfg.on_decode_error``, like every
-    other image kernel."""
+    other image kernel, and is strided by the pixels that decode
+    (tiling.global_sample)."""
     if validate and cfg.img_null_val is None:
         import dataclasses
 
@@ -101,10 +105,8 @@ def fit_global_centres(images_df, cfg: SegConfig,
         nv = discover_img_null_val(images_df)
         if nv is not None:
             cfg = dataclasses.replace(cfg, img_null_val=int(nv))
-    sample_df = stride_sample_pixels(
-        images_df, cfg.sample_target_pixels, cfg.img_null_val,
-        on_decode_error=cfg.on_decode_error)
-    x = collect_sample(sample_df)
+    x = global_sample(images_df, cfg.sample_target_pixels,
+                      cfg.img_null_val, cfg.on_decode_error)
     return fit_spectral_clusters_sample(
         x, cfg.num_clusters, cfg.fixed_kmeans_init,
         n_init=cfg.kmeans_n_init)
@@ -314,67 +316,6 @@ def segment_tiles(tiles_df, centres, cfg: SegConfig,
     return tiles_df.mapInPandas(kernel, schema)
 
 
-def tile_offsets(seg_tiles):
-    """Per-image prefix sum of local segment counts in row-major tile
-    order, computed over the NARROW (image_id, tcol, trow, nseg)
-    projection only (W2: ordered window prefix sum replaces the
-    reference's running maxSegId, tiling.py:979-1043). Keeping the
-    window off the pixel/segtile binaries matters at scale: a
-    per-image window over the fat kernel rows forces every tile of
-    an image — pixels included — through ONE task's sort, an
-    O(image pixels) single-task stage for a giant mosaic. Over
-    ~20-byte rows the same window is O(tiles)."""
-    w = (Window.partitionBy("image_id").orderBy("trow", "tcol")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    return seg_tiles.select(
-        "image_id", "tcol", "trow",
-        F.coalesce(F.sum("nseg").over(w), F.lit(0)).alias("offset"))
-
-
-def with_offsets(seg_tiles):
-    """Fat rows + their W2 offsets: narrow-window prefix sum joined
-    back by tile key. AQE broadcasts the narrow offsets side when it
-    is small (the common case — no shuffle of the fat rows at all);
-    at giant-mosaic scale it degrades to a distributed hash join on
-    the tile key, never a single-task sort of pixel rows. NOTE: the
-    input plan is evaluated twice (once per join side) — call on a
-    checkpointed or cheap-to-recompute frame (checkpoint_with_meta
-    checkpoints first for exactly this reason)."""
-    offs = tile_offsets(seg_tiles.select(
-        "image_id", "tcol", "trow", "nseg"))
-    return seg_tiles.join(offs, ["image_id", "tcol", "trow"])
-
-
-META_COLS = ["image_id", "tcol", "trow", "ntcols", "ntrows", "xpos",
-             "ypos", "xsize", "ysize", "nseg", "offset", "anchored",
-             "present",
-             "strip_top", "strip_left", "strip_bottom", "strip_right"]
-
-
-def checkpoint_with_meta(seg_tiles):
-    """Materialize the segmentation kernel output once (the S6 resume
-    point) and carve out a NARROW metadata checkpoint for the strip /
-    mapping consumers. Checkpointed RDD scans cannot column-prune, so
-    without the split every stitch consumer re-reads the fat
-    pixel/segtile binaries (four full scans); with it the fat rows
-    are scanned exactly twice — once to build the metadata, once by
-    the final paint/histogram pass."""
-    st0 = seg_tiles.localCheckpoint()
-    # offsets AFTER the checkpoint: the narrow window + join-back
-    # read the materialized blocks, never re-running the kernel, and
-    # no window task ever sorts rows carrying pixels/segtile
-    st = with_offsets(st0)
-    # lazy: the narrow scan folds into the first consumer's job
-    # instead of adding a serial materialization barrier
-    meta = st.select(*[c for c in META_COLS if c in st.columns]) \
-        .localCheckpoint(eager=False)
-    return st, meta
-
-
-MAPPING_SCHEMA = ("image_id string, tcol int, trow int, gid long, "
-                  "final long")
-
-
 def _recode_strip(overlap_a, overlap_b, axis, recode):
     """Replay of the reference's recodeSharedSegments
     (tiling.py:1129-1204) on one overlap strip pair: for every
@@ -456,13 +397,31 @@ class _StitchReplay:
         return lut
 
 
-def _stitch_input(meta, cols):
+class _OffsetReplay:
+    """One image's state in the simpleTileRecode mode (reference
+    tiling.py:1024-1030): each tile's local ids are offset by the
+    running sum of the earlier tiles' nseg, with no merge across
+    tiles. Tiles must arrive in (trow, tcol) order."""
+
+    def __init__(self, overlap: int):
+        self.offset = 0
+
+    def lut(self, row):
+        n = int(row.nseg)
+        lut = np.arange(self.offset, self.offset + n + 1, dtype=np.int64)
+        lut[0] = 0
+        self.offset += n
+        return lut
+
+
+STRIP_COLS = ["xsize", "ysize", "anchored", "present", "strip_top",
+              "strip_left", "strip_bottom", "strip_right"]
+
+
+def _stitch_input(seg_tiles, cols):
     """The tile rows of each image in one partition, (trow, tcol)
     order: the stitch's one exchange."""
-    need = ["image_id", "tcol", "trow", "xsize", "ysize", "nseg",
-            "anchored", "present",
-            "strip_top", "strip_left", "strip_bottom", "strip_right"]
-    return (meta.select(*need, *cols)
+    return (seg_tiles.select("image_id", "tcol", "trow", "nseg", *cols)
             .repartition("image_id")
             .sortWithinPartitions("image_id", "trow", "tcol"))
 
@@ -472,11 +431,15 @@ def _frames(out, columns):
             else pd.DataFrame(columns=columns))
 
 
-def sequential_stitch_mapping(meta, overlap: int,
-                              output: str = "mapping"):
-    """gid -> final mapping by EXACT replay of the reference's
-    sequential stitch (stitchTiles + recodeTile + relabelSegments,
-    tiling.py:950-1306) over boundary strips only.
+LUT_SCHEMA = "image_id string, tcol int, trow int, lut binary"
+
+
+def sequential_stitch_mapping(seg_tiles, overlap: int,
+                              output: str = "lut",
+                              simple_recode: bool = False):
+    """Per-tile local id -> final id luts by EXACT replay of the
+    reference's sequential stitch (stitchTiles + recodeTile +
+    relabelSegments, tiling.py:950-1306) over boundary strips only.
 
     The recode recurrence is inherently order-dependent: tile
     (c, r) recodes against the already-relabelled strips of
@@ -488,9 +451,9 @@ def sequential_stitch_mapping(meta, overlap: int,
     them distinct). So the engine evaluates the recurrence exactly,
     per image, while touching none of the pixel data:
 
-    - input is the NARROW tile metadata (strips, anchored/present id
-      lists, counts) — O(pixels * overlap / tile_size) bytes, never
-      the tiles;
+    - input is the NARROW projection of the kernel rows (strips,
+      anchored/present id lists, counts) — O(pixels * overlap /
+      tile_size) bytes, never the tiles;
     - tiles are hash-partitioned by image and sorted (trow, tcol);
       the mapInPandas kernel streams them in row-major order keeping
       ONLY the previous tile-row's relabelled strips (O(image_width *
@@ -501,25 +464,33 @@ def sequential_stitch_mapping(meta, overlap: int,
       stitch); the pixel-heavy stages before (segment kernels) and
       after (paint / histogram) remain embarrassingly parallel.
 
-    Returns (image_id, tcol, trow, gid, final) rows for gids with a
-    nonzero final id; consumers default unmapped gids to 0 (the
-    reference's SEGNULLVAL for unanchored, unrecoded margins).
+    Returns one (image_id, tcol, trow, lut) row per tile: ``lut`` is
+    the ``<i8`` array of the tile's final id by local id (length
+    nseg + 1; 0 is the reference's SEGNULLVAL, for unanchored,
+    unrecoded margins). The final ids carry the reference's running
+    maxSegId, so no offset or id space exists outside the kernel.
 
-    output="hist": instead of mapping rows, remap each tile's
-    kernel-emitted core histogram (``hist`` column, LOCAL ids)
-    through the lut in-kernel and emit the merged final-id value
-    histogram (image_id, seg_id, band, val, cnt), one row per
+    simple_recode=True replays the reference's simpleTileRecode mode
+    instead (:class:`_OffsetReplay`): the lut is the running offset
+    plus the local id, and only the tile key and nseg cross the
+    exchange.
+
+    output="hist": instead of luts, remap each tile's kernel-emitted
+    core histogram (``hist`` column, LOCAL ids) through the lut
+    in-kernel and emit the merged final-id value histogram
+    (image_id, seg_id, band, val, cnt), one row per
     (image_id, seg_id, band, val): each segment's bins leave the
     kernel once, after the last tile row it can gain pixels in
-    (:func:`_stitch_bins`). No checkpoint, no mapping join, no
+    (:func:`_stitch_bins`). No checkpoint, no paint join, no
     explode.
     """
     if output == "hist":
-        return _stitch_bins(meta, overlap, lambda bins: bins,
+        return _stitch_bins(seg_tiles, overlap, lambda bins: bins,
                             "image_id string, seg_id long, band int, "
                             "val long, cnt long")
-    df = _stitch_input(meta, ["offset"])
-    cols = ["image_id", "tcol", "trow", "gid", "final"]
+    replay = _OffsetReplay if simple_recode else _StitchReplay
+    df = _stitch_input(seg_tiles, [] if simple_recode else STRIP_COLS)
+    cols = ["image_id", "tcol", "trow", "lut"]
 
     def kernel(batches):
         cur, rep = None, None
@@ -527,18 +498,12 @@ def sequential_stitch_mapping(meta, overlap: int,
             out = []
             for row in pdf.itertuples(index=False):
                 if row.image_id != cur:
-                    cur, rep = row.image_id, _StitchReplay(overlap)
-                lut = rep.lut(row)
-                ids = np.flatnonzero(lut)
-                if len(ids):
-                    out.append(pd.DataFrame({
-                        "image_id": row.image_id,
-                        "tcol": row.tcol, "trow": row.trow,
-                        "gid": ids + int(row.offset),
-                        "final": lut[ids]}))
-            yield _frames(out, cols)
+                    cur, rep = row.image_id, replay(overlap)
+                out.append((row.image_id, row.tcol, row.trow,
+                            rep.lut(row).astype("<i8").tobytes()))
+            yield pd.DataFrame(out, columns=cols)
 
-    return df.mapInPandas(kernel, MAPPING_SCHEMA)
+    return df.mapInPandas(kernel, LUT_SCHEMA)
 
 
 class _HeldBins:
@@ -589,7 +554,7 @@ class _HeldBins:
                              "val": val[done], "cnt": cnt[done]})
 
 
-def _stitch_bins(meta, overlap: int, finish, schema: str):
+def _stitch_bins(seg_tiles, overlap: int, finish, schema: str):
     """The sequential stitch over tiles that carry their core
     histograms (``hist``, on local ids): each tile's bins are
     remapped through its lut and held, merged, per image. A final id
@@ -602,7 +567,8 @@ def _stitch_bins(meta, overlap: int, finish, schema: str):
     (seg_id, band, val), every segment whole) inside the stitch task
     and returns rows of ``schema``. Memory holds one tile row's bins
     plus the segments still open, never the whole image's."""
-    df = _stitch_input(meta, ["ntcols", "ntrows", "hist"])
+    df = _stitch_input(seg_tiles,
+                       STRIP_COLS + ["ntcols", "ntrows", "hist"])
     cols = [c.split()[0] for c in schema.split(", ")]
 
     def kernel(batches):
@@ -633,23 +599,18 @@ FINAL_TILE_SCHEMA = (
     "segdata binary, max_final long"
 )
 
-FINAL_TILE_SCHEMA_NOPIX = (
-    "image_id string, tcol int, trow int, xout int, yout int, "
-    "out_xsize int, out_ysize int, nbands int, "
-    "segdata binary, max_final long"
-)
 
-def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
+def paint_final_tiles(seg_tiles, luts, overlap: int,
                       keep_pixels: bool = True):
-    """Apply gid->final mapping to each tile and trim to its core
-    (margin = overlap/2, mosaic edges untrimmed; tiling.py:959,
-    996-1022).
+    """Paint each tile through its lut (:func:`sequential_stitch_mapping`)
+    and trim it to its core (margin = overlap/2, mosaic edges
+    untrimmed; tiling.py:959, 996-1022): ``lut[seg[core]]``.
 
-    Scale note: rather than cogrouping whole images (a fat group for
-    a giant mosaic), each tile's gid range joins the mapping table on
-    (image_id, gid) and only its own ~nseg mapping rows are shipped
-    into the paint kernel — the shuffle is proportional to segment
-    count, never pixel count.
+    Scale note: the kernel rows join their luts on the tile key, so
+    the paint stays as parallel as the kernel rows (never one task
+    per image) and ships one lut row per tile — proportional to the
+    tile's segment count, never to its pixels. Only the columns the
+    paint reads leave the JVM.
 
     keep_pixels=False drops the pixels column from the output —
     segmentation-only consumers (the painted-mosaic sink, subset
@@ -661,35 +622,27 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
     them."""
     margin = overlap // 2
     keys = ["image_id", "tcol", "trow"]
-    # the mapping already carries its tile key: one groupBy, no gid
-    # re-explode, no join back
-    tm = (mapping.groupBy(*keys)
-          .agg(F.collect_list(F.struct("gid", "final")).alias("gf")))
-    joined = seg_tiles_off.join(tm, keys, "left")
-    cols = (["image_id", "tcol", "trow", "xout", "yout", "out_xsize",
-             "out_ysize", "nbands"] + (["pixels"] if keep_pixels else [])
-            + ["segdata", "max_final"])
+    # a left join: the planner may broadcast the luts, never the
+    # pixel rows
+    joined = seg_tiles.select(
+        *keys, "ntcols", "ntrows", "xpos", "ypos", "xsize", "ysize",
+        "nbands", *(["pixels"] if keep_pixels else []), "segtile",
+    ).join(luts, keys, "left")
+    schema = (FINAL_TILE_SCHEMA if keep_pixels
+              else FINAL_TILE_SCHEMA.replace("pixels binary, ", ""))
+    cols = [c.split()[0] for c in schema.split(", ")]
 
     def kernel(batches):
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 seg = np.frombuffer(row.segtile, dtype="<u4").reshape(
-                    row.ysize, row.xsize).astype(np.int64)
-                gid = np.where(seg > 0, seg + row.offset, 0)
+                    row.ysize, row.xsize)
                 top, bottom, left, right = _trim_bounds(
                     row.tcol, row.trow, row.ntcols, row.ntrows,
                     row.xsize, row.ysize, margin)
-                core = gid[top:bottom, left:right]
-                lut = {}
-                if row.gf is not None:
-                    for item in row.gf:
-                        lut[int(item["gid"])] = int(item["final"])
-                u, inv = np.unique(core, return_inverse=True)
-                mapped = np.fromiter(
-                    (0 if g == 0 else lut.get(int(g), 0) for g in u),
-                    dtype=np.int64, count=len(u))
-                final = mapped[inv].reshape(core.shape)
+                final = np.frombuffer(row.lut, dtype="<i8")[
+                    seg[top:bottom, left:right]]
                 rec = {
                     "image_id": row.image_id,
                     "tcol": row.tcol, "trow": row.trow,
@@ -697,7 +650,7 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
                     "out_xsize": right - left,
                     "out_ysize": bottom - top,
                     "nbands": row.nbands,
-                    "segdata": final.astype("<i8").tobytes(),
+                    "segdata": final.tobytes(),
                     "max_final": int(final.max()) if final.size else 0,
                 }
                 if keep_pixels:
@@ -709,8 +662,6 @@ def paint_final_tiles(seg_tiles_off, mapping, overlap: int,
                 out.append(rec)
             yield pd.DataFrame(out, columns=cols)
 
-    schema = (FINAL_TILE_SCHEMA if keep_pixels
-              else FINAL_TILE_SCHEMA_NOPIX)
     return joined.mapInPandas(kernel, schema)
 
 
@@ -779,32 +730,27 @@ def stitch(seg_tiles, cfg: SegConfig, simple_recode: bool = False,
     localCheckpoint materializes the expensive kernel output exactly
     once so the stitch consumers never re-run the segmentation (on a
     cluster this is the durable S6 checkpoint instead —
-    plans/checkpoint.py).
+    plans/checkpoint.py). The checkpoint is read twice: by the stitch
+    through its narrow projection, and by the paint.
 
-    The mapping is the exact replay of the reference's order-dependent
+    The luts are the exact replay of the reference's order-dependent
     recode recurrence over boundary strips
     (:func:`sequential_stitch_mapping`) — bitwise-equal mosaics to
     the reference on EVERY input, parallel across images, streaming
-    within an image.
+    within an image. Its repartition by image is the plan's one
+    hash exchange; the paint joins the luts back by broadcast when
+    they are small.
 
     simple_recode=True is the reference's simpleTileRecode mode
     (tiling.py:1024-1030): every tile's local IDs are just offset to
     be globally unique; boundary segments are NOT merged across
     tiles (faster, used when cross-tile consistency is not needed).
-    Expressed here as an identity gid mapping — no strip replay, no
-    shuffle beyond the offset window."""
-    st, meta = checkpoint_with_meta(seg_tiles)
-    if simple_recode:
-        mapping = (meta.filter(F.col("nseg") > 0)
-                   .select("image_id", "tcol", "trow",
-                           F.explode(F.sequence(
-                               F.col("offset") + 1,
-                               F.col("offset") + F.col("nseg")))
-                           .alias("gid"))
-                   .withColumn("final", F.col("gid")))
-    else:
-        mapping = sequential_stitch_mapping(meta, cfg.overlap)
-    return paint_final_tiles(st, mapping, cfg.overlap,
+    The same stitch kernel emits its luts from the running nseg
+    offset, with no strip replay."""
+    st = seg_tiles.localCheckpoint()
+    luts = sequential_stitch_mapping(st, cfg.overlap,
+                                     simple_recode=simple_recode)
+    return paint_final_tiles(st, luts, cfg.overlap,
                              keep_pixels=keep_pixels)
 
 
@@ -866,6 +812,6 @@ def assemble_image(final_tiles_pdf: pd.DataFrame, w: int, h: int):
 
 
 __all__ = ["SegConfig", "fit_global_centres", "segment_tiles",
-           "with_offsets", "tile_offsets", "sequential_stitch_mapping",
-           "paint_final_tiles", "segment_images_tiled", "stitch",
-           "segment_images", "assemble_image"]
+           "sequential_stitch_mapping", "paint_final_tiles",
+           "segment_images_tiled", "stitch", "segment_images",
+           "assemble_image"]

@@ -338,24 +338,33 @@ def decode_tile_pixels(pixels: bytes, nbands: int, ysize: int,
         nbands, ysize, xsize).astype(np.uint16)
 
 
+def _declared_pixels(images_df) -> int:
+    from pyspark.sql import functions as F
+    return images_df.select(
+        F.sum(F.col("w").cast("long") * F.col("h"))).collect()[0][0] or 0
+
+
+def _stride(total_pixels: int, target_pixels: int) -> int:
+    return max(1, int(round(total_pixels / float(target_pixels))))
+
+
 def stride_sample_pixels(images_df, target_pixels: int = 1_000_000,
                          img_null_val: int | None = None,
-                         on_decode_error: str = "fail"):
+                         on_decode_error: str = "fail",
+                         total_pixels: int | None = None):
     """Global k-means sample (reference tiling.py:196-224
     fitSpectralClustersWholeFile): read every k-th non-null pixel of
     every image so the total sample is ~target_pixels, deterministic
     stride (no RNG). Returns a DataFrame with one row per image of
-    packed float32 sample bytes (compact collect to the driver).
-    Rows are read by :func:`_decoded_rows` under ``on_decode_error``;
-    the stride is planned from the declared w x h of every row before
-    any pixel is read, so a skipped row still counts toward it.
+    packed float32 sample bytes (compact collect to the driver) and
+    the image's decoded pixel count ``npix``.
+    Rows are read by :func:`_decoded_rows` under ``on_decode_error``.
+    The stride is planned from ``total_pixels``, by default the
+    declared w x h of every row, summed before any pixel is read.
     """
-    from pyspark.sql import functions as F
-
-    total = images_df.select(
-        F.sum(F.col("w").cast("long") * F.col("h")).alias("n")
-    ).collect()[0]["n"]
-    skip = max(1, int(round(total / float(target_pixels))))
+    if total_pixels is None:
+        total_pixels = _declared_pixels(images_df)
+    skip = _stride(total_pixels, target_pixels)
 
     def kernel(batches):
         for pdf in batches:
@@ -363,26 +372,52 @@ def stride_sample_pixels(images_df, target_pixels: int = 1_000_000,
             for _, img in _decoded_rows(pdf, on_decode_error):
                 nbands = img.shape[0]
                 x = img.transpose(1, 2, 0).reshape(-1, nbands)
+                npix = len(x)
                 if img_null_val is not None:
                     x = x[(x != img_null_val).all(axis=1)]
                 x = x[::skip]
                 out.append({"sample": x.astype(np.float32).tobytes(),
-                            "nbands": nbands})
-            yield pd.DataFrame(out, columns=["sample", "nbands"])
+                            "nbands": nbands, "npix": npix})
+            yield pd.DataFrame(out, columns=["sample", "nbands", "npix"])
 
     return images_df.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(kernel, "sample binary, nbands int")
+        .mapInPandas(kernel, "sample binary, nbands int, npix long")
+
+
+def _sample_array(rows) -> np.ndarray:
+    if not rows:
+        raise ValueError("no images to sample")
+    nbands = rows[0]["nbands"]
+    return np.concatenate([np.frombuffer(r["sample"], dtype=np.float32)
+                           .reshape(-1, nbands) for r in rows], axis=0)
 
 
 def collect_sample(sample_df) -> np.ndarray:
     """Driver-side concat of the packed stride sample."""
-    rows = sample_df.collect()
-    if not rows:
-        raise ValueError("no images to sample")
-    nbands = rows[0]["nbands"]
-    parts = [np.frombuffer(r["sample"], dtype=np.float32).reshape(
-        -1, nbands) for r in rows]
-    return np.concatenate(parts, axis=0)
+    return _sample_array(sample_df.collect())
+
+
+def global_sample(images_df, target_pixels: int,
+                  img_null_val: int | None = None,
+                  on_decode_error: str = "fail") -> np.ndarray:
+    """The collected :func:`stride_sample_pixels` sample, strided by
+    the pixels that decode. A row dropped under
+    ``on_decode_error="skip"`` still counts toward the declared
+    total, so when the decoded total (the sum of ``npix``) plans a
+    different stride, the sample is taken again at that stride: it
+    then equals the sample of the table without the dropped rows.
+    When every row decodes, no job runs beyond the declared total and
+    the one sample."""
+    declared = _declared_pixels(images_df)
+    rows = stride_sample_pixels(images_df, target_pixels, img_null_val,
+                                on_decode_error, declared).collect()
+    decoded = sum(r["npix"] for r in rows)
+    if rows and _stride(decoded, target_pixels) != _stride(
+            declared, target_pixels):
+        rows = stride_sample_pixels(images_df, target_pixels,
+                                    img_null_val, on_decode_error,
+                                    decoded).collect()
+    return _sample_array(rows)
 
 
 def tile_metrics(seg_tiles_df):
@@ -401,5 +436,5 @@ def tile_metrics(seg_tiles_df):
 
 
 __all__ = ["tile_grid", "explode_tiles", "decode_tile_pixels",
-           "stride_sample_pixels", "collect_sample", "morton_cell",
-           "tile_metrics", "TILE_SCHEMA"]
+           "stride_sample_pixels", "collect_sample", "global_sample",
+           "morton_cell", "tile_metrics", "TILE_SCHEMA"]

@@ -6,12 +6,13 @@ answers "which stage is the residual" by forcing each phase in its
 own job at a given parallelism level:
 
   kernel+ckpt  — segment_tiles over the tiles scan, materialized by
-                 the stitch's own localCheckpoint (fat rows: pixels,
-                 segtile, strips)
-  mapping      — sequential_stitch_mapping from the checkpointed
-                 meta; the per-image sequential replay is the
-                 Amdahl term
-  paint+count  — paint_final_tiles + count on the checkpointed rows
+                 a localCheckpoint like the stitch's own (fat rows:
+                 pixels, segtile, strips)
+  luts         — sequential_stitch_mapping over the checkpointed
+                 rows: one lut per tile; the per-image sequential
+                 replay is the Amdahl term
+  paint        — paint_final_tiles + count: the checkpointed rows
+                 joined to their luts
 
 The phase boundaries add one extra materialization vs the fused
 end-to-end run, so the SUM here can exceed the end-to-end time; the
@@ -34,8 +35,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyshepseg_spark.session import get_spark
 from pyshepseg_spark.operators.segment import (SegConfig,
-    checkpoint_with_meta, paint_final_tiles, segment_tiles,
-    sequential_stitch_mapping)
+    paint_final_tiles, segment_tiles, sequential_stitch_mapping)
 from pyshepseg_spark.operators.skew import spread_small_scan
 
 spark = get_spark(app_name="giantstages", master="local[{cores}]",
@@ -47,23 +47,21 @@ tiles = spread_small_scan(spark.read.parquet({path!r}))
 for rep in range({reps} + 1):
     t = {{}}
     t0 = time.time()
-    st, meta = checkpoint_with_meta(segment_tiles(tiles, None, cfg))
+    st = segment_tiles(tiles, None, cfg).localCheckpoint()
     t["kernel_ckpt"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    mapping = sequential_stitch_mapping(meta, cfg.overlap) \
-        .localCheckpoint()
-    n_map = mapping.count()
-    t["mapping"] = round(time.time() - t0, 2)
+    luts = sequential_stitch_mapping(st, cfg.overlap).localCheckpoint()
+    n_luts = luts.count()
+    t["luts"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    final = paint_final_tiles(st, mapping, cfg.overlap)
-    n = final.count()
-    t["paint_count"] = round(time.time() - t0, 2)
+    n = paint_final_tiles(st, luts, cfg.overlap).count()
+    t["paint"] = round(time.time() - t0, 2)
     if rep > 0:
         print(json.dumps({{"cores": {cores},
                            "rep": rep, "rows": n,
-                           "map_rows": n_map, **t}}), flush=True)
+                           "lut_rows": n_luts, **t}}), flush=True)
 spark.stop()
 """
 

@@ -8,7 +8,9 @@ extra barrier or an unplanned broadcast shows up here as a count, not
 as a timing that noise can hide.
 
 The budgets are the counts measured on this fixture (tests/conftest.py:
-3 images of 256^2, tile 128, overlap 32, ``local[8]``; for
+3 images of 256^2, tile 128, overlap 32, ``local[8]``, and for
+``segment_images_tiled_shared`` one centre matrix fitted over them
+by ``fit_global_centres`` outside the counted call; for
 ``duplicate_groups`` a three-pair frame with one chain and one lone
 pair, with integer and with string ids; for ``embedding_near_dups``
 the sf0.001 embeddings table at threshold 0.9, 16 bits, 4 bands; for
@@ -39,7 +41,8 @@ from pyshepseg_spark.sources.imagegen import caption_points
 
 BUDGETS = {
     "fit_global_centres": 3,
-    "segment_images_tiled": 11,
+    "segment_images_tiled": 6,
+    "segment_images_tiled_shared": 7,
     "point_in_segment": 10,
     "segment_sizes": 2,
     "segment_stats_tiled": 2,
@@ -64,7 +67,12 @@ def centroids(spark):
         n_cells=8)
 
 
-def _calls(images_fixture, cfg, final_tiles, centroids):
+@pytest.fixture(scope="module")
+def centres(images_fixture, cfg):
+    return fit_global_centres(images_fixture[2], cfg)
+
+
+def _calls(images_fixture, cfg, final_tiles, centroids, centres):
     pdf, _, images = images_fixture
     spark = images.sparkSession
 
@@ -85,6 +93,9 @@ def _calls(images_fixture, cfg, final_tiles, centroids):
         "fit_global_centres": lambda: fit_global_centres(images, cfg),
         "segment_images_tiled":
             lambda: _run(segment_images_tiled(images, cfg)[0]),
+        # the giant-raster call of perfbench's mosaic_join
+        "segment_images_tiled_shared": lambda: _run(segment_images_tiled(
+            images, cfg, centres=centres, keep_pixels=False)[0]),
         "point_in_segment": lambda: _run(point_in_segment(
             points(), final_tiles, cfg.tile_size, cfg.overlap)),
         "segment_sizes": lambda: _run(segment_sizes(final_tiles)),
@@ -124,7 +135,8 @@ def count_jobs(sc, group, action):
 
 @pytest.mark.parametrize("op", list(BUDGETS))
 def test_operator_job_budget(spark, images_fixture, cfg, final_tiles,
-                             centroids, op):
-    call = _calls(images_fixture, cfg, final_tiles, centroids)[op]
+                             centroids, centres, op):
+    call = _calls(images_fixture, cfg, final_tiles, centroids,
+                  centres)[op]
     n = count_jobs(spark.sparkContext, f"job-budget-{op}", call)
     assert n <= BUDGETS[op], f"{op} ran {n} jobs, budget {BUDGETS[op]}"

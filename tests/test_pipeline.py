@@ -202,6 +202,31 @@ def test_stats_tiled_plan_has_one_exchange(images_fixture, cfg,
         assert op not in plan, (op, plan)
 
 
+@pytest.mark.parametrize("simple_recode", [False, True])
+def test_stitch_plan_has_no_window_or_aggregate(images_fixture, cfg,
+                                                simple_recode):
+    """The stitch emits one lut row per tile and the paint joins them
+    back to the checkpointed kernel rows: its plan holds no window
+    and no aggregate, and its one hash exchange is the stitch's
+    repartition by image (the luts join by broadcast)."""
+    import re
+
+    from pyshepseg_spark.operators.segment import (explode_and_segment,
+                                                   stitch)
+    _, _, images = images_fixture
+    plan = stitch(explode_and_segment(images, cfg), cfg,
+                  simple_recode=simple_recode) \
+        ._jdf.queryExecution().executedPlan().toString()
+    for op in ("Aggregate", "Window"):
+        assert op not in plan, (op, plan)
+    hashed = re.findall(r"Exchange hashpartitioning\(([^)]*)\), (\w+)",
+                        plan)
+    assert len(hashed) == 1, plan
+    assert hashed[0][0].startswith("image_id#"), plan
+    assert hashed[0][1] == "REPARTITION_BY_COL", plan
+    assert "BroadcastHashJoin" in plan, plan
+
+
 def test_simple_recode_mode(spark, images_fixture, cfg):
     """simpleTileRecode analogue (tiling.py:1024-1030): tile-local
     IDs offset to global uniqueness, NO cross-tile merging — every
@@ -640,6 +665,31 @@ def test_shared_centres_mode_honours_decode_skip(spark):
         .sort_values(key, ignore_index=True)
     assert len(want) > 0
     pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+def test_global_sample_strides_by_decoded_pixels(spark):
+    """A row skipped under on_decode_error='skip' must not thin the
+    global k-means sample: at a stride above 1 (three 96^2 images
+    declared, two decode, 2000 target pixels: stride 14 against 9),
+    fit_global_centres equals its fit on the table without the
+    corrupt row, sample included."""
+    from pyshepseg_spark.operators.segment import fit_global_centres
+    from pyshepseg_spark.operators.tiling import global_sample
+    from pyshepseg_spark.sources.imagegen import generate_images_pdf
+    pdf = generate_images_pdf(2, size=96, seed=43)
+    bad = pdf.iloc[[0]].copy()
+    bad["image_id"] = "corrupt"
+    bad["bytes"] = [b"not a png"]
+    good = spark.createDataFrame(pdf)
+    images = spark.createDataFrame(pd.concat([pdf, bad],
+                                             ignore_index=True))
+    cfg = SegConfig(img_null_val=65535, num_clusters=8,
+                    sample_target_pixels=2000, on_decode_error="skip")
+    x = global_sample(images, 2000, 65535, "skip")
+    want = global_sample(good, 2000, 65535, "skip")
+    assert len(want) > 0 and np.array_equal(x, want)
+    assert np.array_equal(fit_global_centres(images, cfg),
+                          fit_global_centres(good, cfg))
 
 
 def _tall_raster_row():
